@@ -17,4 +17,6 @@ A from-scratch rebuild of the capabilities of ``dwp/dataworks-audit-data-ingest`
 - ``multimodal``  — binary-column plumbing with stubbed decoders.
 """
 
+from . import zipcache  # noqa: F401  (per-task zip re-read fix, see module)
+
 __version__ = "0.1.0"

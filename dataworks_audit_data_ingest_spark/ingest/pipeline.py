@@ -2,9 +2,11 @@
 (`audit_data_ingest.py:36-68` and the CLI block `:235-313`).
 
 Shape (SURVEY.md §3.4): ``binaryFile`` scan → ``day`` partition filter
-(strictly greater than the watermark) → per-record compress+encrypt
-(Arrow-batched ``mapInPandas``) → ``foreachPartition`` S3 sink with
-per-object envelope metadata → per-day all-or-nothing watermark commit.
+(strictly greater than the watermark) → one Arrow-batched ``mapInPandas``
+stage that compresses, encrypts and puts each record to S3 with per-object
+envelope metadata → per-day all-or-nothing watermark commit. Streaming
+ingest (``streaming/jobs.py``) runs every micro-batch through the same
+kernel.
 
 What the reference hand-rolled and Spark absorbs (SURVEY.md §4):
 - `hdfs dfs -ls` subprocess (`:134-139`)  → distributed file index
@@ -30,12 +32,6 @@ from .crypto import EnvelopeEncryptor
 from .watermark import find_start_date, update_progress_file
 
 logger = logging.getLogger(__name__)
-
-_ENC_SCHEMA = (
-    "day string, basename string, ciphertext binary, "
-    "iv string, encrypted_key string, key_id string"
-)
-
 
 @dataclass
 class IngestConfig:
@@ -116,53 +112,18 @@ def filter_after_watermark(df: DataFrame, watermark: date | None) -> DataFrame:
     return df
 
 
-def encrypt_files(df: DataFrame, pem: bytes, key_id: str) -> DataFrame:
-    """R4+R5: zlib compress + AES-128-EAX envelope encrypt, Arrow-batched.
-
-    ``mapInPandas`` amortizes Python-crossing over whole record batches; the
-    RSA public key is constructed once per batch iterator (per task), the
-    broadcast-equivalent of the reference's single driver-side key fetch
-    fanned out to workers (`audit_data_ingest.py:78,86-88`)."""
-
-    def batches(it):
-        import pandas as pd
-
-        enc = EnvelopeEncryptor(pem, key_id)
-        for pdf in it:
-            recs = [enc.encrypt_record(bytes(c)) for c in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "day": pdf["day"].astype(str),
-                    "basename": pdf["basename"],
-                    "ciphertext": [r.ciphertext for r in recs],
-                    "iv": [r.iv for r in recs],
-                    "encrypted_key": [r.encrypted_key for r in recs],
-                    "key_id": [r.key_id for r in recs],
-                }
-            )
-
-    # guide §4: only the columns the kernel touches cross the Arrow
-    # boundary — without the select, `path` and `length` ride every batch
-    # (and an opaque function over extra columns defeats column pruning
-    # at the scan).
-    return df.select("day", "basename", "content").mapInPandas(
-        batches, schema=_ENC_SCHEMA
-    )
-
-
 _AUDIT_SCHEMA = "day string, basename string, s3_key string, n_bytes long"
 
 
 def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
-    """Fused R4+R5+R6: compress+encrypt+upload in ONE Python stage.
+    """R4+R5+R6+R11: compress+encrypt+upload in ONE Python stage.
 
-    The composable two-stage form (``encrypt_files`` → sink) round-trips
-    every ciphertext byte Python→JVM→Python through Arrow twice; measured
-    locally that transfer, not crypto, was the ceiling (PERF.md). Fusing
-    keeps ciphertext inside the task that produced it — only small audit
-    rows (key, size) cross back. An action on the returned frame drives the
-    upload; all-or-nothing day semantics are unchanged (any task failure
-    fails the job before the watermark commit).
+    Per-object metadata is outside DataFrameWriter's model, so each task
+    puts its objects with one boto3 client, botocore standard-mode retries
+    (`audit_data_ingest.py:169-197`) and one RSA key. Ciphertext never
+    leaves its task; only audit rows (key, size) cross back (PERF.md). An
+    action on the returned frame drives the upload; any task failure fails
+    the job.
     """
     pem, key_id = cfg.rsa_public_key_pem, cfg.hsm_key_id
 
@@ -185,6 +146,8 @@ def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
                 pdf["day"].astype(str), pdf["basename"], pdf["content"]
             ):
                 rec = enc.encrypt_record(bytes(content))
+                # no separator after the prefix; suffix says .gz but the
+                # framing is zlib (`audit_data_ingest.py:117,172-173`)
                 key = f"{cfg.s3_prefix}{day}/{basename}.gz.enc"
                 client.put_object(
                     Bucket=cfg.s3_bucket,
@@ -202,42 +165,6 @@ def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
     return df.select("day", "basename", "content").mapInPandas(
         batches, schema=_AUDIT_SCHEMA
     )
-
-
-def upload_partition_factory(cfg: IngestConfig):
-    """R6+R11: metadata-bearing S3 sink. Per-object metadata is outside
-    DataFrameWriter's model, so the sink is a ``foreachPartition`` function
-    with one boto3 client per partition and botocore standard-mode retries
-    (`audit_data_ingest.py:169-197`)."""
-
-    def upload(rows) -> None:
-        import boto3
-        from botocore.config import Config
-
-        client = boto3.client(
-            "s3",
-            region_name=cfg.aws_region,
-            endpoint_url=cfg.s3_endpoint_url,
-            config=Config(retries={"max_attempts": cfg.retries, "mode": "standard"}),
-            **cfg.extra_boto_kwargs,
-        )
-        for row in rows:
-            # key layout: f"{prefix}{day}/{basename}.gz.enc" — no separator
-            # inserted after the prefix, suffix says .gz but framing is zlib
-            # (`audit_data_ingest.py:117,:172-173`; quirks 1 & 5).
-            key = f"{cfg.s3_prefix}{row['day']}/{row['basename']}.gz.enc"
-            client.put_object(
-                Bucket=cfg.s3_bucket,
-                Key=key,
-                Body=bytes(row["ciphertext"]),
-                Metadata={
-                    "iv": row["iv"],
-                    "ciphertext": row["encrypted_key"],
-                    "datakeyencryptionkeyid": row["key_id"],
-                },
-            )
-
-    return upload
 
 
 def run_ingest(spark: SparkSession, cfg: IngestConfig) -> list[date]:

@@ -10,7 +10,7 @@ ops).
 
 from ..ingest.crypto import EnvelopeEncryptor  # noqa: F401
 from ..ingest.largefile import encrypt_and_upload_large  # noqa: F401
-from ..ingest.pipeline import encrypt_files, run_ingest  # noqa: F401
+from ..ingest.pipeline import encrypt_and_upload, run_ingest  # noqa: F401
 from ..multimodal.ops import decode_media_batches, resize_media, sample_frames  # noqa: F401
 from ..queries import REGISTRY, Query, all_queries  # noqa: F401
 from ..streaming.hll_job import (  # noqa: F401

@@ -1,7 +1,7 @@
 """Batch and streaming sink writers.
 
 The reference's sink is S3 objects with envelope metadata — that lives in
-``ingest.pipeline`` (`foreachPartition`, the only sink needing custom code).
+``ingest.pipeline.encrypt_and_upload`` (the only sink needing custom code).
 These are the engine's standard columnar sinks: partitioned parquet (the
 lakehouse layout downstream analytics reads) and JSON lines.
 

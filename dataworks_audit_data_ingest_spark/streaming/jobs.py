@@ -26,7 +26,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..ingest.pipeline import IngestConfig, encrypt_files, upload_partition_factory
+from ..ingest.pipeline import IngestConfig, encrypt_and_upload
 from ..session import tune
 
 EVENT_SCHEMA = StructType(
@@ -102,6 +102,19 @@ def dedup_events_within_watermark(
     )
 
 
+def _start_encrypt_and_upload(
+    records: DataFrame, cfg: IngestConfig, checkpoint_dir: str, available_now: bool
+):
+    """Sink each micro-batch through ``encrypt_and_upload``: one Python stage
+    per trigger. A failed batch is not committed and is replayed."""
+    writer = records.writeStream.foreachBatch(
+        lambda batch_df, _batch_id: encrypt_and_upload(batch_df, cfg).count()
+    ).option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_encrypted_ingest_stream(
     spark: SparkSession,
     cfg: IngestConfig,
@@ -111,10 +124,10 @@ def start_encrypted_ingest_stream(
     """Streaming twin of ``ingest.run_ingest``: binaryFile stream →
     compress+encrypt → per-batch metadata-bearing S3 sink.
 
-    ``foreachBatch`` reuses the batch pipeline's encrypt stage and sink
-    function unchanged; the commit log in ``checkpoint_dir`` provides the
-    once-per-file guarantee the reference built by hand with its progress
-    file + all-or-nothing day loop (`audit_data_ingest.py:50-68`).
+    ``foreachBatch`` reuses the batch pipeline's fused kernel unchanged;
+    the commit log in ``checkpoint_dir`` provides the once-per-file
+    guarantee the reference built by hand with its progress file +
+    all-or-nothing day loop (`audit_data_ingest.py:50-68`).
     """
     tune(spark)
     # streaming sources require an explicit schema; this is binaryFile's fixed one
@@ -137,16 +150,7 @@ def start_encrypted_ingest_stream(
         .filter(F.col("day").isNotNull())
     )
 
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        enc = encrypt_files(batch_df, cfg.rsa_public_key_pem, cfg.hsm_key_id)
-        enc.foreachPartition(upload_partition_factory(cfg))
-
-    writer = files.writeStream.foreachBatch(sink_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_encrypt_and_upload(files, cfg, checkpoint_dir, available_now)
 
 
 def synthetic_event_records(events: DataFrame) -> DataFrame:
@@ -215,16 +219,7 @@ def start_synthetic_encrypted_ingest_stream(
     )
     records = synthetic_event_records(events)
 
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        enc = encrypt_files(batch_df, cfg.rsa_public_key_pem, cfg.hsm_key_id)
-        enc.foreachPartition(upload_partition_factory(cfg))
-
-    writer = records.writeStream.foreachBatch(sink_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_encrypt_and_upload(records, cfg, checkpoint_dir, available_now)
 
 
 def purchases_to_errors_stream_join(

@@ -131,6 +131,32 @@ def test_missing_watermark_means_full_reprocess(tmp_path):
     assert find_start_date(tmp_path / "absent.txt") is None
 
 
+def test_unreadable_watermark_raises(tmp_path):
+    """Only a missing file means "no watermark": any other OSError (here a
+    directory at the progress path) must not silently re-ingest history."""
+    with pytest.raises(IsADirectoryError):
+        find_start_date(tmp_path)
+
+
+@pytest.mark.parametrize("fail_at", ["os.fsync", "os.replace"])
+def test_torn_watermark_commit_keeps_previous(tmp_path, monkeypatch, fail_at):
+    """A failure mid-commit (after the new day is written, or at the rename)
+    leaves the previous watermark readable and unchanged, and no temp file
+    behind."""
+    p = tmp_path / "progress.txt"
+    update_progress_file(p, date(2020, 10, 9))
+
+    def crash(*args):
+        raise OSError(f"simulated crash in {fail_at}")
+
+    monkeypatch.setattr(fail_at, crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        update_progress_file(p, date(2020, 10, 10))
+    monkeypatch.undo()
+    assert find_start_date(p) == date(2020, 10, 9)
+    assert [f.name for f in tmp_path.iterdir()] == ["progress.txt"]
+
+
 def test_encryptor_deterministic_with_injected_rng(rsa_keypair):
     """Deterministic-crypto seam (SURVEY.md §5c): injecting the rng pins the
     session key and nonce."""
