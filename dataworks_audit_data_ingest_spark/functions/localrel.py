@@ -1,68 +1,33 @@
-"""Pure-JVM local relations for tiny driver-side row sets.
+"""Driver-side row sets as Arrow local relations.
 
-``spark.createDataFrame(list_of_rows)`` parallelizes the PICKLED rows
-into Python-worker tasks — the plan scans an ``ExistingRDD`` whose every
-evaluation round-trips through Python workers. For the handful-of-rows
-relations this engine builds on hot paths (compaction fold manifests,
-forget-intent metadata, audit rows, retraction-touched group sets, tiny
-broadcast dimensions) that cost is pathological: a 2-row manifest WRITE
-measured 4.3 s steady-state at local[32] (the write job schedules one
-Python-worker round trip per parallelize slice), where the identical
-rows as a JVM literal plan write in 0.15 s — 28×.
+``spark.createDataFrame(list_of_rows)`` parallelizes the pickled rows into
+an ``ExistingRDD`` whose every evaluation round-trips through Python
+workers: a 2-row fold-manifest write costs ~1.3 s at local[4] (4.3 s at
+local[32]). The fold manifests, forget intents, audit rows, touched-group
+sets, key lists and tiny dimensions this engine builds on hot paths are
+handful-of-rows relations, so :func:`local_rows_df` hands the same rows to
+Spark as one ``pyarrow.Table``: the plan is a ``LocalTableScan`` with no
+Python workers (~0.2 s for the same write, PERF.md "Driver-side local
+relations").
 
-:func:`local_rows_df` builds the same DataFrame as ``range(1) →
-explode(array(struct-literals))``: a whole-stage-codegen JVM plan, no
-Python workers, no pickling — and values are bound as typed literals
-(``lit(...).cast(field type)``), so there is no injection surface and
-NULLs land typed. Row sets larger than ``_MAX_LITERAL_ROWS`` (or values
-``lit`` cannot express) fall back to ``createDataFrame`` unchanged —
-a giant literal expression tree would trade worker cost for planning
-cost (guide §7.3).
+Rows are checked with the verifier ``createDataFrame(list)`` runs, and
+converted with the converter Spark Connect's ``createDataFrame`` runs, so
+a wrong type, an out-of-range integer, a short or long row or a None in a
+non-nullable field raises at construction, never as a NULL at action
+time; timestamps are read as ``createDataFrame`` reads them (naive
+``timestamp`` values as local time, ``timestamp_ntz`` as wall clock).
+One difference remains: a Decimal with more fractional digits than its
+column rounds half-even here, half-up in ``createDataFrame(list)``.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-import decimal as _decimal
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.types import StructType
-
-_MAX_LITERAL_ROWS = 200
-
-# Python-side type verification for the common scalar field types,
-# mirroring createDataFrame's construction-time checks: a wrong-typed
-# value must NOT reach lit().cast() — the cast error would only surface
-# at action time, and on an ANSI-off session would become a silent NULL
-# (a NULLed fold-manifest dir or audit row, with no error anywhere).
-# A value outside this table (or a field type not listed) falls back to
-# createDataFrame, which raises its usual verifier error.
-_SCALAR_OK = (
-    (T.StringType, str),
-    (T.BooleanType, bool),
-    ((T.ByteType, T.ShortType, T.IntegerType, T.LongType), int),
-    ((T.FloatType, T.DoubleType), (int, float)),
-    (T.DecimalType, (int, _decimal.Decimal)),
-    (T.TimestampType, _dt.datetime),
-    (T.TimestampNTZType, _dt.datetime),
-    (T.DateType, (_dt.date,)),
-    (T.BinaryType, (bytes, bytearray)),
-)
-
-
-def _value_ok(v, dtype) -> bool:
-    if v is None:
-        return True
-    for dts, pys in _SCALAR_OK:
-        if isinstance(dtype, dts):
-            # bool is an int subclass; only BooleanType may take it
-            if isinstance(v, bool) and not isinstance(dtype, T.BooleanType):
-                return False
-            return isinstance(v, pys)
-    return False  # non-scalar field types take the general slow path
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier
 
 
 def local_rows_df(
@@ -70,47 +35,18 @@ def local_rows_df(
     rows: Iterable[Sequence],
     schema: StructType | str,
 ) -> DataFrame:
-    """``createDataFrame(rows, schema)`` semantics, as a pure-JVM plan
-    when the row set is small enough (see module docstring). Rows are
-    positional (tuples or Rows); values must match the schema's arity."""
+    """The values and schema ``createDataFrame(list)`` gives, planned as a
+    ``LocalTableScan``. Tuples and Rows are read positionally, dicts by
+    field name."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     rows = list(rows)
-    if not rows or len(rows) > _MAX_LITERAL_ROWS:
-        return spark.createDataFrame(rows, schema)
-    # Fall back (and let createDataFrame raise its standard errors) on
-    # arity mismatch or any value the scalar-type table does not bless —
-    # the literal path must never silently truncate or NULL a row.
-    n = len(schema.fields)
-    if any(len(row) != n for row in rows) or any(
-        not _value_ok(row[i], f.dataType)
-        for row in rows
-        for i, f in enumerate(schema.fields)
-    ):
-        return spark.createDataFrame(rows, schema)
-    # Types and values match createDataFrame exactly; a field whose
-    # literals are all non-null may come out non-nullABLE where
-    # createDataFrame would say nullable — a strictly tighter schema,
-    # accepted everywhere a nullable field is (parquet write, unions,
-    # joins), and parquet read-back normalizes to nullable anyway.
-    try:
-        structs = [
-            F.struct(
-                *[
-                    F.lit(row[i]).cast(f.dataType).alias(f.name)
-                    for i, f in enumerate(schema.fields)
-                ]
-            )
-            for row in rows
-        ]
-        return (
-            spark.range(1)
-            .select(F.explode(F.array(*structs)).alias("__row__"))
-            .select("__row__.*")
-            .to(schema)
-        )
-    except Exception:
-        # a value lit() cannot express (maps, exotic nested types —
-        # surfaces either at lit() or at plan analysis) — the slow path
-        # is still the correct one
-        return spark.createDataFrame(rows, schema)
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    table = (
+        LocalDataToArrowConversion.convert(rows, schema, False)
+        if rows
+        else to_arrow_schema(schema).empty_table()
+    )
+    return spark.createDataFrame(table, schema)

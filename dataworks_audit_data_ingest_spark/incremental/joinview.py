@@ -670,8 +670,8 @@ def _compact_store_safe(
         f"{store}/{_FOLD_TMP}{tok}"
     )
     # the commit point: once this manifest exists the fold is the truth
-    # (a JVM literal relation: createDataFrame's python-RDD write costs
-    # ~4 s per fold at local[32] — functions/localrel.py)
+    # (an Arrow local relation: createDataFrame(list)'s python-RDD write
+    # costs ~4 s per fold at local[32] — functions/localrel.py)
     local_rows_df(
         spark, [(dirs[bid],) for bid in foldable], "dir string"
     ).coalesce(1).write.mode("overwrite").parquet(

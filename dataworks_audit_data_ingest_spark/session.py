@@ -68,27 +68,16 @@ def tune(spark: SparkSession) -> SparkSession:
     """
     if getattr(spark, "_dwadi_tuned", False):
         return spark
-    # Per-conf success tracking (ADVICE round 13): only confs that have
-    # never been applied to THIS session are attempted, so a failed key
-    # (restricted/Connect deployment) is retried on the next load without
-    # re-pinning the ones that already took — a caller's deliberate
-    # temporary conf change between loads stays owned by the caller,
-    # exactly as the docstring promises.
-    applied: set[str] = getattr(spark, "_dwadi_tuned_keys", set())
     for k, v in _RUNTIME_CONF.items():
-        if k in applied:
-            continue
         try:
             spark.conf.set(k, v)
-            applied.add(k)
         except Exception:
-            # Conf not settable at runtime in this deployment — keep
-            # going; individual loaders have fallbacks where it matters.
+            # Not settable at runtime in this deployment (restricted or
+            # Connect sessions); it never will be, so it is not retried —
+            # individual loaders have fallbacks where it matters.
             pass
-    spark._dwadi_tuned_keys = applied
     _ship_package(spark)
-    if len(applied) == len(_RUNTIME_CONF):
-        spark._dwadi_tuned = True
+    spark._dwadi_tuned = True
     return spark
 
 

@@ -120,7 +120,7 @@ def update_reservoir(
     # and staged_overwrite would otherwise rewrite the directory while
     # the plan still scans it
     rows = merged.collect()  # <= k rows by construction — driver-small
-    # JVM literal relation: a python-RDD-backed write costs ~4 s per
+    # Arrow local relation: a python-RDD-backed write costs ~4 s per
     # micro-batch at local[32] (functions/localrel.py)
     staged_overwrite(
         local_rows_df(spark, rows, merged.schema), reservoir_path

@@ -110,10 +110,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # doubled scheduling overhead, A/B'd per user) partitions so
 # that heavy per-row work parallelizes — but ONLY when the input genuinely
 # cannot be split that wide: the gate estimates the scan's natural split
-# count from the local fixture directory's on-disk bytes (cached per dir;
-# a non-local path, or enough bytes to fill cores×maxPartitionBytes splits,
-# disables the spread). On a real cluster the inputs are many multi-row-group
-# files, the gate sees a non-local path, and spread() is the identity — the
+# count from the local fixture directory's on-disk bytes (cached per dir,
+# core count and maxPartitionBytes; a non-local path, or enough bytes to
+# fill cores×maxPartitionBytes splits, disables the spread). On a real
+# cluster the inputs are many multi-row-group files, the gate sees a
+# non-local path, and spread() is the identity — the
 # partial aggregation/explode stays fused with the scan exactly as before,
 # which is the right plan at 100 TB. Nothing here is tuned to local[32]:
 # the target derives from defaultParallelism, so the driver's lower-core
@@ -125,7 +126,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # and is retry-safe by construction (SPARK-38388).
 # ---------------------------------------------------------------------------
 
-_SPREAD_GATE: dict[tuple[str, int], bool] = {}
+_SPREAD_GATE: dict[tuple[str, int, int], bool] = {}
 
 
 def _local_bytes(sf_dir: str) -> int:
@@ -149,16 +150,13 @@ def spread(df: DataFrame, sf_dir: str, *keys: str, mult: int = 1) -> DataFrame:
     """
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    gate = _SPREAD_GATE.get((sf_dir, cores))
+    # Spark's own parse of the byte string ("128m", "1t", ...)
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    key = (sf_dir, cores, max_split)
+    gate = _SPREAD_GATE.get(key)
     if gate is None:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        units = {"k": 1024, "m": 1024**2, "g": 1024**3}
-        m = raw.strip().lower().removesuffix("b")
-        mul = units.get(m[-1:], 1)
-        max_split = int(m.rstrip("kmg") or "134217728") * mul
         total = _local_bytes(sf_dir)
-        gate = 0 <= total < cores * max_split
-        _SPREAD_GATE[(sf_dir, cores)] = gate
+        gate = _SPREAD_GATE[key] = 0 <= total < cores * max_split
     if not gate:
         return df
     n = cores * mult

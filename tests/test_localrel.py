@@ -1,59 +1,90 @@
-"""functions/localrel.py — the pure-JVM tiny local relation (round-13
-optimization: createDataFrame(list) plans scan a Python-pickled RDD whose
-WRITE costs ~4 s at local[32]; local_rows_df builds the same rows as JVM
-literals). These tests pin value/schema equivalence and the fallbacks."""
+"""functions/localrel.py — driver-side row sets as Arrow local relations.
+
+``local_rows_df`` must give the values and schema ``createDataFrame(list)``
+gives, whatever the process time zone, plan as a ``LocalTableScan`` (no
+Python-worker RDD), and reject a bad row when it is built — not as a NULL
+or an error at action time, with ANSI on or off."""
 
 from __future__ import annotations
 
 import datetime
+import decimal
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from dataworks_audit_data_ingest_spark.functions.localrel import (
-    _MAX_LITERAL_ROWS,
-    local_rows_df,
-)
+from dataworks_audit_data_ingest_spark.functions.localrel import local_rows_df
+
+ZONES = ("America/New_York", "Asia/Kolkata")
+
+_TS = datetime.datetime(2031, 3, 1, 12, 0, 0, 123456)
+_IST = datetime.timezone(datetime.timedelta(hours=5, minutes=30))
+
+# (id, ddl, rows): one case per column type, plus empty input and a row
+# set larger than any literal-plan cap
+CASES = [
+    ("string", "v string", [("a",), ("",), (None,)]),
+    ("bigint", "v bigint", [(2**40,), (-1,), (None,)]),
+    ("double", "v double", [(1.5,), (float("inf"),), (None,)]),
+    ("boolean", "v boolean", [(True,), (False,), (None,)]),
+    ("decimal", "v decimal(12,2)", [(decimal.Decimal("1234.50"),), (None,)]),
+    ("date", "v date", [(datetime.date(2031, 3, 1),), (None,)]),
+    ("binary", "v binary", [(b"\x00\xff",), (bytearray(b"x"),), (None,)]),
+    ("timestamp", "v timestamp", [(_TS,), (_TS.replace(tzinfo=_IST),), (None,)]),
+    ("timestamp_ntz", "v timestamp_ntz", [(_TS,), (None,)]),
+    ("array", "v array<int>", [([1, None, 3],), ([],), (None,)]),
+    ("struct", "v struct<x:int,y:string>", [((1, "a"),), ((None, None),), (None,)]),
+    ("map", "v map<string,bigint>", [({"a": 1, "b": None},), (None,)]),
+    ("empty", "s string, i bigint", []),
+    ("rows201", "i bigint, s string", [(i, str(i)) for i in range(201)]),
+]
 
 
-def _sorted_rows(df):
-    return sorted(tuple(r) for r in df.collect())
+@pytest.fixture
+def local_tz(monkeypatch):
+    """Set the process time zone (what naive datetimes are read in)."""
+
+    def set_tz(tz: str) -> None:
+        monkeypatch.setenv("TZ", tz)
+        time.tzset()
+
+    yield set_tz
+    monkeypatch.undo()
+    time.tzset()
 
 
-def test_matches_createDataFrame_values_and_schema(spark):
+def _assert_same(fast, slow):
+    assert fast.schema == slow.schema
+    assert fast.collect() == slow.collect()
+
+
+@pytest.mark.parametrize("tz", ZONES)
+@pytest.mark.parametrize("ddl, rows", [c[1:] for c in CASES], ids=[c[0] for c in CASES])
+def test_matches_createDataFrame_per_type(spark, local_tz, tz, ddl, rows):
+    local_tz(tz)
+    _assert_same(local_rows_df(spark, rows, ddl), spark.createDataFrame(rows, ddl))
+
+
+def test_matches_createDataFrame_values_and_schema(spark, local_tz):
     rows = [
         ("a", 1, 1.5, True, None),
         ("b", None, None, None, datetime.datetime(2031, 3, 1, 12, 0)),
     ]
     ddl = "s string, i bigint, d double, b boolean, ts timestamp"
-    fast = local_rows_df(spark, rows, ddl)
-    slow = spark.createDataFrame(rows, ddl)
-    # identical names and types; nullability may be TIGHTER (non-null
-    # literals prove non-nullability — a safe subtype, see module doc)
-    assert fast.dtypes == slow.dtypes
-    for f_fast, f_slow in zip(fast.schema.fields, slow.schema.fields):
-        assert f_slow.nullable or not f_fast.nullable
-    assert _sorted_rows(fast) == _sorted_rows(slow)
+    for tz in ZONES:
+        local_tz(tz)
+        fast = local_rows_df(spark, rows, ddl)
+        _assert_same(fast, spark.createDataFrame(rows, ddl))
+        # the instant, not just the round trip: a naive value is local time
+        want = int(rows[1][4].timestamp() * 1_000_000)
+        assert fast.select(F.unix_micros("ts")).collect()[1][0] == want
 
 
 def test_is_a_jvm_plan_not_a_python_rdd(spark):
-    df = local_rows_df(spark, [("x",), ("y",)], "dir string")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan and "Scan ExistingRDD" not in plan
-
-
-def test_empty_rows_fall_back(spark):
-    df = local_rows_df(spark, [], "dir string")
-    assert df.columns == ["dir"]
-    assert df.count() == 0
-
-
-def test_large_row_sets_fall_back_to_createDataFrame(spark):
-    n = _MAX_LITERAL_ROWS + 1
-    df = local_rows_df(spark, [(i,) for i in range(n)], "i bigint")
-    assert df.count() == n
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan  # the slow-but-general path
+    for _, ddl, rows in CASES:
+        plan = local_rows_df(spark, rows, ddl)._jdf.queryExecution()
+        assert plan.executedPlan().toString().startswith("LocalTableScan"), ddl
 
 
 def test_joins_and_writes_like_any_dataframe(spark, tmp_path):
@@ -68,56 +99,62 @@ def test_joins_and_writes_like_any_dataframe(spark, tmp_path):
     )
     assert joined.groupBy("band").count().count() == 2
     dim.coalesce(1).write.parquet(str(tmp_path / "dim.parquet"))
-    assert _sorted_rows(spark.read.parquet(str(tmp_path / "dim.parquet"))) == (
-        _sorted_rows(dim)
-    )
+    back = spark.read.parquet(str(tmp_path / "dim.parquet"))
+    assert sorted(back.collect()) == sorted(dim.collect())
 
 
 def test_row_objects_are_positional(spark):
     src = spark.range(3).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
-    rows = src.collect()
-    back = local_rows_df(spark, rows, src.schema)
-    assert _sorted_rows(back) == _sorted_rows(src)
+    back = local_rows_df(spark, src.collect(), src.schema)
+    assert sorted(back.collect()) == sorted(src.collect())
 
 
-def test_inexpressible_values_fall_back(spark):
-    # a dict value has no lit() form -> must still work via createDataFrame
-    df = local_rows_df(
-        spark, [({"a": 1},)], "m map<string,bigint>"
-    )
-    assert df.collect()[0][0] == {"a": 1}
+def test_dict_rows_are_read_by_field_name(spark):
+    rows = [{"v": 2, "k": 1}, {"k": 3}]
+    ddl = "k bigint, v bigint"
+    _assert_same(local_rows_df(spark, rows, ddl), spark.createDataFrame(rows, ddl))
+
+
+def _raises_at_construction(spark, rows, ddl, ansi):
+    """Building the relation itself raises — no action is run, so a bad
+    value can never become a NULL that an ANSI-off cast would let by."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        with pytest.raises((TypeError, ValueError, ArithmeticError)):
+            local_rows_df(spark, rows, ddl)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+_WRONG_TYPED = [
+    ([(2**40,)], "i int"),
+    ([("7",)], "i bigint"),
+    ([(True,)], "i bigint"),
+    ([(1.5,)], "i bigint"),
+    ([(decimal.Decimal("1e20"),)], "d decimal(12,2)"),
+]
+
+
+def test_wrong_typed_value_raises_at_construction(spark):
+    for rows, ddl in _WRONG_TYPED:
+        _raises_at_construction(spark, rows, ddl, "true")
+
+
+def test_wrong_type_never_silently_nulls_even_ansi_off(spark):
+    for rows, ddl in _WRONG_TYPED:
+        _raises_at_construction(spark, rows, ddl, "false")
 
 
 @pytest.mark.parametrize("bad", [[("only",)]])
 def test_arity_mismatch_raises(spark, bad):
-    with pytest.raises(Exception):
-        local_rows_df(spark, bad, "a string, b string").collect()
+    for ansi in ("true", "false"):
+        _raises_at_construction(spark, bad, "a string, b string", ansi)
 
 
 def test_extra_fields_raise_like_createDataFrame(spark):
-    """A row LONGER than the schema must error (createDataFrame's length
-    verifier), never silently truncate (code-review round 13)."""
-    with pytest.raises(Exception):
-        local_rows_df(spark, [(1, 2)], "a bigint").collect()
-
-
-def test_wrong_typed_value_raises_at_construction(spark):
-    """A value of the wrong Python type for a scalar field must take the
-    createDataFrame path and raise its construction-time verifier error —
-    the literal path's cast would only fail at ACTION time, and on an
-    ANSI-off session would become a silent NULL (code-review round 13)."""
-    with pytest.raises(Exception):
-        df = local_rows_df(spark, [("abc",)], "i bigint")
-        df.collect()
-
-
-def test_wrong_type_never_silently_nulls_even_ansi_off(spark):
-    prev = spark.conf.get("spark.sql.ansi.enabled", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        with pytest.raises(Exception):
-            local_rows_df(spark, [("abc",)], "i bigint").collect()
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
+    """A row longer than the schema raises; it is never truncated."""
+    for ansi in ("true", "false"):
+        _raises_at_construction(spark, [(1, 2)], "a bigint", ansi)

@@ -12,6 +12,7 @@ import datetime
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from dataworks_audit_data_ingest_spark.tables import table
 
@@ -92,6 +93,47 @@ def test_spread_noop_when_input_not_statable(spark):
     df = table(spark, sf, "lineitem")
     out = spread(df, "hdfs://nowhere/warehouse/lineitem", "l_orderkey")
     assert out is df
+
+
+def _tiny_fixture(spark, tmp_path):
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(8), pa.int64())}),
+        str(tmp_path / "documents.parquet"),
+    )
+    return table(spark, str(tmp_path), "documents")
+
+
+@pytest.mark.parametrize("max_bytes", ["1t", "64m"])
+def test_spread_reads_spark_byte_strings(spark, tmp_path, max_bytes):
+    """maxPartitionBytes takes any Spark byte string; "1t" once crashed a
+    hand-rolled suffix parser with ValueError."""
+    from dataworks_audit_data_ingest_spark.tables import spread
+
+    df = _tiny_fixture(spark, tmp_path)
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", max_bytes)
+    try:
+        out = spread(df, str(tmp_path), "doc_id")
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_spread_gate_follows_a_changed_conf(spark, tmp_path):
+    """The cached gate is keyed on maxPartitionBytes: once cores × the
+    split size no longer exceeds the fixture's bytes, the next call must
+    stop spreading instead of reusing the gate of the first call."""
+    from dataworks_audit_data_ingest_spark.tables import spread
+
+    df = _tiny_fixture(spark, tmp_path)
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "64m")
+        assert spread(df, str(tmp_path), "doc_id") is not df
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+        assert spread(df, str(tmp_path), "doc_id") is df
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 
 
 def test_spread_keyed_result_invariance(spark):
@@ -241,3 +283,28 @@ def test_schema_cache_returns_identical_schema_on_hit(spark):
     cached = table(spark, sf, "lineitem").schema  # second call = cache hit
     fresh = spark.read.parquet(f"{sf}/lineitem.parquet").schema
     assert cached == fresh
+
+
+def test_tune_tries_each_conf_once_per_session():
+    """A conf the deployment refuses is tried once, not again with a Py4J
+    error on every table() load: tune() latches whatever the outcome."""
+    from dataworks_audit_data_ingest_spark.session import _RUNTIME_CONF, tune
+
+    refused = "spark.sql.legacy.parquet.nanosAsLong"
+    calls = []
+
+    class _Conf:
+        def set(self, k, v):
+            calls.append(k)
+            if k == refused:
+                raise RuntimeError(f"cannot modify {k}")
+
+    class _Session:
+        conf = _Conf()
+        _dwadi_pkg_shipped = True
+
+    session = _Session()
+    assert tune(session) is session
+    assert calls == list(_RUNTIME_CONF)
+    tune(session)
+    assert calls == list(_RUNTIME_CONF)

@@ -1,7 +1,7 @@
-"""Dump .explain("formatted") for a set of queries into plans/r13/.
+"""Dump .explain("formatted") for a set of queries into plans/<round>/.
 
-    python tools/dump_plans_r13.py before [names...]
-    python tools/dump_plans_r13.py after  [names...]
+    python tools/dump_plans.py r14 before [names...]
+    python tools/dump_plans.py r14 after  [names...]
 
 Default name set = the bench headline queries. Plans are captured at sf0.1
 (the bench scale) so AQE-visible shapes match what the bench executes.
@@ -19,23 +19,24 @@ from dataworks_audit_data_ingest_spark.queries import all_queries  # noqa: E402
 from dataworks_audit_data_ingest_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.1"
-OUT = Path(__file__).resolve().parent.parent / "plans" / "r13"
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        raise SystemExit(__doc__)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     if not names:
         import bench
 
         names = list(bench.BENCH_QUERIES)
-    spark = get_spark("dump-plans-r13")
+    out = Path(__file__).resolve().parent.parent / "plans" / rnd
+    spark = get_spark(f"dump-plans-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
-    OUT.mkdir(parents=True, exist_ok=True)
+    out.mkdir(parents=True, exist_ok=True)
     for name in names:
         df = registry[name].fn(spark, SF)
-        (OUT / f"{name}_{tag}.txt").write_text(formatted_plan(df))
+        (out / f"{name}_{tag}.txt").write_text(formatted_plan(df))
         print(name, "ok")
     spark.stop()
 
