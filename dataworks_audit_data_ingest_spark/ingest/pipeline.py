@@ -1,15 +1,16 @@
 """The ingest pipeline: Spark-first rebuild of the reference's driver loop
 (`audit_data_ingest.py:36-68` and the CLI block `:235-313`).
 
-Shape (SURVEY.md §3.4): ``binaryFile`` scan → ``day`` partition filter
-(strictly greater than the watermark) → one Arrow-batched ``mapInPandas``
-stage that compresses, encrypts and puts each record to S3 with per-object
-envelope metadata → per-day all-or-nothing watermark commit. Streaming
-ingest (``streaming/jobs.py``) runs every micro-batch through the same
-kernel.
+Shape (SURVEY.md §3.4): driver-side listing of the day directories
+strictly after the watermark → per day, a ``binaryFile`` scan of that
+directory → one Arrow-batched ``mapInPandas`` stage that compresses,
+encrypts and puts each record to S3 with per-object envelope metadata →
+per-day all-or-nothing watermark commit. Streaming ingest
+(``streaming/jobs.py``) runs every micro-batch through the same kernel.
 
 What the reference hand-rolled and Spark absorbs (SURVEY.md §4):
-- `hdfs dfs -ls` subprocess (`:134-139`)  → distributed file index
+- `hdfs dfs -ls` subprocess (`:134-139`) → Hadoop ``FileSystem.listStatus``
+  on the driver: the top level once, then each new day (no Spark job)
 - `copyToLocal` staging + cleanup (`:153-166`, `:207-210`) → eliminated;
   executors read source splits directly
 - ThreadPoolExecutor fan-out (`:82-90`) → task scheduling, one task per
@@ -20,9 +21,12 @@ What the reference hand-rolled and Spark absorbs (SURVEY.md §4):
 from __future__ import annotations
 
 import base64
+import json
 import logging
+import time
 from dataclasses import dataclass, field
-from datetime import date
+from datetime import date, datetime
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,8 +73,8 @@ def fetch_hsm_key(
 
 
 def scan_source(spark: SparkSession, src_dir: str) -> DataFrame:
-    """R1: the `hdfs dfs -ls` + copy of the reference collapses into one
-    distributed ``binaryFile`` scan; `day` is derived from the immediate
+    """R1: the reference's copy to local disk becomes a ``binaryFile`` scan
+    that executors read directly; `day` is derived from the immediate
     parent directory name, exactly what ``filter_date`` parses
     (`audit_data_ingest.py:26-33`). Non-date directories yield NULL and are
     skipped (warn-and-exclude semantics, `:30-32`)."""
@@ -167,26 +171,88 @@ def encrypt_and_upload(df: DataFrame, cfg: IngestConfig) -> DataFrame:
     )
 
 
+class NewDay(NamedTuple):
+    """A day directory :func:`list_new_days` keeps: its path, and the count
+    and total size of the files a ``binaryFile`` scan of it reads."""
+
+    path: str
+    files: int
+    bytes_in: int
+
+
+def _day_of(name: str) -> date | None:
+    """The day a directory name denotes. Only the zero-padded
+    ``YYYY-MM-DD`` form counts: it is the one form the ``TRY_TO_DATE`` in
+    :func:`scan_source` parses (``strptime`` alone also takes
+    ``2020-1-5``)."""
+    try:
+        day = datetime.strptime(name, "%Y-%m-%d").date()
+    except ValueError:
+        return None
+    return day if day.isoformat() == name else None
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file index skips these names (``HadoopFSUtils
+    .shouldFilterOutPathName``): ``_``/``.`` prefixes except Parquet's
+    summary files and ``_k=v`` partitions, and in-flight ``._COPYING_``
+    copies."""
+    skip = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return skip and not name.startswith(("_common_metadata", "_metadata"))
+
+
+def list_new_days(
+    spark: SparkSession, src_dir: str, watermark: date | None
+) -> dict[date, NewDay]:
+    """R1+R2 on the driver, as the reference lists (`audit_data_ingest.py:
+    26-33,129-150`): one ``listStatus`` of ``src_dir`` keeps the
+    directories named as a day strictly after ``watermark``, then one
+    ``listStatus`` per kept day counts the plain files directly in it that
+    ``binaryFile`` reads. Returns the days holding at least one such file,
+    in ascending order. Non-date entries are always dropped (the first-run
+    deviation in :func:`filter_after_watermark`). No Spark job runs."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(src_dir)
+    fs = root.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    days = {}
+    for status in fs.listStatus(root):
+        path = status.getPath()
+        day = _day_of(path.getName())
+        if day is None or (watermark is not None and day <= watermark):
+            continue
+        if not status.isDirectory():  # a file named as a day
+            continue
+        sizes = [
+            f.getLen()
+            for f in fs.listStatus(path)
+            if f.isFile() and not _hidden(f.getPath().getName())
+        ]
+        if sizes:
+            days[day] = NewDay(path.toString(), len(sizes), sum(sizes))
+    return dict(sorted(days.items()))
+
+
 def run_ingest(spark: SparkSession, cfg: IngestConfig) -> list[date]:
     """R13: the per-day driver loop. Days are processed in ascending order;
-    each day is one Spark action; the watermark is committed only after the
-    whole day succeeded — any task failure fails the job and the day is
-    retried wholesale on the next run (at-least-once over an idempotent
-    overwrite sink, `audit_data_ingest.py:49-68,96-104`).
+    each day is one Spark action over that day's directory only; the
+    watermark is committed only after the whole day succeeded — any task
+    failure fails the job and the day is retried wholesale on the next run
+    (at-least-once over an idempotent overwrite sink,
+    `audit_data_ingest.py:49-68,96-104`). A run with nothing new starts no
+    Spark job.
+
+    Each committed day logs one JSON record: ``day``, ``files`` and
+    ``bytes_in`` (from the listing), ``objects`` (uploaded), ``seconds``
+    (scan to commit), ``MBps``, ``watermark_before`` and
+    ``watermark_after``.
 
     Returns the list of committed days.
     """
     watermark = find_start_date(cfg.progress_file)
-    scanned = filter_after_watermark(scan_source(spark, cfg.src_dir), watermark)
-    # listing-only pass (content pruned): day inventory + bytes per day, used
-    # to size file partitions so small files don't serialize onto few tasks
-    day_stats = {
-        r["day"]: int(r["total_bytes"])
-        for r in scanned.groupBy("day")
-        .agg(F.sum("length").alias("total_bytes"))
-        .collect()
-    }
-    days = sorted(day_stats)
+    days = list_new_days(spark, cfg.src_dir, watermark)
     if not days:
         logger.info("nothing newer than %s under %s", watermark, cfg.src_dir)
         return []
@@ -197,17 +263,27 @@ def run_ingest(spark: SparkSession, cfg: IngestConfig) -> list[date]:
     # tasks — measured 29 tasks for 200×1 MB files at defaults. Shrinking
     # maxPartitionBytes below default only added per-task overhead
     # (measured 38→26 MB/s); the defaults are kept deliberately.
-    committed: list[date] = []
-    for day in days:
-        day_df = scanned.filter(F.col("day") == F.lit(day))
-        n_uploaded = encrypt_and_upload(day_df, cfg).count()
+    for day, new in days.items():
+        t0 = time.perf_counter()
+        # the `day` filter keeps out files in the day's subdirectories
+        day_df = scan_source(spark, new.path).filter(F.col("day") == F.lit(day))
+        objects = encrypt_and_upload(day_df, cfg).count()
         # reaching here means every task of the day's job succeeded
         update_progress_file(cfg.progress_file, day)
-        committed.append(day)
+        seconds = time.perf_counter() - t0
         logger.info(
-            "committed day %s (%d objects, %d bytes in)",
-            day,
-            n_uploaded,
-            day_stats[day],
+            json.dumps(
+                {
+                    "day": day.isoformat(),
+                    "files": new.files,
+                    "bytes_in": new.bytes_in,
+                    "objects": objects,
+                    "seconds": round(seconds, 3),
+                    "MBps": round(new.bytes_in / 1e6 / seconds, 3),
+                    "watermark_before": watermark and watermark.isoformat(),
+                    "watermark_after": day.isoformat(),
+                }
+            )
         )
-    return committed
+        watermark = day
+    return list(days)

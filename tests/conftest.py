@@ -72,6 +72,10 @@ def rsa_keypair():
 #
 #     python -m pytest tests/ -m "slow or not slow" -q      # everything
 #
+# The default deselect lives in ``pytest_deselect_slow`` below, not in
+# ``addopts``: it applies only when no ``-m`` is given, and never to a file
+# named on the command line (``pytest tests/test_plans.py`` runs it all).
+#
 # Coverage argument: the slow partition is NOT the only net for what it
 # checks — the driver's own correctness gate re-runs sampled queries vs
 # DuckDB at sf0.01 every round, tools/check_oracle.py sweeps 271/271 at
@@ -188,3 +192,21 @@ def pytest_collection_modifyitems(config, items):
             # rather than silently re-busting the ~40-min window
             if param is not None and not oracle_fast.get(param, False):
                 item.add_marker(slow)
+
+
+@pytest.hookimpl(trylast=True, specname="pytest_collection_modifyitems")
+def pytest_deselect_slow(config, items):
+    """With no ``-m``, deselect the slow tests of every file not named on
+    the command line. Runs after the marking hook above and after pytest's
+    own ``-m``/``-k`` selection."""
+    if config.getoption("markexpr"):
+        return
+    root = Path(config.invocation_params.dir)
+    named = {(root / arg.split("::")[0]).resolve() for arg in config.args}
+    keep, slow = [], []
+    for item in items:
+        deselect = item.get_closest_marker("slow") and item.path.resolve() not in named
+        (slow if deselect else keep).append(item)
+    if slow:
+        config.hook.pytest_deselected(items=slow)
+        items[:] = keep

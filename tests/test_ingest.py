@@ -7,6 +7,9 @@ decompress → byte-equality.
 from __future__ import annotations
 
 import base64
+import json
+import logging
+import uuid
 import zlib
 from datetime import date
 
@@ -23,6 +26,7 @@ from dataworks_audit_data_ingest_spark.ingest import (
     run_ingest,
     update_progress_file,
 )
+from dataworks_audit_data_ingest_spark.ingest.pipeline import _hidden
 
 PAYLOAD_1 = b'{"id": "0001", "type": "donut", "name": "Cake"}'
 PAYLOAD_2 = b'{"id": "0002", "type": "ice-cream", "name": "Chocobar"}'
@@ -236,3 +240,139 @@ def test_two_dataset_deployments_share_code_independent_watermarks(
     # independent watermarks
     assert str(find_start_date(audit_cfg.progress_file)) == "2020-10-10"
     assert str(find_start_date(eq_cfg.progress_file)) == "2021-01-05"
+
+
+# ---------------------------------------------------------------------------
+# Listing semantics: the driver lists the top level, then each new day
+# ---------------------------------------------------------------------------
+
+
+def _keys(moto_s3, bucket):
+    s3 = boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3)
+    return sorted(o["Key"] for o in s3.list_objects_v2(Bucket=bucket).get("Contents", []))
+
+
+def test_file_in_day_subdirectory_is_not_uploaded(spark, moto_s3, rsa_keypair, tmp_path):
+    """``day`` is the file's immediate parent: ``YYYY-MM-DD/sub/x`` has none."""
+    src = tmp_path / "src"
+    (src / "2020-10-09" / "sub").mkdir(parents=True)
+    (src / "2020-10-09" / "a.json").write_bytes(PAYLOAD_1)
+    (src / "2020-10-09" / "sub" / "nested.json").write_bytes(PAYLOAD_2)
+    cfg = _cfg(src, tmp_path, moto_s3, rsa_keypair[1], bucket="nested-bucket")
+    assert run_ingest(spark, cfg) == [date(2020, 10, 9)]
+    assert _keys(moto_s3, cfg.s3_bucket) == ["audit-data/2020-10-09/a.json.gz.enc"]
+
+
+def test_non_date_dir_and_top_level_files_are_skipped(
+    spark, moto_s3, rsa_keypair, tmp_path
+):
+    src = tmp_path / "src"
+    for d in ("2020-10-09", "not-a-date", "2020-1-5"):
+        (src / d).mkdir(parents=True)
+        (src / d / "f.json").write_bytes(PAYLOAD_1)
+    (src / "top.json").write_bytes(PAYLOAD_2)
+    (src / "2020-10-10").write_bytes(PAYLOAD_2)  # a file named as a day
+    cfg = _cfg(src, tmp_path, moto_s3, rsa_keypair[1], bucket="skip-bucket")
+    assert run_ingest(spark, cfg) == [date(2020, 10, 9)]
+    assert _keys(moto_s3, cfg.s3_bucket) == ["audit-data/2020-10-09/f.json.gz.enc"]
+
+
+@pytest.mark.parametrize("names", [(), ("_SUCCESS", ".x.tmp")], ids=["empty", "hidden-only"])
+def test_day_without_readable_files_is_not_committed(
+    spark, moto_s3, rsa_keypair, tmp_path, names
+):
+    src = tmp_path / "src"
+    (src / "2020-10-09").mkdir(parents=True)
+    for name in names:
+        (src / "2020-10-09" / name).write_bytes(PAYLOAD_1)
+    cfg = _cfg(src, tmp_path, moto_s3, rsa_keypair[1], bucket=f"idle-{len(names)}")
+    update_progress_file(cfg.progress_file, date(2020, 10, 1))
+    assert run_ingest(spark, cfg) == []
+    assert find_start_date(cfg.progress_file) == date(2020, 10, 1)
+    assert _keys(moto_s3, cfg.s3_bucket) == []
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["_SUCCESS", ".x.tmp", "_", "f._COPYING_", "_metadata", "_common_metadata", "_a=1", "x_", "ok.json"],
+)
+def test_hidden_names_match_sparks_file_index(spark, name):
+    jvm_rule = spark._jvm.org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName
+    assert _hidden(name) == jvm_rule(name)
+
+
+def _jobs_under_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the group's
+    job ids, read after the listener bus has drained."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_day_job_reads_only_its_day_and_idle_resume_runs_no_job(
+    spark, moto_s3, rsa_keypair, tmp_path
+):
+    """Status-store check (read as ``perfbench/trace.py`` reads it): the day
+    job's input bytes are that day's file bytes, not the history's; a resume
+    with nothing new submits no Spark job at all."""
+    src = tmp_path / "src"
+    (src / "2020-10-09").mkdir(parents=True)
+    (src / "2020-10-10").mkdir()
+    (src / "2020-10-09" / "old.bin").write_bytes(b"o" * 100_000)
+    (src / "2020-10-10" / "a.json").write_bytes(PAYLOAD_1)
+    (src / "2020-10-10" / "b.json").write_bytes(PAYLOAD_2)
+    cfg = _cfg(src, tmp_path, moto_s3, rsa_keypair[1], bucket="status-bucket")
+    update_progress_file(cfg.progress_file, date(2020, 10, 9))
+
+    committed, jobs = _jobs_under_group(spark, lambda: run_ingest(spark, cfg))
+    assert committed == [date(2020, 10, 10)]
+    store = spark.sparkContext._jsc.sc().statusStore()
+    tracker = spark.sparkContext.statusTracker()
+    stages = {sid for jid in jobs for sid in tracker.getJobInfo(jid).stageIds}
+    read = sum(store.lastStageAttempt(sid).inputBytes() for sid in stages)
+    assert read == len(PAYLOAD_1) + len(PAYLOAD_2)
+
+    again, jobs = _jobs_under_group(spark, lambda: run_ingest(spark, cfg))
+    assert again == [] and jobs == []
+
+
+def test_each_committed_day_logs_one_json_report(
+    spark, moto_s3, rsa_keypair, src_tree, tmp_path, caplog
+):
+    cfg = _cfg(src_tree, tmp_path, moto_s3, rsa_keypair[1], bucket="report-bucket")
+    with caplog.at_level(logging.INFO, logger="dataworks_audit_data_ingest_spark.ingest"):
+        run_ingest(spark, cfg)
+    reports = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.getMessage().startswith("{")
+    ]
+    for r in reports:
+        seconds, mbps = r.pop("seconds"), r.pop("MBps")
+        assert seconds > 0
+        assert mbps == pytest.approx(r["bytes_in"] / 1e6 / seconds, abs=1e-3)
+    assert reports == [
+        {
+            "day": "2020-10-09",
+            "files": 1,
+            "bytes_in": len(PAYLOAD_1),
+            "objects": 1,
+            "watermark_before": None,
+            "watermark_after": "2020-10-09",
+        },
+        {
+            "day": "2020-10-10",
+            "files": 1,
+            "bytes_in": len(PAYLOAD_2),
+            "objects": 1,
+            "watermark_before": "2020-10-09",
+            "watermark_after": "2020-10-10",
+        },
+    ]

@@ -158,3 +158,21 @@ def test_extra_fields_raise_like_createDataFrame(spark):
     """A row longer than the schema raises; it is never truncated."""
     for ansi in ("true", "false"):
         _raises_at_construction(spark, [(1, 2)], "a bigint", ansi)
+
+
+@pytest.mark.parametrize(
+    "ddl, row",
+    [
+        ("id bigint, v timestamp_ntz", (1, _TS.replace(tzinfo=_IST))),
+        ("id bigint, v timestamp_ntz", {"id": 1, "v": _TS.replace(tzinfo=_IST)}),
+        ("id bigint, v array<timestamp_ntz>", (1, [_TS, _TS.replace(tzinfo=_IST)])),
+        ("id bigint, v map<string,timestamp_ntz>", (1, {"k": _TS.replace(tzinfo=_IST)})),
+        ("id bigint, v struct<t:timestamp_ntz>", (1, (_TS.replace(tzinfo=_IST),))),
+    ],
+    ids=["tuple", "dict", "array", "map", "struct"],
+)
+def test_aware_datetime_in_timestamp_ntz_raises_type_error(spark, ddl, row):
+    """A checked ``TypeError`` naming the field, not the converter's
+    ``assert`` (gone under ``python -O``)."""
+    with pytest.raises(TypeError, match="field 'v'"):
+        local_rows_df(spark, [(0, None), row], ddl)

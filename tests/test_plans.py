@@ -107,8 +107,8 @@ def test_no_python_eval_outside_sanctioned_kernels(spark, name):
 
 
 def test_ingest_scan_prunes_content_until_needed(spark, tmp_path):
-    """The day-discovery pass must not read file contents: selecting only
-    `day` from the binaryFile scan keeps `content` out of the ReadSchema."""
+    """A listing over the scan (``largefile.list_files``) must not read file
+    contents: selecting only `day` keeps `content` out of the ReadSchema."""
     from dataworks_audit_data_ingest_spark.ingest.pipeline import scan_source
 
     src = tmp_path / "s"
