@@ -43,6 +43,9 @@ uniform ≥2× inflation — the r11 anomaly's actual shape — trips it.
 A ``cold_start: true`` anchor should be re-run before reaching for
 A/B adjudication; the headline fields are untouched.
 
+``cpus`` and ``master`` (additive): the session's ``defaultParallelism``
+and ``sparkContext.master``, so a headline states the cores it ran on.
+
 ``cpu_steal_pct`` (round 12): percent of CPU time stolen by the
 hypervisor during the run (/proc/stat steal delta) — the round-12
 closing anchors degraded 27.8 → 61.5 s at load_avg 0.2 and zero PSI
@@ -195,6 +198,8 @@ def main() -> None:
                 "load_avg_start": load_start,
                 "load_avg_end": load_end,
                 "cpu_steal_pct": steal_pct,
+                "cpus": spark.sparkContext.defaultParallelism,
+                "master": spark.sparkContext.master,
                 # cold-start diagnostics (module docstring): re-run a
                 # cold_start anchor before A/B adjudication
                 "warmup_sec": warmup_sec,

@@ -16,17 +16,19 @@ a wrong type, an out-of-range integer, a short or long row or a None in a
 non-nullable field raises at construction, never as a NULL at action
 time; timestamps are read as ``createDataFrame`` reads them (naive
 ``timestamp`` values as local time, ``timestamp_ntz`` as wall clock).
-Two differences remain: a tz-aware datetime anywhere in a
+A Decimal with more fractional digits than its column rounds half-up to
+the column's scale, at top level and nested, as in
+``createDataFrame(list)`` (the converter alone would round half-even).
+One difference remains: a tz-aware datetime anywhere in a
 ``timestamp_ntz`` field raises a ``TypeError`` naming the field (the
 converter would stop on an ``assert``, which ``python -O`` strips, and
-``createDataFrame(list)`` drops the offset); a Decimal with more
-fractional digits than its column rounds half-even here, half-up in
-``createDataFrame(list)``.
+``createDataFrame(list)`` drops the offset).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
+import decimal
+from collections.abc import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.conversion import LocalDataToArrowConversion
@@ -34,6 +36,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DataType,
+    DecimalType,
     MapType,
     StructType,
     TimestampNTZType,
@@ -63,12 +66,51 @@ def local_rows_df(
                     f"field {f.name!r} ({f.dataType.simpleString()}) takes naive "
                     "datetimes; got a tz-aware one"
                 )
+    half_up = _half_up(schema)
+    if half_up:
+        rows = [half_up(row) for row in rows]
     table = (
         LocalDataToArrowConversion.convert(rows, schema, False)
         if rows
         else to_arrow_schema(schema).empty_table()
     )
     return spark.createDataFrame(table, schema)
+
+
+def _half_up(dt: DataType) -> Callable | None:
+    """A function that rounds every Decimal in a verified ``dt`` value
+    half-up to its column's scale, or None when ``dt`` holds no decimal.
+    Struct values come back as tuples in field order, which the converter
+    reads as it reads the original."""
+    if isinstance(dt, DecimalType):
+        # the converter's precision, so a value too long for it still raises
+        ctx = decimal.Context(prec=dt.precision, rounding=decimal.ROUND_HALF_UP)
+        exp = decimal.Decimal(1).scaleb(-dt.scale)
+        return lambda v: v if v is None else v.quantize(exp, context=ctx)
+    if isinstance(dt, ArrayType):
+        elem = _half_up(dt.elementType)
+        return elem and (lambda v: v if v is None else [elem(x) for x in v])
+    if isinstance(dt, MapType):
+        key, val = _half_up(dt.keyType), _half_up(dt.valueType)
+        if not (key or val):
+            return None
+        key, val = key or _same, val or _same
+        return lambda v: v if v is None else {key(k): val(x) for k, x in v.items()}
+    if isinstance(dt, StructType):
+        fields = [_half_up(f.dataType) for f in dt.fields]
+        if not any(fields):
+            return None
+        fields = [f or _same for f in fields]
+        return lambda v: (
+            v
+            if v is None
+            else tuple(f(x) for f, x in zip(fields, _values(dt, v)))
+        )
+    return None
+
+
+def _same(value):
+    return value
 
 
 def _holds_ntz(dt: DataType) -> bool:

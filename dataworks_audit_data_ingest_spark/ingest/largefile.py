@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 from .crypto import EnvelopeEncryptor, _omac
-from .pipeline import IngestConfig
+from .pipeline import IngestConfig, _client_args, _s3_client
 
 _CHUNK = 8 * 1024 * 1024  # 8 MiB read granularity
 
@@ -89,19 +89,12 @@ def encrypt_and_upload_large(files: DataFrame, cfg: IngestConfig) -> DataFrame:
     an action on it drives the upload.
     """
     pem, key_id = cfg.rsa_public_key_pem, cfg.hsm_key_id
+    client_args = _client_args(cfg)
 
     def run(batches: Iterator) -> Iterator:
-        import boto3
         import pandas as pd
-        from botocore.config import Config
 
-        client = boto3.client(
-            "s3",
-            region_name=cfg.aws_region,
-            endpoint_url=cfg.s3_endpoint_url,
-            config=Config(retries={"max_attempts": cfg.retries, "mode": "standard"}),
-            **cfg.extra_boto_kwargs,
-        )
+        client = _s3_client(*client_args)
         enc = EnvelopeEncryptor(pem, key_id)
         for pdf in batches:
             out = {"day": [], "basename": [], "s3_key": [], "bytes_out": []}

@@ -9,6 +9,7 @@ from __future__ import annotations
 import base64
 import json
 import logging
+import time
 import uuid
 import zlib
 from datetime import date
@@ -17,6 +18,7 @@ import boto3
 import pytest
 from cryptography.hazmat.primitives import hashes
 from cryptography.hazmat.primitives.asymmetric import padding
+from pyspark.sql import functions as F
 
 from dataworks_audit_data_ingest_spark.ingest import (
     EnvelopeEncryptor,
@@ -26,7 +28,8 @@ from dataworks_audit_data_ingest_spark.ingest import (
     run_ingest,
     update_progress_file,
 )
-from dataworks_audit_data_ingest_spark.ingest.pipeline import _hidden
+from dataworks_audit_data_ingest_spark.ingest import pipeline
+from dataworks_audit_data_ingest_spark.ingest.pipeline import _hidden, _s3_client
 
 PAYLOAD_1 = b'{"id": "0001", "type": "donut", "name": "Cake"}'
 PAYLOAD_2 = b'{"id": "0002", "type": "ice-cream", "name": "Chocobar"}'
@@ -319,25 +322,29 @@ def _jobs_under_group(spark, fn):
 def test_day_job_reads_only_its_day_and_idle_resume_runs_no_job(
     spark, moto_s3, rsa_keypair, tmp_path
 ):
-    """Status-store check (read as ``perfbench/trace.py`` reads it): the day
-    job's input bytes are that day's file bytes, not the history's; a resume
-    with nothing new submits no Spark job at all."""
+    """Status-store check (read as ``perfbench/trace.py`` reads it): the
+    day jobs, all under the caller's job group although they run on their
+    own threads, read the new days' file bytes, not the history's; a
+    resume with nothing new submits no Spark job at all."""
     src = tmp_path / "src"
     (src / "2020-10-09").mkdir(parents=True)
-    (src / "2020-10-10").mkdir()
     (src / "2020-10-09" / "old.bin").write_bytes(b"o" * 100_000)
-    (src / "2020-10-10" / "a.json").write_bytes(PAYLOAD_1)
-    (src / "2020-10-10" / "b.json").write_bytes(PAYLOAD_2)
+    new_bytes = 0
+    for i, day in enumerate(("2020-10-10", "2020-10-11", "2020-10-12")):
+        (src / day).mkdir()
+        (src / day / "a.json").write_bytes(PAYLOAD_1 * (i + 1))
+        (src / day / "b.json").write_bytes(PAYLOAD_2)
+        new_bytes += len(PAYLOAD_1) * (i + 1) + len(PAYLOAD_2)
     cfg = _cfg(src, tmp_path, moto_s3, rsa_keypair[1], bucket="status-bucket")
     update_progress_file(cfg.progress_file, date(2020, 10, 9))
 
     committed, jobs = _jobs_under_group(spark, lambda: run_ingest(spark, cfg))
-    assert committed == [date(2020, 10, 10)]
+    assert committed == [date(2020, 10, 10), date(2020, 10, 11), date(2020, 10, 12)]
     store = spark.sparkContext._jsc.sc().statusStore()
     tracker = spark.sparkContext.statusTracker()
     stages = {sid for jid in jobs for sid in tracker.getJobInfo(jid).stageIds}
     read = sum(store.lastStageAttempt(sid).inputBytes() for sid in stages)
-    assert read == len(PAYLOAD_1) + len(PAYLOAD_2)
+    assert read == new_bytes
 
     again, jobs = _jobs_under_group(spark, lambda: run_ingest(spark, cfg))
     assert again == [] and jobs == []
@@ -376,3 +383,105 @@ def test_each_committed_day_logs_one_json_report(
             "watermark_after": "2020-10-10",
         },
     ]
+
+
+# ---------------------------------------------------------------------------
+# Pipelined backfill: day jobs overlap, commits stay in day order
+# ---------------------------------------------------------------------------
+
+
+def _days_tree(tmp_path, n):
+    src = tmp_path / "src"
+    days = [date(2020, 10, 1 + i) for i in range(n)]
+    for i, day in enumerate(days):
+        (src / day.isoformat()).mkdir(parents=True)
+        (src / day.isoformat() / f"f{i}.json").write_bytes(PAYLOAD_1)
+    return src, days
+
+
+def test_failed_middle_day_commits_earlier_days_only(
+    spark, moto_s3, rsa_keypair, tmp_path, monkeypatch, caplog
+):
+    """Day 2 of 3 fails in a task: the run raises, the watermark stays at
+    day 1 although day 3's job succeeded, one WARNING names day 3 as
+    uploaded but uncommitted, and the fixed retry commits days 2 and 3."""
+    src, (day1, day2, day3) = _days_tree(tmp_path, 3)
+    cfg = _cfg(src, tmp_path, moto_s3, rsa_keypair[1], bucket="middle-bucket")
+    scan = pipeline.scan_source
+
+    def failing_scan(spark, path):
+        df = scan(spark, path)
+        boom = F.raise_error(F.lit("injected failure on day 2"))
+        return df.withColumn(
+            "content", F.when(F.col("day") == F.lit(day2), boom).otherwise(F.col("content"))
+        )
+
+    monkeypatch.setattr(pipeline, "scan_source", failing_scan)
+    with caplog.at_level(logging.INFO, logger="dataworks_audit_data_ingest_spark.ingest"):
+        with pytest.raises(Exception, match="injected failure on day 2"):
+            run_ingest(spark, cfg)
+    assert find_start_date(cfg.progress_file) == day1
+    warnings = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.name == pipeline.logger.name and r.levelno == logging.WARNING
+    ]
+    assert warnings == [
+        {
+            "failed_day": day2.isoformat(),
+            "watermark": day1.isoformat(),
+            "uploaded_uncommitted": [day3.isoformat()],
+        }
+    ]
+
+    monkeypatch.undo()
+    assert run_ingest(spark, cfg) == [day2, day3]
+    assert find_start_date(cfg.progress_file) == day3
+
+
+def test_commits_run_in_day_order_when_later_days_finish_first(
+    spark, moto_s3, rsa_keypair, tmp_path, monkeypatch
+):
+    """The first day's job is held back on the driver, so later days finish
+    before it; the watermark is still written day by day, ascending."""
+    src, days = _days_tree(tmp_path, 5)
+    cfg = _cfg(src, tmp_path, moto_s3, rsa_keypair[1], bucket="order-bucket")
+    scan, ingest, commit = (
+        pipeline.scan_source,
+        pipeline._ingest_day,
+        pipeline.update_progress_file,
+    )
+    finished, commits = [], []
+
+    def slow_first_scan(spark, path):
+        if path.endswith(days[0].isoformat()):
+            time.sleep(1.0)
+        return scan(spark, path)
+
+    def ingest_day(*args):
+        out = ingest(*args)
+        finished.append(args[2])
+        return out
+
+    def record_commit(path, day):
+        commits.append(day)
+        commit(path, day)
+
+    monkeypatch.setattr(pipeline, "scan_source", slow_first_scan)
+    monkeypatch.setattr(pipeline, "_ingest_day", ingest_day)
+    monkeypatch.setattr(pipeline, "update_progress_file", record_commit)
+    assert run_ingest(spark, cfg) == days
+    assert commits == days
+    assert finished[0] != days[0]  # a later day finished first
+    assert find_start_date(cfg.progress_file) == days[-1]
+
+
+def test_s3_client_is_cached_per_config():
+    """One client per worker process and config: the same arguments give
+    the same client, a different endpoint a new one."""
+    creds = (("aws_access_key_id", "k"), ("aws_secret_access_key", "s"))
+    args = ("eu-west-2", "http://127.0.0.1:1", 3, creds)
+    client = _s3_client(*args)
+    assert _s3_client(*args) is client
+    assert _s3_client("eu-west-2", "http://127.0.0.1:2", 3, creds) is not client
+    assert client.meta.endpoint_url == "http://127.0.0.1:1"

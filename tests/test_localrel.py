@@ -176,3 +176,29 @@ def test_aware_datetime_in_timestamp_ntz_raises_type_error(spark, ddl, row):
     ``assert`` (gone under ``python -O``)."""
     with pytest.raises(TypeError, match="field 'v'"):
         local_rows_df(spark, [(0, None), row], ddl)
+
+
+_D = decimal.Decimal
+
+
+@pytest.mark.parametrize(
+    "ddl, rows",
+    [
+        ("v decimal(12,2)", [(_D("1.245"),), (_D("-1.245"),), (_D("0.125"),), (_D("7"),)]),
+        ("v decimal(12,2)", [{"v": _D("1.245")}, {"v": None}]),
+        ("v array<decimal(5,1)>", [([_D("0.25"), None, _D("-0.35")],)]),
+        ("v map<string,decimal(5,1)>", [({"a": _D("0.25"), "b": None},)]),
+        ("v struct<x:int,y:decimal(5,1)>", [((1, _D("0.25")),), (None,)]),
+        ("v array<struct<y:decimal(5,1)>>", [([(_D("2.45"),), {"y": _D("0.05")}],)]),
+    ],
+    ids=["top", "dict", "array", "map", "struct", "array-of-struct"],
+)
+def test_over_scale_decimal_rounds_half_up_like_createDataFrame(spark, ddl, rows):
+    """``Decimal("1.245")`` into ``decimal(12,2)`` is 1.25, as in
+    ``createDataFrame(list)``; the converter alone rounds half-even (1.24)."""
+    _assert_same(local_rows_df(spark, rows, ddl), spark.createDataFrame(rows, ddl))
+
+
+def test_over_scale_decimal_top_level_value(spark):
+    got = local_rows_df(spark, [(_D("1.245"),)], "v decimal(12,2)").collect()
+    assert got[0][0] == _D("1.25")
