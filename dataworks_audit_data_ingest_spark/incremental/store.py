@@ -215,6 +215,10 @@ def commit_batch_partition(
 
 COMPACTED_ID = "__compacted__"
 
+# A batch id no foreachBatch invocation can produce (Spark batch ids are
+# integers): reading "excluding" it reads the WHOLE store.
+_READ_ALL_ID = "__reader__"
+
 
 def checkpoint_replayable_ids(
     spark: SparkSession, checkpoint_dir: str

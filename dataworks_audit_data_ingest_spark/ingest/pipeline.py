@@ -78,27 +78,33 @@ def fetch_hsm_key(
     return base64.b64decode(value)
 
 
+def day_columns() -> list:
+    """The day rule, shared by :func:`scan_source` and the streaming twin:
+    a scanned file's ``(path, basename, day)``, with ``day`` parsed from
+    the immediate parent directory name, exactly what ``filter_date``
+    parses (`audit_data_ingest.py:26-33`). Non-date directories yield
+    NULL."""
+    return [
+        "path",
+        F.element_at(F.split("path", "/"), -1).alias("basename"),
+        F.expr(
+            r"TRY_TO_DATE(REGEXP_EXTRACT(path, '([^/]+)/[^/]+$', 1), 'yyyy-MM-dd')"
+        ).alias("day"),
+    ]
+
+
 def scan_source(spark: SparkSession, src_dir: str) -> DataFrame:
     """R1: the reference's copy to local disk becomes a ``binaryFile`` scan
-    that executors read directly; `day` is derived from the immediate
-    parent directory name, exactly what ``filter_date`` parses
-    (`audit_data_ingest.py:26-33`). Non-date directories yield NULL and are
-    skipped (warn-and-exclude semantics, `:30-32`)."""
+    that executors read directly, projected by :func:`day_columns`.
+    Non-date directories yield a NULL ``day`` and are skipped
+    (warn-and-exclude semantics, `audit_data_ingest.py:30-32`)."""
     tune(spark)
     df = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .load(src_dir)
     )
-    return df.select(
-        "path",
-        F.element_at(F.split("path", "/"), -1).alias("basename"),
-        F.expr(
-            r"TRY_TO_DATE(REGEXP_EXTRACT(path, '([^/]+)/[^/]+$', 1), 'yyyy-MM-dd')"
-        ).alias("day"),
-        "length",
-        "content",
-    )
+    return df.select(*day_columns(), "length", "content")
 
 
 def filter_after_watermark(df: DataFrame, watermark: date | None) -> DataFrame:
@@ -235,6 +241,20 @@ def _hidden(name: str) -> bool:
     return skip and not name.startswith(("_common_metadata", "_metadata"))
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``path`` as a Hadoop ``Path``, and the ``FileSystem`` that serves it."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+
+
+def qualified_path(spark: SparkSession, path: str) -> str:
+    """``path`` qualified by its ``FileSystem`` (scheme, authority, absolute
+    path): the form in which Spark's file sources report the files they
+    read."""
+    p, fs = _hadoop_path(spark, path)
+    return fs.makeQualified(p).toString()
+
+
 def list_new_days(
     spark: SparkSession, src_dir: str, watermark: date | None
 ) -> dict[date, NewDay]:
@@ -245,8 +265,7 @@ def list_new_days(
     ``binaryFile`` reads. Returns the days holding at least one such file,
     in ascending order. Non-date entries are always dropped (the first-run
     deviation in :func:`filter_after_watermark`). No Spark job runs."""
-    root = spark._jvm.org.apache.hadoop.fs.Path(src_dir)
-    fs = root.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    root, fs = _hadoop_path(spark, src_dir)
     days = {}
     for status in fs.listStatus(root):
         path = status.getPath()
@@ -277,8 +296,11 @@ def _ingest_day(spark: SparkSession, cfg: IngestConfig, day: date, path: str):
     """One day's job, over that day's directory only. Returns the objects
     uploaded and the seconds from plan build to the end of the job."""
     t0 = time.perf_counter()
-    # the `day` filter keeps out files in the day's subdirectories
-    day_df = scan_source(spark, path).filter(F.col("day") == F.lit(day))
+    # only the files directly in the day's directory, the ones the listing
+    # counted: a nested `day/day/x` would overwrite the key of `day/x`
+    day_df = scan_source(spark, path).filter(
+        F.regexp_extract("path", "^(.*)/[^/]+$", 1) == F.lit(path)
+    )
     objects = encrypt_and_upload(day_df, cfg).count()
     return objects, time.perf_counter() - t0
 

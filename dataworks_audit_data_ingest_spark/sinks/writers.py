@@ -42,20 +42,19 @@ def start_parquet_stream_sink(
     path: str,
     checkpoint_dir: str,
     partition_by: tuple[str, ...] = (),
-    available_now: bool = True,
 ):
     """Streaming parquet file sink with exactly-once file commit via the
     checkpoint log (the built-in alternative to the foreachBatch S3 sink
-    when per-object metadata isn't required)."""
+    when per-object metadata isn't required), as one ``availableNow``
+    drain."""
     writer = (
         stream_df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     return writer.start()
 
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..text.incremental_boilerplate import strip_boilerplate_batch
+from .jobs import run_foreach_batch
 
 
 def start_boilerplate_stream(
@@ -36,7 +37,6 @@ def start_boilerplate_stream(
     min_docs: int = 20,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """foreachBatch boilerplate removal: clean each micro-batch against
     the merged df store (batch's own contribution included, so a
@@ -59,14 +59,7 @@ def start_boilerplate_stream(
 
         commit_batch_partition(cleaned, out_dir, str(batch_id))
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(docs_stream, one_batch, checkpoint_dir)
 
 
 def maintain_boilerplate_store(

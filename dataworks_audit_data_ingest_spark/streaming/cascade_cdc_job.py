@@ -47,6 +47,7 @@ from ..incremental.joinview_cdc import (
     update_join_view_cdc,
 )
 from ..incremental.store import commit_batch_partition, pad_batch_id
+from .jobs import run_foreach_batch
 from .joinview_cdc_job import _resolve_by_seq, split_cdc_ops
 
 logger = logging.getLogger(__name__)
@@ -138,7 +139,6 @@ def start_cdc_rollup_cascade_stream(
     group_cols: Sequence[str],
     value_expr: str | None = None,
     compact_every: int | None = None,
-    available_now: bool = True,
 ):
     """Maintain the CDC view AND its additive rollup from one (side,
     op)-tagged change stream; returns the started query.
@@ -189,11 +189,4 @@ def start_cdc_rollup_cascade_stream(
                 bid,
             )
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(changes_stream, one_batch, checkpoint_dir)

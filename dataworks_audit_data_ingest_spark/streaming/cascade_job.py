@@ -34,6 +34,7 @@ from ..incremental import joinview as _jv
 from ..incremental import rollup as _rl
 from ..incremental.joinview import JoinViewSpec
 from ..incremental.store import resolve_stream_batch_id
+from .jobs import run_foreach_batch
 from .joinview_job import split_sides
 
 logger = logging.getLogger(__name__)
@@ -54,7 +55,6 @@ def start_enriched_rollup_cascade_stream(
     user_col: str = "user_id",
     value_col: str = "value",
     compact_every: int | None = None,
-    available_now: bool = True,
 ):
     """Maintain ``A ⋈ B`` AND its continuous aggregate from one tagged
     change stream; returns the started query.
@@ -116,11 +116,4 @@ def start_enriched_rollup_cascade_stream(
                 batch_id,
             )
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(changes_stream, one_batch, checkpoint_dir)

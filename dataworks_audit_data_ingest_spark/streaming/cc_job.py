@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 
 from ..incremental.cc import update_cc_store
 from ..text.incremental_dedup import incremental_dedup_batch
+from .jobs import run_foreach_batch
 
 logger = logging.getLogger(__name__)
 
@@ -40,7 +41,6 @@ def start_cluster_maintenance_stream(
     sig_store: str,
     cc_store: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """foreachBatch near-dup cluster maintenance over a (doc_id, text, ...)
     stream: after every micro-batch the CC label store reflects all
@@ -60,11 +60,4 @@ def start_cluster_maintenance_stream(
             delta.count(),
         )
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(docs_stream, one_batch, checkpoint_dir)

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..text.cdc import DEFAULT_DIV, DEFAULT_WIN, incremental_cdc_batch
+from .jobs import run_foreach_batch
 
 
 def start_cdc_stream(
@@ -49,7 +50,6 @@ def start_cdc_stream(
     text_col: str = "text",
     win: int = DEFAULT_WIN,
     div: int = DEFAULT_DIV,
-    available_now: bool = True,
 ):
     """foreachBatch CDC dedup: chunk → dedup vs the chunk store → land the
     novel chunks and the per-doc novelty stats under batch_id=
@@ -72,11 +72,4 @@ def start_cdc_stream(
         for sub, df in (("chunks", novel), ("doc_stats", doc_stats)):
             commit_batch_partition(df, f"{out_dir}/{sub}", str(batch_id))
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(docs_stream, one_batch, checkpoint_dir)

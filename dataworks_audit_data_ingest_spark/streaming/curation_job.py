@@ -20,8 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..incremental.store import commit_batch_partition
 from ..text.incremental_dedup import incremental_dedup_batch
 from ..text.pipeline import annotate_quality, redact_pii
+from .jobs import run_foreach_batch
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string"
 
@@ -44,7 +46,6 @@ def start_curation_stream(
     store_path: str,
     checkpoint_dir: str,
     min_tokens: int = 10,
-    available_now: bool = True,
 ):
     """foreachBatch curation: redact → quality gate → incremental near-dup
     vs the signature store → append curated parquet under batch_id=."""
@@ -58,19 +59,6 @@ def start_curation_stream(
         unique_docs, _ = incremental_dedup_batch(
             spark, store_path, kept, batch_id=str(batch_id)
         )
-        (
-            unique_docs.withColumn("batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_dir)
-        )
+        commit_batch_partition(unique_docs, out_dir, str(batch_id))
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(curate_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(docs_stream, curate_batch, checkpoint_dir)

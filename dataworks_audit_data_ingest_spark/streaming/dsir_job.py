@@ -43,6 +43,7 @@ import logging
 from pyspark.sql import DataFrame
 
 from ..text.dsir import DEFAULT_SEED, score_with_model
+from .jobs import run_foreach_batch
 from .sample_job import update_reservoir
 
 logger = logging.getLogger(__name__)
@@ -58,7 +59,6 @@ def start_dsir_selection_stream(
     text_col: str = "text",
     extra_cols: tuple[str, ...] = ("source",),
     seed: str = DEFAULT_SEED,
-    available_now: bool = True,
 ):
     """foreachBatch DSIR selection: after every micro-batch,
     ``reservoir_path`` holds the k-row importance-weighted sample of ALL
@@ -82,11 +82,4 @@ def start_dsir_selection_stream(
         )
         logger.info("dsir selection: merged batch %d", batch_id)
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(docs_stream, one_batch, checkpoint_dir)

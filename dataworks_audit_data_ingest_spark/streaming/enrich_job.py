@@ -45,6 +45,7 @@ from ..incremental.enrich import (
     report_exists,
 )
 from ..incremental.store import commit_batch_partition
+from .jobs import run_foreach_batch
 
 logger = logging.getLogger(__name__)
 
@@ -59,7 +60,6 @@ def start_enriched_stream(
     salt_buckets: int = 16,
     skew_threshold_milli: int = 10_000,
     transform: Callable[[DataFrame], DataFrame] | None = None,
-    available_now: bool = True,
 ):
     """foreachBatch enrichment: recover report → decide from the persisted
     skew_milli → (maybe-salted) join to the dimension → land under
@@ -114,11 +114,4 @@ def start_enriched_stream(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        facts_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(facts_stream, one_batch, checkpoint_dir)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sketches as SK
+from .jobs import run_foreach_batch
 
 DEFAULT_M = 32
 
@@ -78,7 +79,6 @@ def start_hll_stream(
     group_cols: tuple[str, ...] = ("event_type",),
     day_col: str = "ts",
     m: int = DEFAULT_M,
-    available_now: bool = True,
 ):
     """foreachBatch register maintenance via :func:`hll_microbatch`."""
 
@@ -87,14 +87,7 @@ def start_hll_stream(
             batch_df, batch_id, out_dir, key_sql, group_cols, day_col, m
         )
 
-    writer = (
-        event_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(event_stream, one_batch, checkpoint_dir)
 
 
 def read_distinct_estimates(

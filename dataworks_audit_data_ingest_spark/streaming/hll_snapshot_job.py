@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 
 from ..sinks.snapshots import SnapshotTable
 from .hll_job import DEFAULT_M, hll_microbatch, read_distinct_estimates
+from .jobs import run_foreach_batch
 
 
 def hll_view_microbatch(
@@ -74,7 +75,6 @@ def start_hll_view_stream(
     group_cols: tuple[str, ...] = ("event_type",),
     day_col: str = "ts",
     m: int = DEFAULT_M,
-    available_now: bool = True,
 ):
     """foreachBatch driver for :func:`hll_view_microbatch`."""
 
@@ -90,11 +90,4 @@ def start_hll_view_stream(
             m,
         )
 
-    writer = (
-        event_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(event_stream, one_batch, checkpoint_dir)

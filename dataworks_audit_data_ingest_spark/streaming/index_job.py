@@ -42,11 +42,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..incremental.store import (
+    _READ_ALL_ID,
     commit_batch_partition,
     read_store_excluding_batch,
 )
 from ..similarity.kmeans import assign_cells
 from ..similarity.quantize import quantize_int8
+from .jobs import run_foreach_batch
 
 VEC_SCHEMA = "vec_id long, embedding array<double>"
 
@@ -54,10 +56,6 @@ VEC_SCHEMA = "vec_id long, embedding array<double>"
 # double→decimal conversion is deterministic and decimal addition is
 # associative, so the sum is identical under any partitioning.
 _QDEC = "DECIMAL(38,18)"
-
-# A batch id no foreachBatch invocation can produce (Spark batch ids are
-# integers): reading "excluding" it reads the WHOLE store.
-_READ_ALL_ID = "__reader__"
 
 
 def stream_embeddings_json(
@@ -192,7 +190,6 @@ def start_index_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quantize: bool = True,
-    available_now: bool = True,
     quality_dir: str | None = None,
 ):
     """foreachBatch indexing via :func:`index_microbatch`. ``centroids`` is
@@ -212,11 +209,4 @@ def start_index_stream(
             quality_dir=quality_dir,
         )
 
-    writer = (
-        vec_stream.writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(vec_stream, index_batch, checkpoint_dir)

@@ -2,11 +2,12 @@
 
 The production source is Kafka (the reference ingests "UC Kafka audit data",
 `README.md:5`) — swap ``stream_events_json`` for ``readStream.format("kafka")``
-+ ``from_json(value)`` with the same downstream code. Tests drive the file
-source with ``trigger(availableNow=True)``, the streaming analog of the
-reference's 12-hourly batch run (`ci/resources.yml:20-23`): each tick drains
-everything new and stops, resuming from the checkpoint — which subsumes the
-reference's progress-file watermark (`audit_data_ingest.py:71-73`).
++ ``from_json(value)`` with the same downstream code. Every foreachBatch job
+starts through :func:`run_foreach_batch`, and ``trigger(availableNow=True)``
+is its only trigger: the streaming analog of the reference's 12-hourly
+batch run (`ci/resources.yml:20-23`). Each run drains everything new and
+stops, resuming from the checkpoint — which subsumes the reference's
+progress-file watermark (`audit_data_ingest.py:71-73`).
 
 Window/sessionization expressions are the same ones pinned in batch by
 q30-q33 (queries/streaming_shaped.py), so their semantics are oracle-checked
@@ -26,7 +27,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..ingest.pipeline import IngestConfig, encrypt_and_upload
+from ..ingest.pipeline import (
+    IngestConfig,
+    day_columns,
+    encrypt_and_upload,
+    qualified_path,
+)
 from ..session import tune
 
 EVENT_SCHEMA = StructType(
@@ -102,24 +108,21 @@ def dedup_events_within_watermark(
     )
 
 
-def _start_encrypt_and_upload(
-    records: DataFrame, cfg: IngestConfig, checkpoint_dir: str, available_now: bool
-):
-    """Sink each micro-batch through ``encrypt_and_upload``: one Python stage
-    per trigger. A failed batch is not committed and is replayed."""
-    writer = records.writeStream.foreachBatch(
-        lambda batch_df, _batch_id: encrypt_and_upload(batch_df, cfg).count()
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def run_foreach_batch(stream: DataFrame, fn, checkpoint_dir: str):
+    """Start ``stream`` with ``fn(batch_df, batch_id)`` run on each
+    micro-batch, as one ``availableNow`` drain resumable from
+    ``checkpoint_dir``. A failed batch is not committed and is replayed.
+    Returns the started query."""
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def start_encrypted_ingest_stream(
-    spark: SparkSession,
-    cfg: IngestConfig,
-    checkpoint_dir: str,
-    available_now: bool = True,
+    spark: SparkSession, cfg: IngestConfig, checkpoint_dir: str
 ):
     """Streaming twin of ``ingest.run_ingest``: binaryFile stream →
     compress+encrypt → per-batch metadata-bearing S3 sink.
@@ -127,9 +130,12 @@ def start_encrypted_ingest_stream(
     ``foreachBatch`` reuses the batch pipeline's fused kernel unchanged;
     the commit log in ``checkpoint_dir`` provides the once-per-file
     guarantee the reference built by hand with its progress file +
-    all-or-nothing day loop (`audit_data_ingest.py:50-68`).
+    all-or-nothing day loop (`audit_data_ingest.py:50-68`). As in
+    ``run_ingest``, only files directly in a day directory directly under
+    ``cfg.src_dir`` are read.
     """
     tune(spark)
+    root = qualified_path(spark, cfg.src_dir)
     # streaming sources require an explicit schema; this is binaryFile's fixed one
     binary_schema = (
         "path string, modificationTime timestamp, length long, content binary"
@@ -139,18 +145,15 @@ def start_encrypted_ingest_stream(
         .schema(binary_schema)
         .option("recursiveFileLookup", "true")
         .load(cfg.src_dir)
-        .select(
-            "path",
-            F.element_at(F.split("path", "/"), -1).alias("basename"),
-            F.expr(
-                r"TRY_TO_DATE(REGEXP_EXTRACT(path, '([^/]+)/[^/]+$', 1), 'yyyy-MM-dd')"
-            ).alias("day"),
-            "content",
+        .select(*day_columns(), "content")
+        .filter(
+            F.col("day").isNotNull()
+            & (F.regexp_extract("path", "^(.*)/[^/]+/[^/]+$", 1) == F.lit(root))
         )
-        .filter(F.col("day").isNotNull())
     )
-
-    return _start_encrypt_and_upload(files, cfg, checkpoint_dir, available_now)
+    return run_foreach_batch(
+        files, lambda df, _id: encrypt_and_upload(df, cfg).count(), checkpoint_dir
+    )
 
 
 def synthetic_event_records(events: DataFrame) -> DataFrame:
@@ -191,7 +194,6 @@ def start_synthetic_encrypted_ingest_stream(
     checkpoint_dir: str,
     rows: int,
     rows_per_batch: int,
-    available_now: bool = True,
 ):
     """The full north-star Kafka→encrypt→S3 shape as ONE streaming job,
     over the native Python streaming source (`sources/synthetic.py`) —
@@ -219,7 +221,9 @@ def start_synthetic_encrypted_ingest_stream(
     )
     records = synthetic_event_records(events)
 
-    return _start_encrypt_and_upload(records, cfg, checkpoint_dir, available_now)
+    return run_foreach_batch(
+        records, lambda df, _id: encrypt_and_upload(df, cfg).count(), checkpoint_dir
+    )
 
 
 def purchases_to_errors_stream_join(

@@ -58,6 +58,7 @@ from ..incremental.joinview_cdc import (
     compact_join_view_cdc,
     update_join_view_cdc,
 )
+from .jobs import run_foreach_batch
 
 logger = logging.getLogger(__name__)
 
@@ -194,7 +195,6 @@ def start_cdc_join_view_stream(
     right_cols: Sequence[str],
     seq_col: str | None = None,
     compact_every: int | None = None,
-    available_now: bool = True,
 ):
     """Maintain the CDC view from a (side, op)-tagged change stream;
     returns the started query.
@@ -236,11 +236,4 @@ def start_cdc_join_view_stream(
                 "cdc join view: folded %s after batch %s", folded, bid
             )
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(changes_stream, one_batch, checkpoint_dir)

@@ -35,6 +35,7 @@ from ..incremental.joinview import (
     compact_join_view,
     update_join_view,
 )
+from .jobs import run_foreach_batch
 
 logger = logging.getLogger(__name__)
 
@@ -81,7 +82,6 @@ def start_join_view_maintenance_stream(
     left_cols: Sequence[str],
     right_cols: Sequence[str],
     compact_every: int | None = None,
-    available_now: bool = True,
 ):
     """Maintain the join view from a tagged change stream; returns the
     started query.
@@ -122,11 +122,4 @@ def start_join_view_maintenance_stream(
                 batch_id,
             )
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(changes_stream, one_batch, checkpoint_dir)

@@ -17,8 +17,11 @@ retained by the monitor.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..incremental.store import commit_batch_partition
+from .jobs import run_foreach_batch
 
 
 def batch_cells(df: DataFrame, day_col: str = "ts") -> DataFrame:
@@ -91,20 +94,8 @@ def monitor_microbatch(
             F.lit(None).cast("bigint").alias("dev_pct"),
         )
 
-    (
-        alerts.withColumn("batch_id", F.lit(str(batch_id)))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(alerts_dir)
-    )
-    (
-        cells.withColumn("batch_id", F.lit(str(batch_id)))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(store_dir)
-    )
+    commit_batch_partition(alerts, alerts_dir, str(batch_id))
+    commit_batch_partition(cells, store_dir, str(batch_id))
 
 
 def start_monitor_stream(
@@ -114,7 +105,6 @@ def start_monitor_stream(
     checkpoint_dir: str,
     dev_pct_band: int = 50,
     day_col: str = "ts",
-    available_now: bool = True,
 ):
     """foreachBatch monitoring via :func:`monitor_microbatch`."""
 
@@ -123,11 +113,4 @@ def start_monitor_stream(
             batch_df, batch_id, store_dir, alerts_dir, dev_pct_band, day_col
         )
 
-    writer = (
-        event_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(event_stream, one_batch, checkpoint_dir)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..text.incremental_passages import incremental_passage_batch
+from .jobs import run_foreach_batch
 
 
 def start_passage_stream(
@@ -31,7 +32,6 @@ def start_passage_stream(
     stride: int = 48,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """foreachBatch passage novelty: per micro-batch, chunk → anti-join
     the passage-hash store → land novel passages (with text, for the
@@ -53,11 +53,4 @@ def start_passage_stream(
 
         commit_batch_partition(novel, out_dir, str(batch_id))
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(docs_stream, one_batch, checkpoint_dir)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 
 from ..incremental.rollup import update_rollup_store
 from ..incremental.store import resolve_stream_batch_id
+from .jobs import run_foreach_batch
 
 logger = logging.getLogger(__name__)
 
@@ -40,7 +41,6 @@ def start_rollup_maintenance_stream(
     user_col: str = "user_id",
     value_col: str = "value",
     compact_every: int | None = None,
-    available_now: bool = True,
 ):
     """foreachBatch rollup maintenance over a (ts, event_type, user_id,
     value, ...) stream: after every micro-batch the store's merged report
@@ -87,11 +87,4 @@ def start_rollup_maintenance_stream(
                 batch_id,
             )
 
-    writer = (
-        events_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(events_stream, one_batch, checkpoint_dir)

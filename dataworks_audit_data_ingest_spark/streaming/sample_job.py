@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.sampling import merge_reservoirs, weighted_bottom_k
 from ..functions.localrel import local_rows_df
 from ..incremental.swap import recover_swapped, staged_overwrite, swapped_exists
+from .jobs import run_foreach_batch
 
 logger = logging.getLogger(__name__)
 
@@ -135,7 +136,6 @@ def start_weighted_sample_stream(
     id_col: str = "doc_id",
     weight_col: str = "weight",
     seed: str = "wsamp",
-    available_now: bool = True,
 ):
     """foreachBatch weighted reservoir over a document stream: after every
     micro-batch, ``reservoir_path`` holds the exact k-row weighted
@@ -154,11 +154,4 @@ def start_weighted_sample_stream(
         )
         logger.info("weighted reservoir: merged batch %d", batch_id)
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(docs_stream, one_batch, checkpoint_dir)

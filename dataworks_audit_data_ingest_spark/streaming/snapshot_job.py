@@ -23,13 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..sinks.snapshots import SnapshotTable
+from .jobs import run_foreach_batch
 
 
 def start_snapshot_stream(
     stream_df: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Append every micro-batch to a SnapshotTable, one atomic snapshot
     per batch, replay-idempotent via the batch_id manifest property."""
@@ -40,11 +40,4 @@ def start_snapshot_stream(
             return  # replayed batch: its snapshot already committed
         table.commit_append(batch_df, properties={"batch_id": str(batch_id)})
 
-    writer = (
-        stream_df.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream_df, commit_batch, checkpoint_dir)

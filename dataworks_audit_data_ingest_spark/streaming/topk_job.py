@@ -42,13 +42,11 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import spark_hash32, universal_hash
 from ..incremental.store import (
+    _READ_ALL_ID,
     commit_batch_partition,
     read_store_excluding_batch,
 )
-
-# A batch id no foreachBatch invocation can produce (Spark batch ids are
-# integers): reading "excluding" it reads the WHOLE store.
-_READ_ALL_ID = "__reader__"
+from .jobs import run_foreach_batch
 
 CMS_D = 4  # depth (independent hash rows) — same family as q87
 CMS_W = 1024  # width (cells per row)
@@ -117,21 +115,13 @@ def start_topk_stream(
     checkpoint_dir: str,
     key_sql: str = "event_type",
     m_candidates: int = 32,
-    available_now: bool = True,
 ):
     """foreachBatch heavy-hitter maintenance via :func:`topk_microbatch`."""
 
     def one_batch(batch_df: DataFrame, batch_id: int) -> None:
         topk_microbatch(batch_df, batch_id, out_dir, key_sql, m_candidates)
 
-    writer = (
-        event_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(event_stream, one_batch, checkpoint_dir)
 
 
 def merged_sketch(spark: SparkSession, out_dir: str) -> DataFrame | None:

@@ -38,13 +38,13 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import spark_hash32
 from ..incremental.store import (
+    _READ_ALL_ID,
     BATCH_COL,
     commit_batch_partition,
     read_store_excluding_batch,
 )
 
 _LINE_SEED = "bpline"
-_READ_ALL_ID = "__reader__"  # excludes nothing: Spark batch ids are ints
 
 
 def _line_hash(col: str) -> str:

@@ -12,7 +12,7 @@ import boto3
 import pytest
 from pyspark.sql import functions as F
 
-from dataworks_audit_data_ingest_spark.ingest import IngestConfig
+from dataworks_audit_data_ingest_spark.ingest import IngestConfig, run_ingest
 from dataworks_audit_data_ingest_spark.streaming import (
     dedup_events_within_watermark,
     start_encrypted_ingest_stream,
@@ -22,6 +22,26 @@ from dataworks_audit_data_ingest_spark.streaming import (
 from dataworks_audit_data_ingest_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
+
+
+def _cfg(src, tmp_path, moto_s3, pub_pem, bucket):
+    boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3).create_bucket(
+        Bucket=bucket,
+        CreateBucketConfiguration={"LocationConstraint": "eu-west-2"},
+    )
+    return IngestConfig(
+        src_dir=str(src),
+        s3_bucket=bucket,
+        s3_prefix="stream/",
+        hsm_key_id="cloudhsm:1,2",
+        rsa_public_key_pem=pub_pem,
+        progress_file=str(tmp_path / f"{bucket}-progress.txt"),
+        s3_endpoint_url=moto_s3,
+        extra_boto_kwargs={
+            "aws_access_key_id": "testing",
+            "aws_secret_access_key": "testing",
+        },
+    )
 
 
 @pytest.fixture()
@@ -108,23 +128,7 @@ def test_encrypted_stream_checkpoint_resume(
     (src / "2021-01-01").mkdir(parents=True)
     (src / "2021-01-01" / "f1.json").write_bytes(b'{"id":"1"}')
     bucket = "stream-bucket"
-    boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3).create_bucket(
-        Bucket=bucket,
-        CreateBucketConfiguration={"LocationConstraint": "eu-west-2"},
-    )
-    cfg = IngestConfig(
-        src_dir=str(src),
-        s3_bucket=bucket,
-        s3_prefix="stream/",
-        hsm_key_id="cloudhsm:1,2",
-        rsa_public_key_pem=pub_pem,
-        progress_file=str(tmp_path / "unused-progress.txt"),
-        s3_endpoint_url=moto_s3,
-        extra_boto_kwargs={
-            "aws_access_key_id": "testing",
-            "aws_secret_access_key": "testing",
-        },
-    )
+    cfg = _cfg(src, tmp_path, moto_s3, pub_pem, bucket)
     ckpt = str(tmp_path / "stream-ckpt")
     s3 = boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3)
 
@@ -158,6 +162,39 @@ def test_encrypted_stream_checkpoint_resume(
         "stream/2021-01-01/f1.json.gz.enc",
         "stream/2021-01-02/f2.json.gz.enc",
     }
+
+
+def test_stream_uploads_exactly_the_keys_run_ingest_uploads(
+    spark, tmp_path, moto_s3, rsa_keypair
+):
+    """The day rule holds for both paths: a file counts only when it sits
+    directly in a day directory directly under ``src_dir``. Day
+    directories under a non-day one or nested in a day, even the same
+    day, are skipped by the stream as by ``run_ingest``."""
+    _, pub_pem = rsa_keypair
+    src = tmp_path / "audit src"  # a space: paths compare in decoded form
+    for rel in (
+        "2020-10-09/a",
+        "x/2020-10-10/b",
+        "2020-10-11/2020-10-12/c",
+        "2020-10-11/d",
+        "2020-10-11/2020-10-11/e",
+    ):
+        (src / rel).parent.mkdir(parents=True, exist_ok=True)
+        (src / rel).write_bytes(rel.encode())
+    s3 = boto3.client("s3", region_name="eu-west-2", endpoint_url=moto_s3)
+
+    batch = _cfg(src, tmp_path, moto_s3, pub_pem, "parity-batch")
+    run_ingest(spark, batch)
+    stream = _cfg(src, tmp_path, moto_s3, pub_pem, "parity-stream")
+    q = start_encrypted_ingest_stream(spark, stream, str(tmp_path / "parity-ckpt"))
+    assert q.awaitTermination(120), "drain did not terminate within 120s"
+
+    def keys(bucket):
+        return {o["Key"] for o in s3.list_objects_v2(Bucket=bucket).get("Contents", [])}
+
+    assert keys("parity-batch") == {"stream/2020-10-09/a.gz.enc", "stream/2020-10-11/d.gz.enc"}
+    assert keys("parity-stream") == keys("parity-batch")
 
 
 def test_stream_stream_join(spark, tmp_path, events_json_dir):
