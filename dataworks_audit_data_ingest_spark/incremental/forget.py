@@ -39,7 +39,12 @@ from pyspark.sql import functions as F
 
 from ..functions.localrel import local_rows_df
 
-from .store import _list_partitions, commit_batch_partition
+from .store import (
+    _hadoop_fs,
+    _list_for_rewrite,
+    _list_status,
+    commit_batch_partition,
+)
 
 
 def forget_ids_from_store(
@@ -58,7 +63,7 @@ def forget_ids_from_store(
     """
     if not ids:
         return {}
-    listed = _list_partitions(spark, store_path)
+    listed = _list_for_rewrite(spark, store_path)
     if listed is None:
         return {}
     fs, jvm, dirs = listed
@@ -127,7 +132,7 @@ def forget_matching_from_store(
     ``exclude_batch``: a partition to leave untouched — the CC forget's
     staged repair partition, which holds the POST-erasure labels and must
     survive the erasure pass that removes the pre-erasure rows."""
-    listed = _list_partitions(spark, store_path)
+    listed = _list_for_rewrite(spark, store_path)
     if listed is None:
         return {}
     fs, jvm, dirs = listed
@@ -202,12 +207,6 @@ def forget_matching_from_store(
 _PENDING_PREFIX = "_forget_pending_"
 
 
-def _root_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
 def persist_forget_intent(
     spark: SparkSession,
     root: str,
@@ -244,7 +243,7 @@ def persist_forget_intent(
     ids.write.parquet(f"{pend}/ids")
     persisted = spark.read.parquet(f"{pend}/ids")
     if persisted.limit(1).count() == 0:
-        fs, jvm = _root_fs(spark, root)
+        fs, jvm = _hadoop_fs(spark, root)
         fs.delete(jvm.org.apache.hadoop.fs.Path(pend), True)
         return None
     local_rows_df(
@@ -260,19 +259,9 @@ def pending_forget_intents(spark: SparkSession, root: str) -> list[dict]:
     is an erasure that may have crashed mid-way and MUST be replayed).
     Torn intents (no meta ``_SUCCESS`` — crash before any mutation
     began) are rolled back here."""
-    from py4j.protocol import Py4JJavaError
-
-    fs, jvm = _root_fs(spark, root)
-    try:
-        statuses = fs.listStatus(jvm.org.apache.hadoop.fs.Path(root))
-    except Py4JJavaError as e:
-        if e.java_exception.getClass().getName().endswith(
-            "FileNotFoundException"
-        ):
-            return []
-        raise
+    fs, jvm, statuses = _list_status(spark, root)
     out: list[dict] = []
-    for s in statuses:
+    for s in statuses or ():
         name = s.getPath().getName()
         if not name.startswith(_PENDING_PREFIX):
             continue
@@ -299,7 +288,7 @@ def pending_forget_intents(spark: SparkSession, root: str) -> list[dict]:
 
 def clear_forget_intent(spark: SparkSession, root: str, token: str) -> None:
     """Commit point of a durable forget: every store is clean."""
-    fs, jvm = _root_fs(spark, root)
+    fs, jvm = _hadoop_fs(spark, root)
     fs.delete(
         jvm.org.apache.hadoop.fs.Path(f"{root}/{_PENDING_PREFIX}{token}"),
         True,

@@ -38,7 +38,10 @@ Scale levers, in the order they matter at 100 TB:
   broadcast joins against pruned store scans — no exchange of stored
   rows at all.
 - **O(1) partition count over a long-lived job** via
-  `incremental/store.py::compact_store` on all three stores.
+  `incremental/store.py::compact_store` on all three stores — the
+  family's one staged-swap crash protocol, whose every crash point
+  leaves either the old partitions or the folded one visible, never
+  both (a doubled old side would double every cross-batch pair).
   COMPACTION PRECONDITION, stronger than the dedup family's: the fold
   dedups rows, and join-view rows are NOT inherently a set — two
   identical left rows matching one right row legitimately yield two
@@ -69,29 +72,17 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.localrel import local_rows_df
 from .store import (
     _sized,
     BATCH_COL,
-    COMPACTED_ID,
+    BUCKET_COL,
+    _list_for_rewrite,
     _list_partitions,
     _valid_id,
     commit_batch_partition,
+    compact_store,
     read_store_excluding_batch,
 )
-
-BUCKET_COL = "__jv_bucket__"
-
-# compaction protocol markers (module docstring, "Compaction"): the fold
-# lands in a _-prefixed staging dir (invisible to every store read),
-# a commit manifest makes the swap durable, and recovery replays the
-# swap — so a crash anywhere leaves either the OLD partitions or the
-# folded one visible, never both. The shared compact_store's
-# write-first/delete-second window is fine for set-membership stores
-# (duplicates are harmless there) but NOT here: a doubled old side
-# would double every cross-batch pair in the next delta.
-_FOLD_TMP = "_jv_fold_tmp_"
-_FOLD_COMMIT = "_jv_fold_commit_"
 
 
 @dataclass(frozen=True)
@@ -114,7 +105,7 @@ class JoinViewSpec:
             raise ValueError("n_buckets must be >= 0")
 
 
-def _side_path(root: str, side: str) -> str:
+def side_path(root: str, side: str) -> str:
     return f"{root}/{side}"
 
 
@@ -133,32 +124,14 @@ def _check_delta(df: DataFrame, spec: JoinViewSpec, side: str) -> None:
         )
 
 
-def _reject_dup_ids(df: DataFrame, id_col: str, side: str) -> DataFrame:
-    """Batch-unique ids make every store row unique (compaction safety —
-    module docstring). One aggregate over the (persisted) delta."""
-    dup = (
-        df.groupBy(id_col)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"{side} delta repeats {id_col}={dup[0][0]!r} within the "
-            "batch; per-side ids must be unique for the view store to "
-            "stay compaction-safe (see incremental/joinview.py)"
-        )
-    return df
-
-
 def _persist_count_dedup(
     df: DataFrame, id_col: str, side: str
 ) -> tuple[DataFrame, int]:
-    """localCheckpoint + row count + the _reject_dup_ids guard in ONE
+    """localCheckpoint + row count + the batch-unique id guard in ONE
     Spark job (the eager checkpoint, the count and the dup probe were
     three separate actions; per-job overhead dominated the incremental
-    drills at fixture scale). Same count, same error, same message."""
+    drills at fixture scale). Batch-unique ids make every store row
+    unique (compaction safety — module docstring)."""
     df = df.localCheckpoint(eager=False)
     row = (
         df.groupBy(id_col)
@@ -179,7 +152,7 @@ def _persist_count_dedup(
     return df, int(row["n"])
 
 
-def _commit_side(
+def commit_side(
     df: DataFrame,
     store: str,
     batch_id: str,
@@ -221,7 +194,6 @@ def _old_side(
 
     The bucket set comes off a distinct over the (small) delta —
     at most ``n_buckets`` ints ever reach the driver."""
-    _recover_compaction(spark, store)
     if not spec.n_buckets:
         return read_store_excluding_batch(spark, store, batch_id)
     # bucketed layout: the surviving batch directories each contain
@@ -321,11 +293,9 @@ def update_join_view(
             right_delta, spec.right_id, "right"
         )
 
-    left_store = _side_path(root, "left")
-    right_store = _side_path(root, "right")
-    view_store = _side_path(root, "view")
-    for store in (left_store, right_store, view_store):
-        _recover_compaction(spark, store)
+    left_store = side_path(root, "left")
+    right_store = side_path(root, "right")
+    view_store = side_path(root, "view")
 
     # each old side is only ever joined against the OTHER side's delta,
     # so when that delta is absent the store is not read at all
@@ -384,28 +354,22 @@ def update_join_view(
         view_delta = view_delta.localCheckpoint(eager=False)
         counts["view_delta_rows"] = view_delta.count()
         # flat layout for the view store: its reads are whole-view
-        _commit_plain(view_delta, view_store, batch_id, counts["view_delta_rows"])
+        commit_batch_partition(
+            view_delta, view_store, batch_id, counts["view_delta_rows"]
+        )
     # side commits LAST: on any crash ordering the replay finds either
     # no trace of this batch or its own (excluded-on-read) partitions,
     # and recomputes the identical delta either way
     if left_delta is not None:
-        _commit_side(left_delta, left_store, batch_id, spec, counts["left_rows"])
+        commit_side(left_delta, left_store, batch_id, spec, counts["left_rows"])
     if right_delta is not None:
-        _commit_side(right_delta, right_store, batch_id, spec, counts["right_rows"])
+        commit_side(right_delta, right_store, batch_id, spec, counts["right_rows"])
     return counts
-
-
-def _commit_plain(
-    df: DataFrame, store: str, batch_id: str, rows: int | None = None
-) -> None:
-    # the shared store commit IS this discipline — one definition
-    commit_batch_partition(df, store, batch_id, rows)
 
 
 def _read_all(spark: SparkSession, store: str) -> DataFrame | None:
     """Every batch partition of a store (directory-addressed, like all
     store reads), or ``None`` when the store has no partitions yet."""
-    _recover_compaction(spark, store)
     listed = _list_partitions(spark, store)
     if listed is None:
         return None
@@ -427,7 +391,7 @@ def read_join_view(spark: SparkSession, root: str) -> DataFrame | None:
     """The materialized view: union of every committed batch delta.
     Equals ``A_all ⋈ B_all`` after any prefix of updates (drill-pinned
     in `tests/test_join_view.py`). ``None`` -> no matches yet."""
-    view = _read_all(spark, _side_path(root, "view"))
+    view = _read_all(spark, side_path(root, "view"))
     if view is not None and BUCKET_COL in view.columns:
         view = view.drop(BUCKET_COL)
     return view
@@ -444,8 +408,7 @@ def read_join_view_delta(
     maintains a continuous aggregate OVER the maintained join).
     ``None`` when the batch produced no matches. Unavailable for batches
     already folded by compaction — consume deltas before folding them."""
-    store = _side_path(root, "view")
-    _recover_compaction(spark, store)
+    store = side_path(root, "view")
     listed = _list_partitions(spark, store)
     if listed is None:
         return None
@@ -465,7 +428,7 @@ def read_join_side(
     detail."""
     if side not in ("left", "right"):
         raise ValueError(f"side must be 'left' or 'right', got {side!r}")
-    df = _read_all(spark, _side_path(root, side))
+    df = _read_all(spark, side_path(root, side))
     if df is not None and BUCKET_COL in df.columns:
         df = df.drop(BUCKET_COL)
     return df
@@ -478,207 +441,25 @@ def compact_join_view(
     exclude: tuple[str, ...] = (),
 ) -> dict[str, int]:
     """Fold every store's batch partitions into ``batch_id=__compacted__``
-    — `incremental/store.py::compact_store`'s semantics (same hard
-    precondition: ``exclude`` any batch that may replay), made
-    bucket-aware for the side stores: a bucketed store folds per
-    ``(batch, bucket)`` so the compacted partition keeps the directory
-    level the pruned reads rely on (the shared compactor's flat fold
-    would mix layouts and poison every later read with conflicting
-    partition columns). Returns per-store removed-directory counts."""
+    with `incremental/store.py::compact_store` (same hard precondition:
+    ``exclude`` any batch that may replay). A bucketed side store folds
+    per ``(batch, bucket)`` so the compacted partition keeps the
+    directory level the pruned reads rely on (a flat fold would mix
+    layouts and poison every later read with conflicting partition
+    columns). Returns per-store removed-directory counts."""
     recover_pending_forgets(spark, root)
-    out = {}
-    for side in ("left", "right"):
-        out[side] = _compact_store_safe(
+    out = {
+        side: compact_store(
             spark,
-            _side_path(root, side),
+            side_path(root, side),
             exclude,
             bucketed=bool(spec.n_buckets),
         )
+        for side in ("left", "right")
+    }
     # the view store is always flat
-    out["view"] = _compact_store_safe(
-        spark, _side_path(root, "view"), exclude, bucketed=False
-    )
+    out["view"] = compact_store(spark, side_path(root, "view"), exclude)
     return out
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
-def _recover_compaction(spark: SparkSession, store: str) -> None:
-    """Finish (or roll back) a compaction interrupted by a crash — run
-    before every store read/update/compact, so the swap protocol's only
-    externally visible states are before-the-fold and after-it.
-
-    A ``_jv_fold_tmp_<tok>`` WITHOUT its ``_jv_fold_commit_<tok>``
-    crashed mid-fold: the originals are untouched, so the staging dir is
-    simply deleted. A commit marker means the fold is complete and
-    durable: re-execute the swap — delete the manifested originals,
-    move the staged ``batch_id=__compacted__`` into place, clear the
-    markers — every step idempotent."""
-    from py4j.protocol import Py4JJavaError
-
-    fs, jvm = _hadoop_fs(spark, store)
-    root = jvm.org.apache.hadoop.fs.Path(store)
-    try:
-        statuses = fs.listStatus(root)
-    except Py4JJavaError as e:
-        if e.java_exception.getClass().getName().endswith(
-            "FileNotFoundException"
-        ):
-            return
-        raise
-    names = {s.getPath().getName() for s in statuses}
-    tmps = {n[len(_FOLD_TMP):] for n in names if n.startswith(_FOLD_TMP)}
-    commits = set()
-    for n in names:
-        if not n.startswith(_FOLD_COMMIT):
-            continue
-        tok = n[len(_FOLD_COMMIT):]
-        # torn-vs-complete decided on the manifest's OWN _SUCCESS (the
-        # rollup sidecar lesson): a manifest dir without it crashed
-        # mid-write and must be rolled back, not replayed
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{store}/{n}/_SUCCESS")
-        ):
-            commits.add(tok)
-        else:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store}/{n}"), True)
-    for tok in tmps - commits:
-        # crashed before the commit point: originals stand, drop staging
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store}/{_FOLD_TMP}{tok}"), True)
-    for tok in sorted(commits):
-        _complete_fold(spark, store, tok)
-
-
-def _complete_fold(spark: SparkSession, store: str, tok: str) -> None:
-    fs, jvm = _hadoop_fs(spark, store)
-
-    def _p(rel: str):
-        return jvm.org.apache.hadoop.fs.Path(f"{store}/{rel}")
-
-    # NOTE: this read logs "WARN DataSource: All paths were ignored"
-    # because the manifest dir is _-prefixed (which is exactly what
-    # hides it from store reads) — Spark warns but still reads an
-    # EXPLICITLY-given path; verified empirically and pinned by the
-    # crash-window drills. The warning is benign.
-    manifest = [
-        r.dir
-        for r in spark.read.parquet(f"{store}/{_FOLD_COMMIT}{tok}").collect()
-    ]
-    compacted_dir = f"{BATCH_COL}={COMPACTED_ID}"
-    # old __compacted__ (always in the manifest when it existed) goes
-    # first so the rename target is free; then swap; then the rest
-    if compacted_dir in manifest and fs.exists(_p(compacted_dir)):
-        staged = _p(f"{_FOLD_TMP}{tok}/{compacted_dir}")
-        if fs.exists(staged):  # not yet swapped -> old dir is pre-fold
-            fs.delete(_p(compacted_dir), True)
-    staged = _p(f"{_FOLD_TMP}{tok}/{compacted_dir}")
-    if fs.exists(staged) and not fs.exists(_p(compacted_dir)):
-        fs.rename(staged, _p(compacted_dir))
-    for d in manifest:
-        if d != compacted_dir and fs.exists(_p(d)):
-            fs.delete(_p(d), True)
-    fs.delete(_p(f"{_FOLD_TMP}{tok}"), True)
-    fs.delete(_p(f"{_FOLD_COMMIT}{tok}"), True)
-
-
-def _compact_store_safe(
-    spark: SparkSession,
-    store: str,
-    exclude: tuple[str, ...],
-    *,
-    bucketed: bool,
-    fold_fn=None,
-    rank_col: str | None = None,
-) -> int:
-    """Fold with the staged-swap protocol (module comment at
-    ``_FOLD_TMP``): stage the fold in a _-prefixed dir (store reads
-    never see it), durably commit a manifest of the folded directories,
-    then swap — crash anywhere and :func:`_recover_compaction` lands the
-    store in exactly one of the two consistent states. Bucket-aware:
-    a bucketed store folds per ``(batch, bucket)`` so the compacted
-    partition keeps the directory level the pruned reads rely on.
-
-    ``fold_fn`` customizes the fold (default: ``distinct()`` — the
-    set-membership stores' semantics); it receives the foldable rows
-    WITHOUT the batch column and must return the folded rows. With
-    ``rank_col`` set, each foldable directory is read individually and
-    tagged with its TRUSTED batch rank under that name (the compacted
-    partition ranks ``""``, before every live id — the CDC op stores'
-    resolution order; the type-inferred partition column would misorder
-    "10" vs 9), and excluded batches must all sort after every foldable
-    one so the fold cannot re-order op history."""
-    import uuid
-
-    _recover_compaction(spark, store)
-    listed = _list_partitions(spark, store)
-    if listed is None:
-        return 0
-    fs, jvm, dirs = listed
-    if isinstance(exclude, str):
-        raise TypeError(
-            "exclude must be a sequence of batch ids, not a bare string; "
-            f"pass exclude=({exclude!r},)"
-        )
-    excluded = {_valid_id(x) for x in exclude}
-    foldable = sorted(set(dirs) - (excluded - {COMPACTED_ID}))
-    if foldable in ([], [COMPACTED_ID]):
-        return 0
-    if rank_col is not None:
-        live_folds = [b for b in foldable if b != COMPACTED_ID]
-        misordered = [
-            x
-            for x in excluded & set(dirs)
-            if x != COMPACTED_ID and any(x < b for b in live_folds)
-        ]
-        if misordered:
-            raise ValueError(
-                f"excluded batch(es) {sorted(misordered)} sort before a "
-                "foldable batch; folding around them would misorder the "
-                "op history (compacted ranks first) — exclude only the "
-                "newest batches"
-            )
-        parts = []
-        for bid in foldable:
-            part = spark.read.parquet(f"{store}/{dirs[bid]}")
-            parts.append(
-                part.withColumn(
-                    rank_col,
-                    F.lit("" if bid == COMPACTED_ID else bid),
-                )
-            )
-        rows = parts[0]
-        for p in parts[1:]:
-            rows = rows.unionByName(p)
-    else:
-        rows = (
-            spark.read.option("basePath", store)
-            .parquet(*[f"{store}/{dirs[bid]}" for bid in foldable])
-            .drop(BATCH_COL)
-        )
-    if fold_fn is None:
-        folded = rows.distinct()
-    else:
-        folded = fold_fn(rows)
-    folded = folded.withColumn(BATCH_COL, F.lit(COMPACTED_ID))
-    tok = uuid.uuid4().hex[:12]
-    parts = [BATCH_COL, BUCKET_COL] if bucketed else [BATCH_COL]
-    folded.write.mode("overwrite").partitionBy(*parts).parquet(
-        f"{store}/{_FOLD_TMP}{tok}"
-    )
-    # the commit point: once this manifest exists the fold is the truth
-    # (an Arrow local relation: createDataFrame(list)'s python-RDD write
-    # costs ~4 s per fold at local[32] — functions/localrel.py)
-    local_rows_df(
-        spark, [(dirs[bid],) for bid in foldable], "dir string"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{store}/{_FOLD_COMMIT}{tok}"
-    )
-    _complete_fold(spark, store, tok)
-    return sum(1 for bid in foldable if bid != COMPACTED_ID)
 
 
 def forget_left_ids_from_join_view(
@@ -699,7 +480,7 @@ def forget_left_ids_from_join_view(
     derived from the store the crash half-erased and a retry would
     re-derive an empty set. The left store is erased first, so no
     future batch can rejoin against surviving source rows."""
-    return _forget_side(
+    return forget_side(
         spark, root, ids_df, spec, "left", audit_path=audit_path
     )
 
@@ -713,12 +494,12 @@ def forget_right_ids_from_join_view(
     audit_path: str | None = None,
 ) -> dict[str, int]:
     """Right-side twin of :func:`forget_left_ids_from_join_view`."""
-    return _forget_side(
+    return forget_side(
         spark, root, ids_df, spec, "right", audit_path=audit_path
     )
 
 
-def _forget_side(
+def forget_side(
     spark: SparkSession,
     root: str,
     ids_df: DataFrame,
@@ -803,9 +584,7 @@ def _erase_side(
 ) -> dict[str, int]:
     from .forget import forget_matching_from_store
 
-    store = _side_path(root, side)
-    _recover_compaction(spark, store)
-    _recover_compaction(spark, _side_path(root, "view"))
+    store = side_path(root, side)
     # side store first: once the source rows are gone no future batch
     # can emit new view rows for these ids, so the view erasure can
     # never be outrun
@@ -822,7 +601,7 @@ def _erase_side(
         )
     view_removed = forget_matching_from_store(
         spark,
-        _side_path(root, "view"),
+        side_path(root, "view"),
         ids,
         id_col=id_col,
         audit_path=audit_path,
@@ -846,7 +625,7 @@ def _forget_bucketed(
     the ids are touched; within them only the buckets with hits are
     rewritten (dynamic overwrite), and a bucket left empty is deleted
     outright. Idempotent — a re-run finds no hits."""
-    listed = _list_partitions(spark, store)
+    listed = _list_for_rewrite(spark, store)
     if listed is None:
         return {}
     fs, jvm, dirs = listed

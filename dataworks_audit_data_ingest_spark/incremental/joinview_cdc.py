@@ -62,13 +62,10 @@ from pyspark.sql import functions as F
 from .joinview import (
     BUCKET_COL,
     JoinViewSpec,
-    _commit_side,
-    _compact_store_safe,
-    _forget_side,
-    _recover_compaction,
-    _reject_dup_ids,
-    _side_path,
+    commit_side,
+    forget_side,
     recover_pending_forgets,
+    side_path,
 )
 from .store import (
     BATCH_COL,
@@ -76,6 +73,7 @@ from .store import (
     _list_partitions,
     _valid_id,
     commit_batch_partition,
+    compact_store,
 )
 
 OP_COL = "__cdc_op__"
@@ -196,7 +194,7 @@ def _validate_monotone(
     """CDC resolution orders ops by batch id, so ids must arrive in
     lexicographic order; only the newest batch may repeat (replay)."""
     for side in ("left", "right", "view"):
-        listed = _list_partitions(spark, _side_path(root, side))
+        listed = _list_partitions(spark, side_path(root, side))
         if listed is None:
             continue
         _, _, dirs = listed
@@ -227,7 +225,6 @@ def _ops_current(
     column misorders "10" vs 9 — store.py's identity lesson), with the
     bucket filter applied per directory for file-level pruning when the
     layout is bucketed and a probe delta is given."""
-    _recover_compaction(spark, store)
     listed = _list_partitions(spark, store)
     if listed is None:
         return None
@@ -405,7 +402,7 @@ def update_join_view_cdc(
         if ups is not None:
             _check_cols(ups, [spec.key, id_col, *seq_req], f"{side} upserts")
             # checkpoint + count + NULL guard + dup-id guard: ONE job
-            # (message text matches _reject_nulls/_reject_dup_ids)
+            # (message text matches _reject_nulls and joinview's dup-id guard)
             ups, side_counts[f"{side}_upserts"], _ = _persist_checked_feed(
                 ups,
                 [spec.key, id_col, *seq_req],
@@ -490,9 +487,9 @@ def update_join_view_cdc(
                 "rename before maintaining the view"
             )
 
-    left_store = _side_path(root, "left")
-    right_store = _side_path(root, "right")
-    view_store = _side_path(root, "view")
+    left_store = side_path(root, "left")
+    right_store = side_path(root, "right")
+    view_store = side_path(root, "view")
 
     # one probe set per opposite store: every key this batch touches —
     # the union bounds every pruned read below (module delta rule)
@@ -750,7 +747,7 @@ def update_join_view_cdc(
                 tomb = tomb.withColumn(OP_COL, F.lit("d"))
                 ops = tomb if ops is None else ops.unionByName(tomb)
         if ops is not None:
-            _commit_side(
+            commit_side(
                 ops,
                 store,
                 batch_id,
@@ -787,8 +784,7 @@ def read_join_view_cdc(spark: SparkSession, root: str) -> DataFrame | None:
     """The live view: net-positive z-set rows (merge-on-read). Equals
     ``current_A ⋈ current_B`` after any prefix of CDC batches
     (invariant-drilled). ``None`` -> nothing committed yet."""
-    store = _side_path(root, "view")
-    _recover_compaction(spark, store)
+    store = side_path(root, "view")
     listed = _list_partitions(spark, store)
     if listed is None:
         return None
@@ -820,8 +816,7 @@ def read_join_view_cdc_delta(
     read instead. ``None`` when the batch produced no view change.
     Unavailable once folded by compaction — consume deltas before
     folding them."""
-    store = _side_path(root, "view")
-    _recover_compaction(spark, store)
+    store = side_path(root, "view")
     listed = _list_partitions(spark, store)
     if listed is None:
         return None
@@ -843,7 +838,7 @@ def read_current_side(
     id_col = spec.left_id if side == "left" else spec.right_id
     return _ops_current(
         spark,
-        _side_path(root, side),
+        side_path(root, side),
         # a "/" can never appear in a partition directory name, so no
         # batch is excluded: this reads the WHOLE resolved side
         "never/a/batch",
@@ -880,7 +875,7 @@ def compact_join_view_cdc(
     seq_col: str | None = None,
 ) -> dict[str, int]:
     """Fold each store to its SEMANTIC state under the staged-swap crash
-    protocol (`joinview._compact_store_safe`): the sides fold to their
+    protocol (`store.compact_store`): the sides fold to their
     resolved current rows (absorbed tombstones disappear — the op log
     becomes a snapshot), the view folds to its net-positive rows with
     ``+1`` signs. Same hard precondition as every compactor (``exclude``
@@ -915,13 +910,13 @@ def compact_join_view_cdc(
                 folded = folded.filter(F.col(OP_COL) == "u")
             return folded.drop(_RANK_COL, "__rn__")
 
-        return _compact_store_safe(
+        return compact_store(
             spark,
-            _side_path(root, side),
+            side_path(root, side),
             exclude,
-            bucketed=bool(spec.n_buckets),
-            fold_fn=_fold_ops,
+            fold=_fold_ops,
             rank_col=_RANK_COL,
+            bucketed=bool(spec.n_buckets),
         )
 
     def _fold_view(df: DataFrame) -> DataFrame:
@@ -937,12 +932,11 @@ def compact_join_view_cdc(
         )
 
     def _fold_view_store() -> int:
-        return _compact_store_safe(
+        return compact_store(
             spark,
-            _side_path(root, "view"),
+            side_path(root, "view"),
             exclude,
-            bucketed=False,
-            fold_fn=_fold_view,
+            fold=_fold_view,
             rank_col=_RANK_COL,
         )
 
@@ -1009,4 +1003,4 @@ def _forget_cdc(
     # replayed by recover_pending_forgets (called automatically here
     # and by compaction) instead of silently re-deriving an empty set
     # from the half-erased store.
-    return _forget_side(spark, root, ids_df, spec, side, audit_path=audit_path)
+    return forget_side(spark, root, ids_df, spec, side, audit_path=audit_path)

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .joinview import _recover_compaction, _side_path
+from .joinview import side_path
 from .joinview_cdc import DIFF_COL, read_join_view_cdc
 from .store import (
     BATCH_COL,
@@ -59,8 +59,7 @@ def ship_view_deltas(
     :func:`repair_replica` (a replica that kept up is unaffected: its
     already-shipped partitions net to the same prefix the fold
     collapsed)."""
-    store = _side_path(root, "view")
-    _recover_compaction(spark, store)
+    store = side_path(root, "view")
     listed = _list_partitions(spark, store)
     if listed is None:
         return {"shipped": [], "audit_recommended": False}

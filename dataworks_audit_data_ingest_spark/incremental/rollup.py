@@ -18,12 +18,12 @@ count, exact-cents sum, min, max — so that
   mergeable (a coarser store could only approximate it), and they make
   GDPR forget exact (erase the subject's rows; no other key is touched
   and no raw-event recompute is needed).
-- **compaction is additive, NOT set-membership**: the dedup rungs'
-  :func:`~.store.compact_store` folds with ``distinct()`` and tolerates
-  crash-duplicated rows; additive partials tolerate neither. The
-  compactor here therefore runs a sidecar protocol (claim → fold →
-  GC) in which every crash point leaves readers consistent — see
-  :func:`compact_rollup_store`.
+- **compaction is additive, NOT set-membership**: the fold sums the
+  partials at the grain instead of taking ``distinct()`` (two batches'
+  identical partials are two contributions, not one row). It runs under
+  the family's one crash protocol, :func:`~.store.compact_store`'s
+  staged swap, whose every crash point leaves a reader consistent — a
+  folded partial is never counted beside its originals.
 
 When the per-user grain is itself too large (key space ~ the corpus —
 billions of users × wide grids), the bounded-state alternative is the
@@ -43,22 +43,15 @@ continuous-aggregate / hypertable-rollup shape.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.localrel import local_rows_df
-
-from .store import BATCH_COL, _list_partitions, _valid_id, commit_batch_partition
+from .store import _list_partitions, commit_batch_partition, compact_store
 
 # exact integer cents — the portable money idiom (queries/base.py): FLOOR
 # half-up at two decimals, summed as BIGINT, associative under any merge
 # order and identical on every engine
 _CENTS = "CAST(FLOOR({col} * 100 + 0.5) AS BIGINT)"
-
-_COMPACT_PREFIX = "_rollup_compact_"  # sidecar files (invisible to reads)
-_COMPACT_PART = "__compacted_{token}__"  # fold target partition ids
 
 
 def rollup_partials(
@@ -119,125 +112,14 @@ def update_rollup_store(
     commit_batch_partition(partials, store_path, batch_id)
 
 
-def _sidecar_entries(spark, store_path: str, fs, jvm):
-    """Classify every compaction sidecar in the store:
-    ``[(name, torn, target, folded_ids)]``.
-
-    A sidecar is TORN (crashed during its own write — which precedes any
-    fold write, so the originals are intact) exactly when its own
-    ``_SUCCESS`` marker is missing; a complete sidecar that then fails to
-    READ has a real IO problem and the error PROPAGATES — the store
-    family's discipline (`store.py`): a swallowed read error here would
-    let a reader count a complete fold's target AND its claimed
-    originals, silently doubling every partial."""
-    root = jvm.org.apache.hadoop.fs.Path(store_path)
-    out = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if not name.startswith(_COMPACT_PREFIX):
-            continue
-        if not fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{store_path}/{name}/_SUCCESS")
-        ):
-            out.append((name, True, None, frozenset()))
-            continue
-        side = spark.read.parquet(f"{store_path}/{name}").collect()
-        out.append(
-            (
-                name,
-                False,
-                side[0]["target"],
-                frozenset(r["folded_id"] for r in side),
-            )
-        )
-    return out
-
-
-def _target_complete(store_path: str, target: str, fs, jvm) -> bool:
-    return fs.exists(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{store_path}/{BATCH_COL}={target}/_SUCCESS"
-        )
+def _merge_partials(rows: DataFrame) -> DataFrame:
+    """Sum partials at the grain: the read-side merge and the fold."""
+    return rows.groupBy("day", "event_type", "user_id").agg(
+        F.sum("n_events").alias("n_events"),
+        F.sum("sum_cents").alias("sum_cents"),
+        F.min("min_cents").alias("min_cents"),
+        F.max("max_cents").alias("max_cents"),
     )
-
-
-def _live_partition_dirs(
-    spark: SparkSession, store_path: str
-) -> dict[str, str] | None:
-    """``{batch_id -> directory name}`` of the partitions a reader should
-    see, resolving any in-flight compaction to a consistent cut:
-
-    - a COMPLETE fold (sidecar complete, target partition has _SUCCESS):
-      the target is live; originals the sidecar claims are excluded even
-      if their GC delete has not happened yet (counting both would
-      double-count every partial in them);
-    - an INCOMPLETE fold (sidecar complete, target absent or missing
-      _SUCCESS): the target is excluded, the originals remain live — the
-      crashed compactor never became visible;
-    - a TORN sidecar (its own _SUCCESS missing — crash during the sidecar
-      write, before any fold write): ignored, originals live. Read errors
-      on a complete sidecar PROPAGATE (see :func:`_sidecar_entries`).
-
-    Returns ``None`` when the store does not exist (first batch)."""
-    listed = _list_partitions(spark, store_path)
-    if listed is None:
-        return None
-    fs, jvm, dirs = listed
-    live = dict(dirs)
-    for _, torn, target, folded in _sidecar_entries(
-        spark, store_path, fs, jvm
-    ):
-        if torn:
-            continue
-        if target in live and _target_complete(store_path, target, fs, jvm):
-            for b in folded:
-                live.pop(b, None)
-        else:
-            live.pop(target, None)
-    return live
-
-
-def _resolve_pending_compactions(
-    spark: SparkSession, store_path: str
-) -> None:
-    """Finish or abort every pending compaction so the store holds no
-    sidecars and no claimed-but-undeleted originals: torn sidecars are
-    deleted (fold never started); complete folds get their claimed
-    originals GC'd then the sidecar removed; incomplete folds have the
-    half-written target aborted then the sidecar removed. Shared by the
-    compactor (its first pass) and the forget path — mutating a store
-    with unresolved claims would otherwise erase/count a subject's rows
-    once per surviving copy."""
-    listed = _list_partitions(spark, store_path)
-    if listed is None:
-        return
-    fs, jvm, dirs = listed
-    for name, torn, target, folded in _sidecar_entries(
-        spark, store_path, fs, jvm
-    ):
-        spath = jvm.org.apache.hadoop.fs.Path(f"{store_path}/{name}")
-        if torn:
-            fs.delete(spath, True)
-            continue
-        if _target_complete(store_path, target, fs, jvm):
-            for b in folded:  # complete fold: GC the claimed originals
-                # sidecar ids are UNESCAPED; address the directory through
-                # the listing (Hadoop %XX-escapes partition values — an id
-                # like "2026-08-16T00:00" would miss its own directory if
-                # the path were rebuilt from the raw id)
-                d = dirs.get(b)
-                if d is not None:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(f"{store_path}/{d}"),
-                        True,
-                    )
-        else:
-            tdir = jvm.org.apache.hadoop.fs.Path(
-                f"{store_path}/{BATCH_COL}={target}"
-            )
-            if fs.exists(tdir):
-                fs.delete(tdir, True)  # incomplete fold: abort it
-        fs.delete(spath, True)
 
 
 def read_rollup_grain(
@@ -250,22 +132,13 @@ def read_rollup_grain(
     fully-erased partitions outright, leaving only the root _SUCCESS).
     Callers treat ``None`` as an empty report. Partitions are read by
     explicit directory path (the store-family device: no
-    inferred-partition-value coercion, and the compaction cut from
-    :func:`_live_partition_dirs` applies); a store holding FOREIGN
-    content still raises, from ``_list_partitions``."""
-    live = _live_partition_dirs(spark, store_path)
-    if not live:
+    inferred-partition-value coercion); a store holding FOREIGN content
+    still raises, from ``_list_partitions``."""
+    listed = _list_partitions(spark, store_path)
+    if listed is None or not listed[2]:
         return None
-    paths = [f"{store_path}/{d}" for d in live.values()]
-    rows = spark.read.parquet(*paths)
-    return (
-        rows.groupBy("day", "event_type", "user_id")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
-            F.min("min_cents").alias("min_cents"),
-            F.max("max_cents").alias("max_cents"),
-        )
+    return _merge_partials(
+        spark.read.parquet(*[f"{store_path}/{d}" for d in listed[2].values()])
     )
 
 
@@ -292,71 +165,16 @@ def read_rollup(
 def compact_rollup_store(
     spark: SparkSession, store_path: str, exclude: tuple[str, ...] = ()
 ) -> int:
-    """Fold the live batch partitions into one fresh
-    ``__compacted_<token>__`` partition, summing partials at the grain;
-    returns the number of partitions folded (0 = nothing to do).
+    """Fold the batch partitions into ``batch_id=__compacted__``, summing
+    partials at the grain (:func:`~.store.compact_store` with this
+    store's fold — its crash protocol and its return value, the number
+    of batch directories removed).
 
     HARD PRECONDITION — ``exclude``: batches that may still REPLAY (see
     :func:`~.store.checkpoint_replayable_ids`) must be excluded. A
     replayed batch rewrites its own ``batch_id=`` partition; if that
-    partition was already folded, its partials would count twice.
-
-    Crash safety (claim → fold → GC): the sidecar naming the fold target
-    and every claimed original is durably written FIRST; the folded
-    partition is written SECOND (it becomes visible to readers only when
-    its _SUCCESS lands — until then readers keep using the originals);
-    the claimed originals and the sidecar are deleted LAST (pure GC —
-    readers already exclude claimed originals once the target is
-    complete). A re-run after any crash point either ignores the
-    half-written fold (target incomplete) and starts fresh, or completes
-    the GC. Unlike the set-membership :func:`~.store.compact_store`,
-    no crash point ever double-counts: additive state cannot shrug off
-    duplicate rows, so visibility flips atomically on _SUCCESS."""
-    if isinstance(exclude, str):
-        raise TypeError(
-            "exclude must be a tuple of batch ids, not a bare string"
-        )
-    listed = _list_partitions(spark, store_path)
-    if listed is None:
-        return 0
-    fs, jvm, _ = listed
-
-    # finish or abort any prior compaction before computing the foldable
-    # set, so this run folds a clean store
-    _resolve_pending_compactions(spark, store_path)
-
-    live = _live_partition_dirs(spark, store_path) or {}
-    excl = {_valid_id(b) for b in exclude}
-    foldable = {b: d for b, d in live.items() if b not in excl}
-    if len(foldable) <= 1:
-        return 0
-
-    token = uuid.uuid4().hex[:12]
-    target = _COMPACT_PART.format(token=token)
-    sidecar = f"{store_path}/{_COMPACT_PREFIX}{token}"
-    local_rows_df(
-        spark,
-        [(b, target) for b in sorted(foldable)],
-        "folded_id string, target string",
-    ).coalesce(1).write.parquet(sidecar)
-
-    folded_rows = spark.read.parquet(
-        *[f"{store_path}/{d}" for d in foldable.values()]
-    )
-    merged = folded_rows.groupBy("day", "event_type", "user_id").agg(
-        F.sum("n_events").alias("n_events"),
-        F.sum("sum_cents").alias("sum_cents"),
-        F.min("min_cents").alias("min_cents"),
-        F.max("max_cents").alias("max_cents"),
-    )
-    # write the target partition directly by path: _SUCCESS inside it is
-    # the visibility flip (_live_partition_dirs keys on it)
-    merged.write.parquet(f"{store_path}/{BATCH_COL}={target}")
-
-    for d in foldable.values():  # GC
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/{d}"), True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(sidecar), True)
-    return len(foldable)
+    partition was already folded, its partials would count twice."""
+    return compact_store(spark, store_path, exclude, fold=_merge_partials)
 
 
 def forget_user_from_rollup(
@@ -373,15 +191,11 @@ def forget_user_from_rollup(
     recompute is needed (the property a coarser store could not offer).
     Returns ``{batch_id: rows_erased}``. Run at quiescence, like every
     forget: a concurrently replayed batch would resurrect the partials.
-
-    Pending compactions are resolved FIRST: over crashed-compaction
-    residue (complete fold + still-present claimed originals) a blind
-    partition sweep would erase — and audit — the subject's rows once per
-    surviving copy, and rewriting the fold target would strip the
-    _SUCCESS marker its sidecar keys visibility on."""
+    Over crashed-compaction residue the store listing finishes the
+    committed fold first, so the subject's rows are erased — and
+    audited — once."""
     from .forget import forget_matching_from_store
 
-    _resolve_pending_compactions(spark, store_path)
     return forget_matching_from_store(
         spark,
         store_path,

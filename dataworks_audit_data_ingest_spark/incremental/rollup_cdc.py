@@ -25,7 +25,8 @@ Read resolution is rank-based like the CDC op log: per group, the
 LATEST snapshot wins as the base and only adds from batches AFTER it
 stack on top (``least``/``greatest`` for min/max, sums for counts);
 compaction folds the whole history to one snapshot per group under the
-staged-swap crash protocol (`joinview._compact_store_safe`).
+family's one crash protocol (`store.compact_store`), whose every crash
+point leaves a reader seeing the history or its fold, never both.
 
 A distinct-key grain (exact ``COUNT(DISTINCT user)`` under deletes) is
 this same machinery with the key IN the group columns — the report
@@ -47,12 +48,12 @@ from pyspark.sql import functions as F
 
 from ..functions.localrel import local_rows_df
 
-from .joinview import _compact_store_safe
 from .joinview_cdc import DIFF_COL, _rank_of
 from .store import (
     BATCH_COL,
     _list_partitions,
     commit_batch_partition,
+    compact_store,
 )
 
 _KIND = "__kind__"
@@ -237,10 +238,11 @@ def compact_cdc_rollup(
     group_cols: tuple[str, ...],
     exclude: tuple[str, ...] = (),
 ) -> int:
-    """Fold the history to ONE snapshot per surviving group under the
-    staged-swap crash protocol; same hard preconditions as the CDC op
-    store's compactor (``exclude`` replayable batches; excluded ids
-    must sort after every folded one — `pad_batch_id` discipline)."""
+    """Fold the history to ONE snapshot per surviving group under
+    :func:`~.store.compact_store`'s crash protocol; same hard
+    preconditions as the CDC op store's compactor (``exclude``
+    replayable batches; excluded ids must sort after every folded one —
+    `pad_batch_id` discipline)."""
     cols = list(group_cols)
 
     def _fold(df: DataFrame) -> DataFrame:
@@ -250,6 +252,4 @@ def compact_cdc_rollup(
             .withColumn(_KIND, F.lit("snap"))
         )
 
-    return _compact_store_safe(
-        spark, store, exclude, bucketed=False, fold_fn=_fold, rank_col=_RANK
-    )
+    return compact_store(spark, store, exclude, fold=_fold, rank_col=_RANK)

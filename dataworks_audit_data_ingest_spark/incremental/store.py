@@ -20,6 +20,17 @@ module is that discipline written once:
   rewrites exactly its own partition — idempotent, the same
   commit-after-success discipline as the ingest watermark
   (`audit_data_ingest.py:65-68` in the reference).
+- **Compact** (:func:`compact_store`): every store folds its old batch
+  partitions into ``batch_id=__compacted__`` under ONE crash protocol, a
+  staged swap — stage the fold in a ``_``-prefixed directory, commit a
+  manifest of the folded directories, then swap. The store's own fold
+  (distinct rows, summed partials, resolved op history) is a parameter.
+  Contract: one maintainer per store; compaction and forget run between
+  its batches; a reader finishes a committed fold. The last clause lives
+  in :func:`_list_partitions`, which every read, update, forget and
+  compaction goes through, so no caller makes a separate recovery call
+  and no reader sees a folded partition beside the originals it
+  replaced.
 
 Recovery precondition (documented once here, shared by every rung's
 streaming wrapper): replay idempotency requires the SAME batch slicing —
@@ -32,39 +43,72 @@ the restart point first.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.localrel import local_rows_df
+
 BATCH_COL = "batch_id"
+# the key-hash directory level under each batch of a bucketed join-view
+# side store (`incremental/joinview.py`); a bucketed fold keeps it
+BUCKET_COL = "__jv_bucket__"
+
+# Compaction markers: the fold is staged under _FOLD_TMP<tok> (the
+# leading "_" hides it from every store read and from the foreign-content
+# check) and _FOLD_COMMIT<tok> is the manifest of the directories it
+# folded, committed once the manifest's own _SUCCESS lands.
+_FOLD = "_jv_fold_"
+_FOLD_TMP = _FOLD + "tmp_"
+_FOLD_COMMIT = _FOLD + "commit_"
 
 
-def _list_partitions(spark: SparkSession, store_path: str):
-    """(fs, jvm, {unescaped batch id -> directory name}) for the store, or
-    ``None`` when the store path does not exist (first batch). Real IO
-    errors propagate. Hadoop FS API so local disk, HDFS, and S3A all
-    work; directory names are Hadoop %XX-escaped, ids are the unescaped
-    strings callers use."""
-    from urllib.parse import unquote
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem for ``path``, the py4j JVM view). The Hadoop FS
+    API, so stores live on local disk, HDFS or S3A alike."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
+
+def _list_status(spark: SparkSession, path: str):
+    """(fs, jvm, statuses) for directory ``path``; ``statuses`` is
+    ``None`` when the path does not exist. One metadata round-trip: a
+    missing path surfaces as FileNotFoundException rather than a
+    separate exists() probe (on S3A an extra HEAD/LIST per call)."""
     from py4j.protocol import Py4JJavaError
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(store_path)
-    fs = root.getFileSystem(hconf)
+    fs, jvm = _hadoop_fs(spark, path)
     try:
-        # one metadata round-trip: missing path surfaces as
-        # FileNotFoundException rather than a separate exists() probe
-        # (on S3A that probe is an extra HEAD/LIST per batch)
-        statuses = fs.listStatus(root)
+        return fs, jvm, fs.listStatus(jvm.org.apache.hadoop.fs.Path(path))
     except Py4JJavaError as e:
         # match the exception CLASS, not the message: a path or wrapped
         # error whose text merely contains "FileNotFoundException" must
         # still PROPAGATE (a swallowed read error admits duplicates)
         klass = e.java_exception.getClass().getName()
         if klass.endswith("FileNotFoundException"):
-            return None
+            return fs, jvm, None
         raise
+
+
+def _list_partitions(spark: SparkSession, store_path: str):
+    """(fs, jvm, {unescaped batch id -> directory name}) for the store, or
+    ``None`` when the store path does not exist (first batch). Real IO
+    errors propagate. Directory names are Hadoop %XX-escaped, ids are
+    the unescaped strings callers use.
+
+    A fold whose commit manifest is durable but whose swap a crash cut
+    short is finished here, from this one listing (:func:`compact_store`),
+    and the store is listed again only then — so the partition set
+    returned is always the one from before a fold or after it."""
+    from urllib.parse import unquote
+
+    fs, jvm, statuses = _list_status(spark, store_path)
+    if statuses is None:
+        return None
+    if _finish_committed_folds(spark, fs, jvm, store_path, statuses):
+        statuses = fs.listStatus(jvm.org.apache.hadoop.fs.Path(store_path))
     dirs = {}
     foreign = []
     for status in statuses:
@@ -86,6 +130,21 @@ def _list_partitions(spark: SparkSession, store_path: str):
             "corrupt store as a first batch"
         )
     return fs, jvm, dirs
+
+
+def _list_for_rewrite(spark: SparkSession, store_path: str):
+    """:func:`_list_partitions` for a maintainer about to fold or rewrite
+    the store (compaction, forget). The listing has finished every
+    committed fold, so a fold marker still standing belongs to a fold
+    that never committed: its originals stand, and its staged rows —
+    which may hold a subject a forget is erasing — are deleted."""
+    listed = _list_partitions(spark, store_path)
+    if listed is not None:
+        fs, jvm, _ = listed
+        for status in fs.listStatus(jvm.org.apache.hadoop.fs.Path(store_path)):
+            if status.getPath().getName().startswith(_FOLD):
+                fs.delete(status.getPath(), True)
+    return listed
 
 
 def read_store_excluding_batch(
@@ -239,28 +298,15 @@ def checkpoint_replayable_ids(
     replay; the companion fresh-checkpoint hazard (old store partitions
     vs restarted batch ids) is documented in the module docstring and
     cannot be solved by an exclude list."""
-    from py4j.protocol import Py4JJavaError
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
 
     def _ids(sub: str) -> set[str]:
-        p = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/{sub}")
-        fs = p.getFileSystem(hconf)
-        try:
-            statuses = fs.listStatus(p)
-        except Py4JJavaError as e:
-            if e.java_exception.getClass().getName().endswith(
-                "FileNotFoundException"
-            ):
-                return set()
-            raise
-        out = set()
-        for s in statuses:
-            name = s.getPath().getName()
-            if not name.startswith("."):  # .tmp / .crc staging entries
-                out.add(name)
-        return out
+        statuses = _list_status(spark, f"{checkpoint_dir}/{sub}")[2]
+        return {
+            s.getPath().getName()
+            for s in statuses or ()
+            # .tmp / .crc staging entries
+            if not s.getPath().getName().startswith(".")
+        }
 
     planned = _ids("offsets")
     committed = _ids("commits")
@@ -268,18 +314,22 @@ def checkpoint_replayable_ids(
 
 
 def compact_store(
-    spark: SparkSession, store_path: str, exclude: tuple[str, ...] = ()
+    spark: SparkSession,
+    store_path: str,
+    exclude: tuple[str, ...] = (),
+    *,
+    fold=None,
+    rank_col: str | None = None,
+    bucketed: bool = False,
 ) -> int:
     """Fold the store's batch partitions into one ``batch_id=__compacted__``
-    partition and remove the originals; returns the number of partition
-    directories removed.
+    partition and remove the originals; returns the number of batch
+    directories removed (a previous ``__compacted__`` is folded in again,
+    never counted).
 
     Why: every incremental batch reads the WHOLE store, and a long-lived
     job accumulates one ``batch_id=`` directory per batch — after 10⁴
     batches the file listing dwarfs the actual (tiny) store rows.
-    Compaction restores O(1) partition count without changing any rung's
-    semantics: store membership is consumed through anti-/band-joins, so
-    row ORDER and PARTITION of the store never matter, only the set.
 
     HARD PRECONDITION — ``exclude``: a batch that may still be REPLAYED
     (at or after the streaming checkpoint's position, or the most recent
@@ -290,15 +340,40 @@ def compact_store(
     marking the whole batch as duplicate. Batches strictly before the
     checkpoint can never re-run and are always safe to fold.
 
-    Crash safety: the fold WRITES first (dynamic overwrite of
-    ``__compacted__``) and DELETES second — and deletes ONLY the exact
-    directory set it folded, snapshotted before the fold, so a batch a
-    live job commits concurrently is neither folded nor deleted. A crash
-    between the two steps leaves duplicate membership rows (compacted +
-    original partitions), which is harmless — set-membership joins are
-    idempotent to duplicates — and a re-run completes the deletion. The
-    distinct() in the fold keeps the compacted partition itself
-    duplicate-free.
+    ``fold`` is the store's own fold: it receives the foldable rows
+    WITHOUT the batch column and returns the folded rows. The default,
+    ``distinct()``, serves the set-membership stores, whose rows are
+    consumed through anti-/band-joins, so only the set matters. With
+    ``rank_col`` set, each foldable directory is read on its own and
+    tagged with its batch id under that name (``""`` for the compacted
+    partition, the folded prefix of history) — the CDC op stores'
+    resolution order, taken from trusted directory names; the
+    type-inferred partition column would misorder "10" vs 9. Excluded
+    batches must then all sort after every folded one. ``bucketed``
+    folds per ``(batch, bucket)`` so a join-view side store's compacted
+    partition keeps the directory level its pruned reads rely on.
+
+    The crash protocol, the same for every store, under the contract
+    "one maintainer per store; compaction and forget run between its
+    batches; a reader finishes a committed fold" (`swap.py` states the
+    same one):
+
+    1. uncommitted residue of an earlier crashed fold is deleted
+       (:func:`_list_for_rewrite`);
+    2. the fold is written under ``_jv_fold_tmp_<tok>``, which no read
+       sees (an empty fold stages an empty ``__compacted__``);
+    3. the commit point: the manifest ``_jv_fold_commit_<tok>`` names
+       every folded directory and is durable once its ``_SUCCESS`` lands;
+    4. the swap (:func:`_complete_fold`): the old ``__compacted__`` is
+       deleted, the staged one renamed into place (an empty one is
+       dropped instead), the folded originals and both markers deleted.
+
+    A crash before step 3 leaves the originals as the truth; after it,
+    the next listing of the store (:func:`_list_partitions`) finishes
+    step 4. No reader ever counts a folded row twice, which additive
+    partials, z-set signs and join-view rows could not absorb. The
+    directory set is snapshotted once, so a batch committed after the
+    snapshot is neither folded nor deleted.
 
     Identity discipline: batch ids are taken from the partition
     DIRECTORY names (Hadoop %XX-escaping undone), never from the
@@ -308,13 +383,6 @@ def compact_store(
     directories by path, so there is no value-vs-directory mismatch
     anywhere.
     """
-    # snapshot the directory set FIRST; everything (fold + delete)
-    # operates on exactly this set, so a batch committed concurrently is
-    # neither folded nor deleted
-    listed = _list_partitions(spark, store_path)
-    if listed is None:
-        return 0  # not-yet-created store == legitimate empty state
-    fs, jvm, dirs = listed
     if isinstance(exclude, str):
         # a bare string would iterate character-by-character, silently
         # NOT excluding the replayable batch — the hard-precondition
@@ -323,22 +391,115 @@ def compact_store(
             "exclude must be a sequence of batch ids, not a bare string; "
             f"pass exclude=({exclude!r},)"
         )
+    listed = _list_for_rewrite(spark, store_path)
+    if listed is None:
+        return 0  # not-yet-created store == legitimate empty state
+    fs, jvm, dirs = listed
     excluded = {_valid_id(x) for x in exclude}
     foldable = sorted(set(dirs) - (excluded - {COMPACTED_ID}))
     if foldable in ([], [COMPACTED_ID]):
         return 0
-    # read exactly the foldable partition dirs by path (no partition
-    # column materializes, so no inference can misidentify a batch)
-    folded = spark.read.parquet(
-        *[f"{store_path}/{dirs[bid]}" for bid in foldable]
-    ).distinct()
-    commit_batch_partition(folded, store_path, COMPACTED_ID)
-    removed = 0
-    for bid in foldable:
-        if bid == COMPACTED_ID:
-            continue  # just rewritten by the fold — never delete it
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{store_path}/{dirs[bid]}"), True
+    if rank_col is None:
+        rows = (
+            spark.read.option("basePath", store_path)
+            .parquet(*[f"{store_path}/{dirs[bid]}" for bid in foldable])
+            .drop(BATCH_COL)
         )
-        removed += 1
-    return removed
+    else:
+        live_folds = [b for b in foldable if b != COMPACTED_ID]
+        misordered = [
+            x
+            for x in excluded & set(dirs)
+            if x != COMPACTED_ID and any(x < b for b in live_folds)
+        ]
+        if misordered:
+            raise ValueError(
+                f"excluded batch(es) {sorted(misordered)} sort before a "
+                "foldable batch; folding around them would misorder the "
+                "op history (compacted ranks first) — exclude only the "
+                "newest batches"
+            )
+        parts = [
+            spark.read.parquet(f"{store_path}/{dirs[bid]}").withColumn(
+                rank_col, F.lit("" if bid == COMPACTED_ID else bid)
+            )
+            for bid in foldable
+        ]
+        rows = parts[0]
+        for p in parts[1:]:
+            rows = rows.unionByName(p)
+    folded = rows.distinct() if fold is None else fold(rows)
+    tok = uuid.uuid4().hex[:12]
+    staged = f"{store_path}/{_FOLD_TMP}{tok}"
+    (
+        folded.withColumn(BATCH_COL, F.lit(COMPACTED_ID))
+        .write.mode("overwrite")
+        .partitionBy(*([BATCH_COL, BUCKET_COL] if bucketed else [BATCH_COL]))
+        .parquet(staged)
+    )
+    # a fold with no rows (every key deleted, every group retracted)
+    # writes no partition directory: stage an empty one, so the swap
+    # still knows it has not happened and deletes the old __compacted__
+    fs.mkdirs(
+        jvm.org.apache.hadoop.fs.Path(f"{staged}/{BATCH_COL}={COMPACTED_ID}")
+    )
+    # the commit point (an Arrow local relation: createDataFrame(list)'s
+    # python-RDD write costs ~4 s per fold at local[32] —
+    # functions/localrel.py)
+    manifest = [dirs[bid] for bid in foldable]
+    local_rows_df(
+        spark, [(d,) for d in manifest], "dir string"
+    ).coalesce(1).write.mode("overwrite").parquet(
+        f"{store_path}/{_FOLD_COMMIT}{tok}"
+    )
+    _complete_fold(fs, jvm, store_path, tok, manifest)
+    return sum(1 for bid in foldable if bid != COMPACTED_ID)
+
+
+def _finish_committed_folds(spark, fs, jvm, store: str, statuses) -> bool:
+    """Finish every fold among ``statuses`` whose manifest committed;
+    True when there was one. Committed vs torn is decided on the
+    manifest's OWN _SUCCESS: a manifest torn mid-write names an
+    incomplete set and must never drive deletes. A manifest that is
+    committed but unreadable raises."""
+    tokens = sorted(
+        name[len(_FOLD_COMMIT):]
+        for name in (s.getPath().getName() for s in statuses)
+        if name.startswith(_FOLD_COMMIT)
+        and fs.exists(
+            jvm.org.apache.hadoop.fs.Path(f"{store}/{name}/_SUCCESS")
+        )
+    )
+    for tok in tokens:
+        # logs a benign "WARN DataSource: All paths were ignored": the
+        # manifest dir is _-prefixed (which hides it from store reads),
+        # and Spark still reads an EXPLICITLY-given path
+        rows = spark.read.parquet(f"{store}/{_FOLD_COMMIT}{tok}").collect()
+        _complete_fold(fs, jvm, store, tok, [r.dir for r in rows])
+    return bool(tokens)
+
+
+def _complete_fold(fs, jvm, store: str, tok: str, manifest: list[str]) -> None:
+    """Step 4 of :func:`compact_store`'s protocol over the ``manifest``
+    directories. Every step is idempotent, so a crash inside it is
+    finished by the next listing."""
+
+    def _p(rel: str):
+        return jvm.org.apache.hadoop.fs.Path(f"{store}/{rel}")
+
+    compacted = f"{BATCH_COL}={COMPACTED_ID}"
+    staged = _p(f"{_FOLD_TMP}{tok}/{compacted}")
+    if fs.exists(staged):
+        # not swapped yet, so a __compacted__ standing now is the
+        # pre-fold one (in the manifest): free the rename target
+        fs.delete(_p(compacted), True)
+        if len(fs.listStatus(staged)) == 0:
+            fs.delete(staged, True)  # an empty fold: nothing to swap in
+        elif not fs.rename(staged, _p(compacted)):
+            # the Hadoop rename contract returns False instead of raising
+            raise OSError(f"{store}: rename of the staged fold {tok} failed")
+    for d in manifest:
+        if d != compacted:
+            fs.delete(_p(d), True)
+    fs.delete(_p(f"{_FOLD_TMP}{tok}"), True)
+    fs.delete(_p(f"{_FOLD_COMMIT}{tok}"), True)

@@ -2988,7 +2988,7 @@ def q254_rollup_store_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The continuous-aggregate claim, verified end to end: events split
     into three batches → `incremental/rollup.py::update_rollup_store`
     per batch → `compact_rollup_store` after the second (the additive
-    sidecar-protocol fold runs UNDER the hash) → `read_rollup` — and the
+    staged-swap fold runs UNDER the hash) → `read_rollup` — and the
     merged report must equal DuckDB's one-pass aggregate over the raw
     table. Exercises mergeability (count/sum/min/max partials), exact
     distinct users from the per-user grain, late data (each batch holds a

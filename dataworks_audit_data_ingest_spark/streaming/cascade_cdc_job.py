@@ -39,14 +39,19 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..incremental.joinview import JoinViewSpec, _compact_store_safe
+from ..incremental.joinview import JoinViewSpec
 from ..incremental.joinview_cdc import (
     DIFF_COL,
     compact_join_view_cdc,
     read_join_view_cdc_delta,
     update_join_view_cdc,
 )
-from ..incremental.store import commit_batch_partition, pad_batch_id
+from ..incremental.store import (
+    _list_partitions,
+    commit_batch_partition,
+    compact_store,
+    pad_batch_id,
+)
 from .jobs import run_foreach_batch
 from .joinview_cdc_job import _resolve_by_seq, split_cdc_ops
 
@@ -79,12 +84,18 @@ def fold_signed_feed(
 
 def read_additive_rollup(
     spark: SparkSession, store: str, group_cols: Sequence[str]
-) -> DataFrame:
+) -> DataFrame | None:
     """The maintained report: merge every committed partial, net the
     signs, drop groups whose every pair was retracted (net zero rows in
     the final state must not appear). Columns: ``group_cols + (n,
-    total)``."""
-    df = spark.read.parquet(store)
+    total)``; ``None`` when no partial is committed (nothing yet, or a
+    fold of a fully retracted store). Reads the batch directories the
+    store listing returns, never the store root, so a fold a crash left
+    beside its originals is finished first instead of counted twice."""
+    listed = _list_partitions(spark, store)
+    if listed is None or not listed[2]:
+        return None
+    df = spark.read.parquet(*[f"{store}/{d}" for d in listed[2].values()])
     return (
         df.groupBy(*group_cols)
         .agg(
@@ -102,11 +113,11 @@ def compact_additive_rollup(
     exclude: tuple[str, ...] = (),
 ) -> int:
     """Fold the partials store to one net row per group under the
-    staged-swap crash protocol. Zero-net groups (count AND value both
-    zero — fully retracted) are dropped: future feeds only ever ADD new
-    partials, so a net-zero group can never be revived by subtraction.
-    Same hard precondition as every compactor: ``exclude`` replayable
-    batches."""
+    family's one crash protocol (`incremental/store.py::compact_store`).
+    Zero-net groups (count AND value both zero — fully retracted) are
+    dropped: future feeds only ever ADD new partials, so a net-zero
+    group can never be revived by subtraction. Same hard precondition as
+    every compactor: ``exclude`` replayable batches."""
     cols = list(group_cols)
 
     def _fold(df: DataFrame) -> DataFrame:
@@ -119,9 +130,7 @@ def compact_additive_rollup(
             .filter((F.col(_DN) != 0) | (F.col(_DV) != 0))
         )
 
-    return _compact_store_safe(
-        spark, store, exclude, bucketed=False, fold_fn=_fold
-    )
+    return compact_store(spark, store, exclude, fold=_fold)
 
 
 def start_cdc_rollup_cascade_stream(

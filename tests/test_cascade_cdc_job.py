@@ -173,3 +173,62 @@ def test_q268_partition_invariant(spark):
         assert rows[before]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def _partials_store(spark, store, batches):
+    """Commit hand-built signed partials ``{batch id: [(seg, dn, dv)]}``."""
+    from dataworks_audit_data_ingest_spark.incremental.store import (
+        commit_batch_partition,
+    )
+
+    for bid, rows in batches.items():
+        commit_batch_partition(
+            spark.createDataFrame(
+                rows, "seg string, __dn__ long, __dv__ long"
+            ),
+            store,
+            bid,
+        )
+
+
+def test_read_finishes_a_fold_left_beside_its_originals(spark, tmp_path):
+    """Crash after the fold's rename, before its originals are deleted:
+    the new ``__compacted__`` net rows, the restored originals and the
+    committed ``_jv_fold_commit_<tok>`` naming them. The report must be
+    the one before the crash, not the partials counted twice."""
+    import shutil
+
+    store = str(tmp_path / "rl")
+    _partials_store(
+        spark, store, {"0": [("x", 1, 5), ("y", 1, 3)], "1": [("x", 1, 10)]}
+    )
+    assert _report(spark, store) == {("x", 2, 15), ("y", 1, 3)}
+    backup = str(tmp_path / "backup")
+    shutil.copytree(store, backup)
+    assert cc.compact_additive_rollup(spark, store, ["seg"]) == 2
+    originals = ["batch_id=0", "batch_id=1"]
+    for d in originals:
+        shutil.copytree(f"{backup}/{d}", f"{store}/{d}")
+    spark.createDataFrame([(d,) for d in originals], "dir string").coalesce(
+        1
+    ).write.parquet(f"{store}/_jv_fold_commit_cafecafe0001")
+    assert _report(spark, store) == {("x", 2, 15), ("y", 1, 3)}
+    assert [n for n in os.listdir(store) if n.startswith("batch_id=")] == [
+        "batch_id=__compacted__"
+    ]
+
+
+def test_fold_of_a_fully_retracted_store_leaves_nothing(spark, tmp_path):
+    """A fold whose every group nets to zero writes no rows; the swap
+    must still retire the previous ``__compacted__`` partition, or the
+    retracted groups come back."""
+    store = str(tmp_path / "rl")
+    _partials_store(spark, store, {"0": [("x", 2, 15), ("y", 1, 3)]})
+    assert cc.compact_additive_rollup(spark, store, ["seg"]) == 1
+    _partials_store(spark, store, {"1": [("x", -2, -15), ("y", -1, -3)]})
+    assert _report(spark, store) == set()
+    assert cc.compact_additive_rollup(spark, store, ["seg"]) == 1
+    assert not [
+        n for n in os.listdir(store) if n.startswith(("batch_id", "_jv"))
+    ]
+    assert cc.read_additive_rollup(spark, store, ["seg"]) is None

@@ -4,28 +4,37 @@
 - replay idempotency (same batch re-committed, report unchanged);
 - additive compaction: report identical before/after, partitions folded,
   exclude honored;
-- compaction crash points (sidecar-only; fold-written-no-GC) leave
-  readers consistent and a re-run converges;
+- compaction crash points of the staged swap (staging only; committed
+  manifest before and after the rename; torn manifest; unreadable
+  manifest) leave readers consistent and a re-run converges;
 - GDPR forget == batch recompute over the filtered events;
-- the update path never reads the store (write-only hot path).
+- the update path never lists the store (write-only hot path).
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
+import dataworks_audit_data_ingest_spark.incremental.store as S
 from dataworks_audit_data_ingest_spark.incremental.rollup import (
-    _COMPACT_PREFIX,
     compact_rollup_store,
     forget_user_from_rollup,
     read_rollup,
     read_rollup_grain,
+    rollup_partials,
     update_rollup_store,
 )
 from dataworks_audit_data_ingest_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
+
+# the staged swap's on-disk markers (incremental/store.py::compact_store)
+_FOLD_TMP = "_jv_fold_tmp_"
+_FOLD_COMMIT = "_jv_fold_commit_"
 
 
 def _batches(spark, n=3):
@@ -106,74 +115,91 @@ def test_compaction_preserves_report_and_folds(spark, tmp_path):
     # the excluded batch can still replay safely after compaction
     update_rollup_store(spark, store, batches[2], "2")
     assert _report_rows(spark, store) == before
-    # second compaction folds the compacted partition + batch 2
-    assert compact_rollup_store(spark, store) == 2
+    # second compaction folds the compacted partition + batch 2 and
+    # counts only the batch directory it removed
+    assert compact_rollup_store(spark, store) == 1
     assert _report_rows(spark, store) == before
 
 
-def test_compaction_crash_sidecar_only_is_ignored_then_aborted(
-    spark, tmp_path
-):
-    """Crash point 1: sidecar written, fold never started. Readers ignore
-    it; the next compaction aborts it and folds cleanly."""
+def _fold_residue(store):
+    return sorted(n for n in os.listdir(store) if n.startswith("_jv_fold_"))
+
+
+def _crash(*a, **k):
+    raise RuntimeError("crash")
+
+
+def _three_batch_store(spark, tmp_path):
     store = str(tmp_path / "rollup")
     for i, b in enumerate(_batches(spark)):
         update_rollup_store(spark, store, b, str(i))
+    return store
+
+
+def test_compaction_crash_staging_only_is_ignored_then_rolled_back(
+    spark, tmp_path, monkeypatch
+):
+    """Crash point 1: the fold is staged, its manifest never written.
+    Readers see the originals; the next compaction drops the staging
+    and folds cleanly."""
+    store = _three_batch_store(spark, tmp_path)
     before = _report_rows(spark, store)
-    spark.createDataFrame(
-        [("0", "__compacted_deadbeef__"), ("1", "__compacted_deadbeef__")],
-        "folded_id string, target string",
-    ).coalesce(1).write.parquet(f"{store}/{_COMPACT_PREFIX}deadbeef")
-    assert _report_rows(spark, store) == before  # target absent: originals live
+    monkeypatch.setattr(S, "local_rows_df", _crash)  # the manifest write
+    with pytest.raises(RuntimeError, match="crash"):
+        compact_rollup_store(spark, store)
+    monkeypatch.undo()
+    assert [n[: len(_FOLD_TMP)] for n in _fold_residue(store)] == [_FOLD_TMP]
+    assert _report_rows(spark, store) == before  # staging is invisible
     assert compact_rollup_store(spark, store) == 3
     assert _report_rows(spark, store) == before
-    import os
-
-    assert not any(
-        n.startswith(_COMPACT_PREFIX) for n in os.listdir(store)
-    )
+    assert _fold_residue(store) == []
 
 
-def test_compaction_crash_after_fold_before_gc_is_consistent(
+def test_compaction_crash_after_commit_before_swap_is_finished_by_a_read(
+    spark, tmp_path, monkeypatch
+):
+    """Crash point 2: the manifest committed, the swap not started. The
+    fold is the truth from here on: the next read finishes the swap, so
+    it counts every partial once."""
+    store = _three_batch_store(spark, tmp_path)
+    before = _report_rows(spark, store)
+    monkeypatch.setattr(S, "_complete_fold", _crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        compact_rollup_store(spark, store)
+    monkeypatch.undo()
+    assert {"batch_id=0", "batch_id=1", "batch_id=2"} <= set(os.listdir(store))
+    assert len(_fold_residue(store)) == 2  # staging + committed manifest
+    assert _report_rows(spark, store) == before
+    assert _fold_residue(store) == []
+    parts = [n for n in os.listdir(store) if n.startswith("batch_id=")]
+    assert parts == ["batch_id=__compacted__"]
+    assert compact_rollup_store(spark, store) == 0  # nothing left to fold
+
+
+def test_compaction_crash_after_rename_is_finished_by_a_read(
     spark, tmp_path
 ):
-    """Crash point 2: fold written (visible), GC of claimed originals not
-    done. Readers must already exclude the originals (no double count);
-    a re-run completes the GC. The pre-GC state is reconstructed from a
-    completed compaction by restoring a claimed original partition and
-    its sidecar — byte-identical to a crash between fold and GC."""
-    import os
-
-    store = str(tmp_path / "rollup")
-    for i, b in enumerate(_batches(spark)):
-        update_rollup_store(spark, store, b, str(i))
+    """Crash point 3: the new ``__compacted__`` renamed into place, the
+    folded originals not yet deleted. Rebuilt from a finished
+    compaction by restoring the originals and the committed manifest
+    naming them — a reader must not count a partial twice."""
+    store = _three_batch_store(spark, tmp_path)
     before = _report_rows(spark, store)
-    folded = compact_rollup_store(spark, store)
-    assert folded == 3
-    target = next(
-        n.split("=", 1)[1]
-        for n in os.listdir(store)
-        if n.startswith("batch_id=__compacted_")
-    )
-    b0 = _batches(spark)[0]
-    from dataworks_audit_data_ingest_spark.incremental.rollup import (
-        rollup_partials,
-    )
-    from dataworks_audit_data_ingest_spark.incremental.store import (
-        commit_batch_partition,
-    )
-
-    commit_batch_partition(rollup_partials(b0), store, "0")
-    spark.createDataFrame(
-        [("0", target)], "folded_id string, target string"
-    ).coalesce(1).write.parquet(f"{store}/{_COMPACT_PREFIX}cafecafe")
-    # reader: target complete -> claimed original excluded -> no double count
+    backup = str(tmp_path / "backup")
+    shutil.copytree(store, backup)
+    assert compact_rollup_store(spark, store) == 3
+    originals = [f"batch_id={i}" for i in range(3)]
+    for d in originals:
+        shutil.copytree(f"{backup}/{d}", f"{store}/{d}")
+    os.makedirs(f"{store}/{_FOLD_TMP}cafecafe0001")  # emptied by the rename
+    spark.createDataFrame([(d,) for d in originals], "dir string").coalesce(
+        1
+    ).write.parquet(f"{store}/{_FOLD_COMMIT}cafecafe0001")
     assert _report_rows(spark, store) == before
-    # re-run completes the GC and folds nothing new (single live partition)
+    assert _fold_residue(store) == []
+    assert not set(originals) & set(os.listdir(store))
     assert compact_rollup_store(spark, store) == 0
     assert _report_rows(spark, store) == before
-    assert "batch_id=0" not in os.listdir(store)
-    assert not any(n.startswith(_COMPACT_PREFIX) for n in os.listdir(store))
 
 
 def test_forget_user_equals_filtered_batch_recompute(spark, tmp_path):
@@ -206,16 +232,17 @@ def test_forget_composes_with_compaction(spark, tmp_path):
 
 
 def test_update_path_is_write_only(spark, tmp_path, monkeypatch):
-    """The hot path must not read the store: poison the read helpers and
-    update anyway."""
+    """The hot path must not read the store: poison the store listing
+    (and with it the fold recovery that rides on it) and update anyway."""
     import dataworks_audit_data_ingest_spark.incremental.rollup as R
 
     store = str(tmp_path / "rollup")
 
     def boom(*a, **k):  # pragma: no cover - called == failure
-        raise AssertionError("update path read the store")
+        raise AssertionError("update path listed the store")
 
-    monkeypatch.setattr(R, "_live_partition_dirs", boom)
+    monkeypatch.setattr(S, "_list_status", boom)
+    monkeypatch.setattr(S, "_list_partitions", boom)
     monkeypatch.setattr(R, "_list_partitions", boom)
     b = _batches(spark, n=2)[0]
     update_rollup_store(spark, store, b, "0")
@@ -265,50 +292,45 @@ def test_escaped_batch_ids_survive_compaction(spark, tmp_path):
     before = _report_rows(spark, store)
     assert compact_rollup_store(spark, store) == 3
     assert _report_rows(spark, store) == before
-    import os
-
     names = os.listdir(store)
-    assert not any(n.startswith(_COMPACT_PREFIX) for n in names)
-    assert sum(n.startswith("batch_id=__compacted_") for n in names) == 1
+    assert _fold_residue(store) == []
+    assert names.count("batch_id=__compacted__") == 1
     # the escaped originals are gone (GC really found them)
     assert not any("day" in n for n in names)
 
 
-def test_torn_sidecar_ignored_and_aborted(spark, tmp_path):
-    """A sidecar directory WITHOUT its own _SUCCESS (crash during the
-    sidecar write — before any fold write) is invisible to readers and
-    deleted by the next resolution; a complete sidecar that fails to
-    READ must propagate, not be swallowed (the family discipline)."""
-    import os
-
-    store = str(tmp_path / "rollup")
-    for i, b in enumerate(_batches(spark)):
-        update_rollup_store(spark, store, b, str(i))
+def test_torn_manifest_ignored_and_rolled_back(
+    spark, tmp_path, monkeypatch
+):
+    """A manifest WITHOUT its own _SUCCESS (crash during the manifest
+    write) names an incomplete set: readers must not replay it, and the
+    next compaction rolls it and its staging back."""
+    store = _three_batch_store(spark, tmp_path)
     before = _report_rows(spark, store)
-    torn = f"{store}/{_COMPACT_PREFIX}torn00"
-    os.makedirs(torn)
-    with open(f"{torn}/part-00000.parquet", "wb") as f:
-        f.write(b"\x00garbage, not parquet")  # no _SUCCESS alongside
-    assert _report_rows(spark, store) == before  # reader ignores it
-    assert compact_rollup_store(spark, store) == 3  # resolver aborted it
-    assert not any(
-        n.startswith(_COMPACT_PREFIX) for n in os.listdir(store)
-    )
+    monkeypatch.setattr(S, "_complete_fold", _crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        compact_rollup_store(spark, store)
+    monkeypatch.undo()
+    (manifest,) = [
+        n for n in _fold_residue(store) if n.startswith(_FOLD_COMMIT)
+    ]
+    os.remove(f"{store}/{manifest}/_SUCCESS")
+    assert _report_rows(spark, store) == before  # originals stand
+    assert "batch_id=0" in os.listdir(store)
+    assert compact_rollup_store(spark, store) == 3
+    assert _fold_residue(store) == []
     assert _report_rows(spark, store) == before
 
 
-def test_complete_sidecar_read_error_propagates(spark, tmp_path):
-    """Corrupt parquet UNDER a _SUCCESS-complete sidecar is a real IO
+def test_committed_manifest_read_error_propagates(spark, tmp_path):
+    """Corrupt parquet under a _SUCCESS-committed manifest is a real IO
     problem: both the reader and the compactor must raise, never treat
-    the store as sidecar-free (which would double-count a pre-GC fold)."""
-    import os
-
-    import pytest
-
+    the store as fold-free (which would double-count a half-swapped
+    fold)."""
     store = str(tmp_path / "rollup")
     for i, b in enumerate(_batches(spark, n=2)):
         update_rollup_store(spark, store, b, str(i))
-    bad = f"{store}/{_COMPACT_PREFIX}badread"
+    bad = f"{store}/{_FOLD_COMMIT}badread"
     os.makedirs(bad)
     with open(f"{bad}/part-00000.parquet", "wb") as f:
         f.write(b"\x00garbage, not parquet")
@@ -319,40 +341,31 @@ def test_complete_sidecar_read_error_propagates(spark, tmp_path):
         compact_rollup_store(spark, store)
 
 
-def test_forget_over_pre_gc_residue_counts_once(spark, tmp_path):
-    """Forget on a store left between fold-complete and GC (claimed
-    originals still on disk) must resolve the compaction first: the
-    subject's erasure is counted ONCE, and the report afterwards equals
-    the filtered batch recompute."""
-    import os
-
-    store = str(tmp_path / "rollup")
+def test_forget_over_fold_residue_counts_once(spark, tmp_path):
+    """Forget on a store a crash left mid-fold — a committed fold beside
+    its restored originals, plus an uncommitted fold's staging — must
+    erase (and count) the subject's rows once, and leave no staged copy
+    of them behind."""
     ev = table(spark, SF, "events")
-    for i, b in enumerate(_batches(spark)):
-        update_rollup_store(spark, store, b, str(i))
+    store = _three_batch_store(spark, tmp_path)
+    backup = str(tmp_path / "backup")
+    shutil.copytree(store, backup)
     assert compact_rollup_store(spark, store) == 3
-    # reconstruct the pre-GC state: restore a claimed original + sidecar
-    from dataworks_audit_data_ingest_spark.incremental.rollup import (
-        rollup_partials,
+    # an uncommitted fold (staged rows, no manifest)...
+    shutil.copytree(
+        f"{store}/batch_id=__compacted__",
+        f"{store}/{_FOLD_TMP}dead00000001/batch_id=__compacted__",
     )
-    from dataworks_audit_data_ingest_spark.incremental.store import (
-        commit_batch_partition,
-    )
-
-    target = next(
-        n.split("=", 1)[1]
-        for n in os.listdir(store)
-        if n.startswith("batch_id=__compacted_")
-    )
-    commit_batch_partition(rollup_partials(_batches(spark)[0]), store, "0")
-    spark.createDataFrame(
-        [("0", target)], "folded_id string, target string"
-    ).coalesce(1).write.parquet(f"{store}/{_COMPACT_PREFIX}residue0")
+    # ...and a committed one whose originals are back on disk
+    shutil.copytree(f"{backup}/batch_id=0", f"{store}/batch_id=0")
+    spark.createDataFrame([("batch_id=0",)], "dir string").coalesce(
+        1
+    ).write.parquet(f"{store}/{_FOLD_COMMIT}residue0")
 
     subjects = ev.select("user_id").distinct().orderBy("user_id").limit(2)
     subject_ids = [r.user_id for r in subjects.collect()]
-    # the subject's grain rows exist ONCE per (day, type) after resolution;
-    # a blind sweep over the residue would count them twice
+    # the subject's grain rows exist ONCE per (day, type) once the fold
+    # is finished; a blind sweep over the residue would count them twice
     expected_once = (
         rollup_partials(ev)
         .filter(F.col("user_id").isin(subject_ids))
@@ -360,6 +373,7 @@ def test_forget_over_pre_gc_residue_counts_once(spark, tmp_path):
     )
     removed = forget_user_from_rollup(spark, store, subjects)
     assert sum(removed.values()) == expected_once
+    assert _fold_residue(store) == []
     survivors = ev.filter(~F.col("user_id").isin(subject_ids))
     assert _report_rows(spark, store) == _batch_recompute(survivors)
 
@@ -383,7 +397,6 @@ def test_fully_forgotten_store_reads_as_none(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 import math
-import shutil
 import tempfile
 from datetime import date, datetime
 

@@ -23,7 +23,7 @@ from dataworks_audit_data_ingest_spark.incremental import (
 )
 from dataworks_audit_data_ingest_spark.incremental.joinview import (
     _old_side,
-    _side_path,
+    side_path,
 )
 SPEC = JoinViewSpec(key="k", left_id="lid", right_id="rid")
 
@@ -136,12 +136,12 @@ def test_bucketed_layout_matches_flat_and_prunes(spark, tmp_path):
     # column — directory-level pruning, not a post-scan row filter
     probe = _right(spark, [(200, 10, "p")])
     pruned = _old_side(
-        spark, _side_path(bkt_root, "left"), "zz", bspec, probe
+        spark, side_path(bkt_root, "left"), "zz", bspec, probe
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[[^\]]*__jv_bucket__[^\]]*\]", plan)
     assert m, f"no bucket partition filter in scan:\n{plan}"
-    full = _old_side(spark, _side_path(bkt_root, "left"), "zz", bspec, None)
+    full = _old_side(spark, side_path(bkt_root, "left"), "zz", bspec, None)
     assert pruned.count() < full.count()
 
 
@@ -318,20 +318,22 @@ def test_forget_on_bucketed_store_preserves_layout(spark, tmp_path):
 
 
 def test_compaction_crash_recovery_both_windows(spark, tmp_path):
-    from dataworks_audit_data_ingest_spark.incremental.joinview import (
+    from dataworks_audit_data_ingest_spark.incremental.store import (
         _FOLD_COMMIT,
         _FOLD_TMP,
         _hadoop_fs,
+        _list_for_rewrite,
     )
 
     root = str(tmp_path / "jv")
     bspec = JoinViewSpec(key="k", left_id="lid", right_id="rid", n_buckets=8)
     list(_apply_all(spark, root, bspec, BATCHES[:3]))
     want = _store_snapshot(spark, root)
-    store = _side_path(root, "left")
+    store = side_path(root, "left")
 
     # window 1: crash AFTER the fold staged but BEFORE the commit
-    # manifest — recovery must roll the staging back, originals stand
+    # manifest — reads never see the staging, originals stand, and the
+    # next maintainer (compaction or forget) rolls the staging back
     folded = (
         spark.read.option("basePath", store)
         .parquet(f"{store}/batch_id=0", f"{store}/batch_id=2")
@@ -345,11 +347,14 @@ def test_compaction_crash_recovery_both_windows(spark, tmp_path):
     folded.write.mode("overwrite").partitionBy(
         "batch_id", "__jv_bucket__"
     ).parquet(f"{store}/{_FOLD_TMP}deadbeef0001")
-    assert _store_snapshot(spark, root) == want  # recovery on read
+    assert _store_snapshot(spark, root) == want  # invisible on read
     fs, jvm = _hadoop_fs(spark, store)
-    assert not fs.exists(
-        jvm.org.apache.hadoop.fs.Path(f"{store}/{_FOLD_TMP}deadbeef0001")
+    staged = jvm.org.apache.hadoop.fs.Path(
+        f"{store}/{_FOLD_TMP}deadbeef0001"
     )
+    assert fs.exists(staged)
+    _list_for_rewrite(spark, store)
+    assert not fs.exists(staged)
 
     # window 2: crash AFTER the commit manifest — recovery must FINISH
     # the swap (delete manifested originals, land __compacted__)
@@ -372,8 +377,9 @@ def test_compaction_crash_recovery_both_windows(spark, tmp_path):
     assert not any(n.startswith(("_jv_fold",)) for n in names)
 
     # window 3: TORN commit manifest (no _SUCCESS) — must be rolled
-    # back, NOT replayed: a replay would delete the manifested dir
-    # (here the live __compacted__ partition) and lose data
+    # back by the next maintainer, NOT replayed by a read: a replay
+    # would delete the manifested dir (here the live __compacted__
+    # partition) and lose data
     folded.write.mode("overwrite").partitionBy(
         "batch_id", "__jv_bucket__"
     ).parquet(f"{store}/{_FOLD_TMP}deadbeef0003")
@@ -389,6 +395,7 @@ def test_compaction_crash_recovery_both_windows(spark, tmp_path):
         False,
     )
     assert _store_snapshot(spark, root) == want
+    _list_for_rewrite(spark, store)
     names = {
         s.getPath().getName()
         for s in fs.listStatus(jvm.org.apache.hadoop.fs.Path(store))

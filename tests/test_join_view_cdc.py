@@ -205,15 +205,15 @@ def test_crash_between_view_and_side_commits_replays_clean(
         _apply(spark, crash_root, SPEC, i, batch)
     _apply(spark, control_root, SPEC, 3, BATCHES[3])
 
-    real = jvc._commit_side
+    real = jvc.commit_side
 
     def boom(*a, **kw):
         raise RuntimeError("crash before side commits")
 
-    monkeypatch.setattr(jvc, "_commit_side", boom)
+    monkeypatch.setattr(jvc, "commit_side", boom)
     with pytest.raises(RuntimeError, match="crash before side"):
         _apply(spark, crash_root, SPEC, 3, BATCHES[3])
-    monkeypatch.setattr(jvc, "_commit_side", real)
+    monkeypatch.setattr(jvc, "commit_side", real)
     _apply(spark, crash_root, SPEC, 3, BATCHES[3])  # replay
 
     want = read_join_view_cdc(spark, control_root)
@@ -255,6 +255,25 @@ def test_compaction_preserves_view_and_absorbs_tombstones(spark, tmp_path):
     _assert_same_multiset(
         read_join_view_cdc(spark, root), _expected(spark, lmodel, rmodel)
     )
+
+
+def test_fold_after_every_row_is_deleted_leaves_nothing(spark, tmp_path):
+    """Delete everything a previous fold holds, then fold again: the
+    folds come out empty, and the swap must still retire the previous
+    ``__compacted__`` partitions, or the deleted rows and their view
+    pairs come back."""
+    root = str(tmp_path / "cdc")
+    seed = ([(1, 10, "a")], None, [(100, 10, "X")], None)
+    _apply(spark, root, SPEC, 0, seed)
+    compact_join_view_cdc(spark, root, SPEC)
+    _apply(spark, root, SPEC, 1, (None, [(10, 1)], None, [(10, 100)]))
+    assert read_join_view_cdc(spark, root).count() == 0
+    assert compact_join_view_cdc(spark, root, SPEC) == {
+        "left": 1, "right": 1, "view": 1
+    }
+    assert read_join_view_cdc(spark, root) is None
+    for side in ("left", "right"):
+        assert read_current_side(spark, root, side, SPEC) is None
 
 
 def test_compaction_rejects_misordered_exclude(spark, tmp_path):

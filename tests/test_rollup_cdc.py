@@ -7,6 +7,8 @@ exact under deletes."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from dataworks_audit_data_ingest_spark.incremental import JoinViewSpec
@@ -219,3 +221,42 @@ def test_forget_key_from_grain_store(spark, tmp_path):
     assert raw.filter(F.col("lid") == 1).count() == 0
     report = read_cdc_rollup(spark, store, grain)
     assert {(r.seg, r.lid) for r in report.collect()} == {("A", 2)}
+
+
+def test_read_finishes_a_fold_left_beside_its_originals(spark, tmp_path):
+    """Crash after the fold's rename, before its originals are deleted:
+    the new ``__compacted__`` snapshot, the restored originals and the
+    committed ``_jv_fold_commit_<tok>`` naming them. The report must be
+    the one before the crash — the originals' adds must not stack on
+    the snapshot that already folded them."""
+    import shutil
+
+    root, store = str(tmp_path / "jv"), str(tmp_path / "rl")
+    _run_batch(
+        spark, root, store, "b0",
+        left_upserts=spark.createDataFrame(
+            [(1, 10, 5), (2, 10, 3), (3, 20, 7)], L
+        ),
+        right_upserts=spark.createDataFrame(
+            [(100, 10, "x"), (101, 20, "y")], R
+        ),
+    )
+    _run_batch(
+        spark, root, store, "b1",
+        left_upserts=spark.createDataFrame([(4, 10, 0)], L),
+    )
+    want = _maintained(spark, store)
+    assert want == [("x", 3, 8, 0, 5), ("y", 1, 7, 7, 7)]
+    backup = str(tmp_path / "backup")
+    shutil.copytree(store, backup)
+    assert compact_cdc_rollup(spark, store, ("seg",)) == 2
+    originals = ["batch_id=b0", "batch_id=b1"]
+    for d in originals:
+        shutil.copytree(f"{backup}/{d}", f"{store}/{d}")
+    spark.createDataFrame([(d,) for d in originals], "dir string").coalesce(
+        1
+    ).write.parquet(f"{store}/_jv_fold_commit_cafecafe0001")
+    assert _maintained(spark, store) == want
+    assert [
+        n for n in os.listdir(store) if n.startswith(("batch_id=", "_jv"))
+    ] == ["batch_id=__compacted__"]

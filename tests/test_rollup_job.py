@@ -112,14 +112,14 @@ def test_in_stream_compaction_bounds_partitions_and_preserves_report(
     want = _batch_reference(spark)
     assert _report(spark, store) == want
     parts = [n for n in os.listdir(store) if n.startswith("batch_id=")]
-    # 6 batches: the fold after #1 is a no-op (only batch 0 foldable);
-    # the fold after #3 REALLY folds {0,1,2} (excl 3); batches 4-5 then
-    # land NEW partitions on top of a compacted one, and the fold after
-    # #5 merges the earlier __compacted_ partition with {3,4} (excl 5)
-    # — fold -> update -> fold-over-compacted is the path under test.
-    # End state: one compacted partition + the in-flight batch 5.
+    # 6 batches: the fold after #1 folds batch 0 alone (excl 1) into
+    # __compacted__; the folds after #3 and #5 each merge that
+    # __compacted__ partition with the two batches before the current
+    # one ({1,2} excl 3, then {3,4} excl 5) — fold -> update ->
+    # fold-over-compacted is the path under test. End state: one
+    # compacted partition + the in-flight batch 5.
     assert len(parts) == 2
-    assert sum("__compacted_" in n for n in parts) == 1
+    assert "batch_id=__compacted__" in parts
     assert "batch_id=000000000005" in parts
 
     stream2 = (

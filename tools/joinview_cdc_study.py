@@ -28,7 +28,7 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from dataworks_audit_data_ingest_spark.incremental.joinview import (  # noqa: E402
     JoinViewSpec,
-    _side_path,
+    side_path,
 )
 from dataworks_audit_data_ingest_spark.incremental.joinview_cdc import (  # noqa: E402
     _ops_current,
@@ -96,11 +96,11 @@ def clustered(spark, orders, cust) -> None:
         t_cdc = time.monotonic() - t0
         probe = ups.select("c_custkey")
         a_p = _ops_current(
-            spark, _side_path(root, "left"), "never/a", spec,
+            spark, side_path(root, "left"), "never/a", spec,
             spec.left_id, probe,
         )
         a_all = _ops_current(
-            spark, _side_path(root, "left"), "never/a", spec,
+            spark, side_path(root, "left"), "never/a", spec,
             spec.left_id, None,
         )
         pruned = a_p.count() if a_p is not None else 0
@@ -212,16 +212,16 @@ def main() -> int:
         # what the NEXT batch's pruned resolved reads would scan
         probe = ocls((b + 1) % n_batches).select("c_custkey")
         a_p = _ops_current(
-            spark, _side_path(root, "left"), "never/a", spec,
+            spark, side_path(root, "left"), "never/a", spec,
             spec.left_id, probe,
         )
         a_all = _ops_current(
-            spark, _side_path(root, "left"), "never/a", spec,
+            spark, side_path(root, "left"), "never/a", spec,
             spec.left_id, None,
         )
         pruned = a_p.count() if a_p is not None else 0
         whole = a_all.count() if a_all is not None else 0
-        raw_view = spark.read.parquet(_side_path(root, "view")).count()
+        raw_view = spark.read.parquet(side_path(root, "view")).count()
         print(
             f"| {b} | {ins_l.count()}/{ins_r.count()} "
             f"| {0 if upd is None else upd.count()} "
@@ -235,7 +235,7 @@ def main() -> int:
                 spark, root, spec, exclude=(f"{b:04d}",)
             )
             net = read_join_view_cdc(spark, root).count()
-            raw = spark.read.parquet(_side_path(root, "view")).count()
+            raw = spark.read.parquet(side_path(root, "view")).count()
             print(
                 f"|   | semantic compaction after batch {b}: folded "
                 f"{folded}; raw view rows -> {raw} (net {net}) | | | | "

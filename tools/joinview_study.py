@@ -28,7 +28,7 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 from dataworks_audit_data_ingest_spark.incremental.joinview import (  # noqa: E402
     JoinViewSpec,
     _old_side,
-    _side_path,
+    side_path,
     read_join_view,
     update_join_view,
 )
@@ -112,16 +112,16 @@ def main() -> int:
         # what the NEXT batch's old-side reads would scan, pruned by a
         # delta-sized probe vs the whole store
         a_pruned = _old_side(
-            spark, _side_path(root, "left"), "__probe__", spec, rd
+            spark, side_path(root, "left"), "__probe__", spec, rd
         )
         b_pruned = _old_side(
-            spark, _side_path(root, "right"), "__probe__", spec, ld
+            spark, side_path(root, "right"), "__probe__", spec, ld
         )
         a_all = _old_side(
-            spark, _side_path(root, "left"), "__probe__", spec, None
+            spark, side_path(root, "left"), "__probe__", spec, None
         )
         b_all = _old_side(
-            spark, _side_path(root, "right"), "__probe__", spec, None
+            spark, side_path(root, "right"), "__probe__", spec, None
         )
         pruned = (a_pruned.count() if a_pruned is not None else 0) + (
             b_pruned.count() if b_pruned is not None else 0
