@@ -54,10 +54,17 @@ tombstone alone never does.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import logging
+import operator
+from concurrent.futures import Future, ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+from pyspark.sql.window import Window
+from pyspark.util import inheritable_thread_target
 
 from .joinview import (
     BUCKET_COL,
@@ -74,6 +81,7 @@ from .store import (
     _valid_id,
     commit_batch_partition,
     compact_store,
+    read_batch_dirs,
 )
 
 OP_COL = "__cdc_op__"
@@ -82,7 +90,7 @@ _RANK_COL = "__cdc_rank__"
 
 logger = logging.getLogger(__name__)
 
-# `_ops_current` reads every surviving batch directory as its own scan
+# `_stored_ops` reads every surviving batch directory as its own scan
 # and resolves across all of them, so per-batch maintenance cost (file
 # listings, plan size, window input) grows LINEARLY in un-compacted
 # history — regular `compact_join_view_cdc` calls are an operational
@@ -105,80 +113,11 @@ def _check_cols(df: DataFrame, cols: list[str], what: str) -> None:
             )
 
 
-def _reject_nulls(df: DataFrame, cols: list[str], what: str) -> None:
-    cond = None
-    for c in cols:
-        n = F.col(c).isNull()
-        cond = n if cond is None else cond | n
-    if df.filter(cond).limit(1).collect():
-        raise ValueError(
-            f"{what} contains NULL in {cols}; keys and ids must be non-null "
-            "(an inner join can never match a NULL key, and a NULL id can "
-            "never be upserted over or deleted)"
-        )
-
-
-def _persist_checked_feed(
-    df: DataFrame,
-    req_cols: list[str],
-    group_cols: list[str],
-    what: str,
-    *,
-    dup_msg: str | None = None,
-) -> tuple[DataFrame, int, object]:
-    """localCheckpoint + the per-feed guards in ONE Spark job.
-
-    The previous shape ran four actions per feed (eager checkpoint,
-    count, NULL probe, duplicate probe); at fixture scale the per-job
-    overhead dominated the CDC drills (guide §1.2: remove passes). This
-    computes row count, NULL violations over ``req_cols``, and duplicate
-    ``group_cols`` detection from one two-stage aggregate over the
-    lazily-materialized checkpoint — identical errors, identical counts,
-    one job. ``dup_msg`` enables the duplicate guard ({} formatted with
-    an offending group value when available)."""
-    df = df.localCheckpoint(eager=False)
-    nul = None
-    for c in req_cols:
-        n = F.col(c).isNull()
-        nul = n if nul is None else nul | n
-    if dup_msg is None:
-        # the duplicate guard cannot fire: a single partial+final global
-        # aggregate suffices — no per-group exchange
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(nul.cast("int")), F.lit(0)).alias("n_nul"),
-        ).collect()[0]
-        if row["n_nul"] > 0:
-            raise ValueError(
-                f"{what} contains NULL in {req_cols}; keys and ids must "
-                "be non-null (an inner join can never match a NULL key, "
-                "and a NULL id can never be upserted over or deleted)"
-            )
-        return df, int(row["n"]), None
-    per = (
-        df.select(*group_cols, nul.cast("int").alias("__nul__"))
-        .groupBy(*group_cols)
-        .agg(
-            F.count(F.lit(1)).alias("__c__"),
-            F.sum("__nul__").alias("__n_nul__"),
-        )
-    )
-    row = per.agg(
-        F.coalesce(F.sum("__c__"), F.lit(0)).alias("n"),
-        F.coalesce(F.sum("__n_nul__"), F.lit(0)).alias("n_nul"),
-        F.max("__c__").alias("maxc"),
-        F.max(F.when(F.col("__c__") > 1, F.col(group_cols[0]))).alias("dup0"),
-    ).collect()[0]
-    if row["n_nul"] > 0:
-        # exact _reject_nulls message
-        raise ValueError(
-            f"{what} contains NULL in {req_cols}; keys and ids must be "
-            "non-null (an inner join can never match a NULL key, and a "
-            "NULL id can never be upserted over or deleted)"
-        )
-    if dup_msg is not None and row["maxc"] is not None and row["maxc"] > 1:
-        raise ValueError(dup_msg.format(row["dup0"]))
-    return df, int(row["n"]), row["dup0"]
+_NULL_MSG = (
+    "{} contains NULL in {}; keys and ids must be non-null (an inner join "
+    "can never match a NULL key, and a NULL id can never be upserted over "
+    "or deleted)"
+)
 
 
 def _rank_of(bid: str) -> str:
@@ -207,24 +146,15 @@ def _validate_monotone(
             )
 
 
-def _ops_current(
-    spark: SparkSession,
-    store: str,
-    batch_id: str,
-    spec: JoinViewSpec,
-    id_col: str,
-    probe: DataFrame | None,
-    any_op: bool = False,
-    buckets: list[int] | None = None,
-) -> DataFrame | None:
-    """Resolved CURRENT rows of one side as of before ``batch_id``:
-    per ``(key, id)``, the latest op wins and a tombstone means absent.
-
-    Reads each surviving batch directory individually so the resolution
-    rank is the TRUSTED directory name (the type-inferred partition
-    column misorders "10" vs 9 — store.py's identity lesson), with the
-    bucket filter applied per directory for file-level pruning when the
-    layout is bucketed and a probe delta is given."""
+def _stored_ops(
+    spark: SparkSession, store: str, batch_id: str
+) -> list[DataFrame] | None:
+    """One side's op log before ``batch_id``: each surviving batch
+    directory read on its own, tagged with its resolution rank — the
+    TRUSTED directory name (the type-inferred partition column misorders
+    "10" vs 9 — store.py's identity lesson). Directories are read under
+    their footer schemas (`store.read_batch_dirs`), so this starts no
+    Spark job."""
     listed = _list_partitions(spark, store)
     if listed is None:
         return None
@@ -241,63 +171,70 @@ def _ops_current(
             store,
             len(keep),
         )
-    if buckets is None and spec.n_buckets and probe is not None:
-        # callers updating both sides pass a precomputed bucket set so the
-        # probe's hash-distinct runs once per batch, not once per side
-        buckets = [
-            r[0]
-            for r in probe.select(
-                F.pmod(
-                    F.xxhash64(F.col(spec.key)), F.lit(spec.n_buckets)
-                ).cast("int")
-            )
-            .distinct()
-            .collect()
-        ]
-    probe_t = (
-        probe.schema[spec.key].dataType
-        if (buckets is not None and probe is not None)
-        else None
-    )
-    parts = []
-    for bid in sorted(keep):
-        df = spark.read.parquet(f"{store}/{keep[bid]}")
+    return [
+        read_batch_dirs(spark, f"{store}/{keep[bid]}").withColumn(
+            _RANK_COL, F.lit(_rank_of(bid))
+        )
+        for bid in sorted(keep)
+    ]
+
+
+def _resolve_ops(
+    parts: list[DataFrame] | None,
+    spec: JoinViewSpec,
+    id_col: str,
+    *,
+    any_op: bool = False,
+    buckets: list[int] | None = None,
+    key_type: DataType | None = None,
+) -> DataFrame | None:
+    """Resolved CURRENT rows of one side from its :func:`_stored_ops`:
+    per ``(key, id)``, the latest op wins and a tombstone means absent.
+
+    With ``buckets`` (the batch's probe buckets, hashed from
+    ``key_type``) each directory of a bucketed store is pruned to them
+    at the file level. Directories whose columns differ fail at the
+    union, where a read under one shared schema would fill NULLs."""
+    if not parts:
+        return None
+    pruned = []
+    for df in parts:
         if buckets is not None and BUCKET_COL in df.columns:
             # bucket pruning hashes the PROBE's key type; a feed whose
             # key arrives widened (int store, bigint batch) would probe
             # DIFFERENT buckets than the rows were committed under —
             # unionByName widens silently, so the miss would be silent
             # z-set corruption (stale versions surviving retraction)
-            if probe_t is not None:
-                stored_t = df.schema[spec.key].dataType
-                if stored_t != probe_t:
-                    raise ValueError(
-                        f"key column {spec.key!r} arrives as "
-                        f"{probe_t.simpleString()} but the store holds "
-                        f"{stored_t.simpleString()}; bucket hashes would "
-                        "diverge — cast the feed to the stored type"
-                    )
-            df = df.filter(F.col(BUCKET_COL).isin(buckets))
-        parts.append(df.withColumn(_RANK_COL, F.lit(_rank_of(bid))))
-    ops = parts[0]
-    for p in parts[1:]:
+            stored_t = df.schema[spec.key].dataType
+            if key_type is not None and stored_t != key_type:
+                raise ValueError(
+                    f"key column {spec.key!r} arrives as "
+                    f"{key_type.simpleString()} but the store holds "
+                    f"{stored_t.simpleString()}; bucket hashes would "
+                    "diverge — cast the feed to the stored type"
+                )
+            df = df.filter(
+                f"{BUCKET_COL} IN ({', '.join(map(str, buckets))})"
+                if buckets
+                else "false"
+            )
+        pruned.append(df)
+    ops = pruned[0]
+    for p in pruned[1:]:
         ops = ops.unionByName(p)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(spec.key, id_col).orderBy(F.col(_RANK_COL).desc())
-    cur = ops.withColumn("__rn__", F.row_number().over(w)).filter(
-        F.col("__rn__") == 1
-    )
+    cur = ops.selectExpr(
+        "*",
+        f"row_number() OVER (PARTITION BY {_q(spec.key)}, {_q(id_col)}"
+        f" ORDER BY {_RANK_COL} DESC) AS __rn__",
+    ).filter("__rn__ = 1")
     if not any_op:
         # the CURRENT side: a latest-op tombstone means absent. The
         # any_op=True variant keeps tombstones — the seq watermark must
         # compare an incoming op against the latest op of ANY kind, or
         # a stale re-insert after a delete would slip past validation.
-        cur = cur.filter(F.col(OP_COL) == "u")
+        cur = cur.filter(f"{OP_COL} = 'u'")
     drop = [_RANK_COL, "__rn__"] + ([] if any_op else [OP_COL])
-    if BUCKET_COL in cur.columns:
-        drop.append(BUCKET_COL)
-    return cur.drop(*drop)
+    return cur.drop(*drop, BUCKET_COL)
 
 
 def _pair_cols(key: str, id_col: str) -> list[str]:
@@ -310,7 +247,9 @@ def _pair_cols(key: str, id_col: str) -> list[str]:
 def _as_pairs(
     dfs: list[DataFrame | None], key: str, id_col: str
 ) -> DataFrame | None:
-    """Distinct retracted ``(key, id)`` version pairs of one side."""
+    """Retracted ``(key, id)`` version pairs of one side, repeats kept:
+    they only feed semi- and anti-joins, which a repeat cannot change,
+    so a distinct would be one more shuffle stage per side."""
     cols = _pair_cols(key, id_col)
     parts = [d.select(*cols) for d in dfs if d is not None]
     if not parts:
@@ -318,7 +257,25 @@ def _as_pairs(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.distinct()
+    return out
+
+
+def _minus(cur: DataFrame | None, pairs, key: str, id_col: str):
+    if cur is None:
+        return None
+    if pairs is None:
+        return cur
+    return cur.join(
+        F.broadcast(pairs), on=_pair_cols(key, id_col), how="left_anti"
+    )
+
+
+def _hit(cur: DataFrame | None, pairs, key: str, id_col: str):
+    if cur is None or pairs is None:
+        return None
+    return cur.join(
+        F.broadcast(pairs), on=_pair_cols(key, id_col), how="left_semi"
+    )
 
 
 def _null_fill_deletes(
@@ -344,6 +301,41 @@ def _null_fill_deletes(
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return deletes.select(*cols)
+
+
+# the four feeds of a batch, in the order their errors are raised: left
+# before right, upserts before deletes
+_FEEDS = (
+    ("left", "upserts"),
+    ("left", "deletes"),
+    ("right", "upserts"),
+    ("right", "deletes"),
+)
+_SIDES = ("left", "right")
+
+
+def _id_col(spec: JoinViewSpec, side: str) -> str:
+    return spec.left_id if side == "left" else spec.right_id
+
+
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+@contextlib.contextmanager
+def _phase(spark: SparkSession, batch_id: str, name: str):
+    """Label the jobs of one update phase with ``spark.job.description``
+    (a thread-local property), restoring the caller's description after.
+    The job group is left alone: it is the caller's, and perfbench
+    attributes stages by it."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"update_join_view_cdc {batch_id}: {name}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def update_join_view_cdc(
@@ -373,411 +365,522 @@ def update_join_view_cdc(
     metadata and never reaches the view rows. All-or-nothing per store:
     a store born with seq tracking must always be updated with it, and
     a store born without cannot adopt it mid-stream (the op-log
-    partition schemas must union)."""
+    partition schemas must union).
+
+    The batch runs in five phases, each naming its Spark jobs
+    (``spark.job.description``): validate → guard feeds → resolve sides
+    → build delta → commit. Every check raises before the first write,
+    and the view commits strictly before the side op logs."""
     batch_id = _valid_id(batch_id)
-    feeds = {
-        "left": (left_upserts, left_deletes, spec.left_id),
-        "right": (right_upserts, right_deletes, spec.right_id),
-    }
-    if all(u is None and d is None for u, d, _ in feeds.values()):
-        return {
-            "left_upserts": 0,
-            "left_deletes": 0,
-            "right_upserts": 0,
-            "right_deletes": 0,
-            "view_inserts": 0,
-            "view_retractions": 0,
-        }
-    _validate_monotone(spark, root, batch_id)
-
-    counts: dict[str, int] = {}
-    checked: dict[str, tuple[DataFrame | None, DataFrame | None]] = {}
-    seq_req = [seq_col] if seq_col is not None else []
-
-    def _check_side(
-        side: str,
-    ) -> tuple[DataFrame | None, DataFrame | None, dict[str, int]]:
-        ups, dels, id_col = feeds[side]
-        side_counts: dict[str, int] = {}
-        if ups is not None:
-            _check_cols(ups, [spec.key, id_col, *seq_req], f"{side} upserts")
-            # checkpoint + count + NULL guard + dup-id guard: ONE job
-            # (message text matches _reject_nulls and joinview's dup-id guard)
-            ups, side_counts[f"{side}_upserts"], _ = _persist_checked_feed(
-                ups,
-                [spec.key, id_col, *seq_req],
-                [id_col],
-                f"{side} upserts",
-                dup_msg=(
-                    f"{side} delta repeats {id_col}={{0!r}} within the "
-                    "batch; per-side ids must be unique for the view "
-                    "store to stay compaction-safe (see "
-                    "incremental/joinview.py)"
-                ),
+    feeds = dict(
+        zip(_FEEDS, (left_upserts, left_deletes, right_upserts, right_deletes))
+    )
+    counts = {f"{side}_{kind}": 0 for side, kind in _FEEDS}
+    counts.update(view_inserts=0, view_retractions=0)
+    if all(df is None for df in feeds.values()):
+        return counts
+    with _phase(spark, batch_id, "validate"):
+        _validate_monotone(spark, root, batch_id)
+        feeds, column_error = _checked_feeds(spec, feeds, seq_col)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        with _phase(spark, batch_id, "guard feeds"):
+            # the stored sides' listings and directory reads start no job:
+            # they run beside the guard job and wait for its bucket set
+            stored = pool.submit(
+                inheritable_thread_target(spark)(_read_sides),
+                spark,
+                root,
+                batch_id,
             )
-        else:
-            side_counts[f"{side}_upserts"] = 0
-        if dels is not None:
-            _check_cols(dels, [spec.key, id_col, *seq_req], f"{side} deletes")
-            dels = dels.select(
-                *_pair_cols(spec.key, id_col), *seq_req
-            ).distinct()
-            # distinct() is over (pair, seq): the same version deleted
-            # twice under different seqs is an ordering ambiguity, not a
-            # no-op — the duplicate-pair guard below catches it (without
-            # seq the distinct makes pairs unique, so it can never fire)
-            dels, side_counts[f"{side}_deletes"], _ = _persist_checked_feed(
-                dels,
-                [spec.key, id_col, *seq_req],
-                _pair_cols(spec.key, id_col),
-                f"{side} deletes",
-                dup_msg=(
+            feeds, fed, buckets, key_type = _guard_feeds(spec, feeds, seq_col)
+            if column_error is not None:
+                raise column_error
+            counts.update(fed)
+        with _phase(spark, batch_id, "resolve sides"):
+            a_cur, b_cur = _resolve_sides(
+                spark, spec, feeds, stored, seq_col, buckets, key_type
+            )
+    with _phase(spark, batch_id, "build delta"):
+        view_delta = _view_delta(spec, feeds, a_cur, b_cur, seq_col)
+        if view_delta is not None:
+            view_delta, ins, ret = _counted(view_delta)
+            counts.update(view_inserts=ins, view_retractions=ret)
+    with _phase(spark, batch_id, "commit"):
+        _commit(spark, root, batch_id, spec, feeds, counts, view_delta, seq_col)
+    return counts
+
+
+def _checked_feeds(
+    spec: JoinViewSpec,
+    feeds: dict[tuple[str, str], DataFrame | None],
+    seq_col: str | None,
+) -> tuple[dict[tuple[str, str], DataFrame], ValueError | None]:
+    """The present feeds, in feed order, up to the first one missing a
+    required column or carrying a reserved one; deletes are cut to their
+    ``(key, id)`` pair and seq. That first error is returned, not
+    raised: the guard errors of the feeds before it take precedence."""
+    seq_req = [seq_col] if seq_col is not None else []
+    out = {}
+    for side, kind in _FEEDS:
+        df = feeds[(side, kind)]
+        if df is None:
+            continue
+        id_col = _id_col(spec, side)
+        try:
+            _check_cols(df, [spec.key, id_col, *seq_req], f"{side} {kind}")
+        except ValueError as e:
+            return out, e
+        if kind == "deletes":
+            df = df.select(*_pair_cols(spec.key, id_col), *seq_req)
+        out[(side, kind)] = df
+    return out, None
+
+
+def _guard_feeds(
+    spec: JoinViewSpec,
+    feeds: dict[tuple[str, str], DataFrame],
+    seq_col: str | None,
+):
+    """Checkpoint each feed once, so the guards, the delta and the
+    commit read the same rows, and answer every per-batch guard from ONE
+    aggregate over all four feeds: ``groupBy(side, id)``, then one global
+    row (a result job and its two shuffle stages):
+
+    - each feed's row count (deletes count distinct ``(pair, seq)`` rows);
+    - NULL keys, ids or seqs, per feed;
+    - upsert ids repeated in the batch;
+    - delete pairs repeated under two different seqs;
+    - a pair both upserted and deleted;
+    - the probe's key buckets, ``pmod(xxhash64(key), n_buckets)``.
+
+    Errors are raised left before right and, within a side, upsert
+    NULL, upsert repeat, delete NULL, delete repeat, then the clash. The expressions are SQL text: one PySpark
+    call per projection and aggregate rather than several per column.
+    Returns (feeds, counts, probe buckets or None, the probe's key
+    type)."""
+    if not feeds:
+        return feeds, {}, None, None
+    # under AQE a checkpoint call runs its plan's shuffle stages at once;
+    # a feed of local rows or a plain scan has none, so no job starts
+    # here and the aggregate below materializes the checkpoints
+    feeds = {fk: df.localCheckpoint(eager=False) for fk, df in feeds.items()}
+    sides = [s for s in _SIDES if (s, "upserts") in feeds or (s, "deletes") in feeds]
+    seq_req = [seq_col] if seq_col is not None else []
+    parts = []
+    for side, kind in _FEEDS:
+        df = feeds.get((side, kind))
+        if df is None:
+            continue
+        req = [spec.key, _id_col(spec, side), *seq_req]
+
+        def own(col: str, name: str, side=side) -> list[str]:
+            # per-side id and seq columns: the union widens types within
+            # a side only, as the former per-side checks compared them
+            return [f"{_q(col) if s == side else 'NULL'} AS __{name}_{s}__" for s in sides]
+
+        parts.append(
+            df.selectExpr(
+                f"'{side}' AS __side__",
+                f"{kind == 'upserts'} AS __ups__",
+                f"{_q(spec.key)} AS __key__",
+                *own(_id_col(spec, side), "id"),
+                *(own(seq_col, "seq") if seq_col is not None else []),
+                " OR ".join(f"{_q(c)} IS NULL" for c in req) + " AS __nul__",
+            )
+        )
+    rows = parts[0]
+    for p in parts[1:]:
+        rows = rows.unionByName(p)
+    key_type = rows.schema["__key__"].dataType
+    seqs = "".join(f", __seq_{s}__" for s in sides if seq_req)
+    per_id = [
+        "count_if(__ups__) AS n_u",
+        "count_if(NOT __ups__) AS n_d_rows",
+        # distinct (key, seq) deletes of this id, and their distinct keys
+        f"size(collect_set(IF(__ups__, NULL, struct(__key__{seqs})))) AS n_d",
+        "size(collect_set(IF(__ups__, NULL, __key__))) AS n_d_keys",
+        "arrays_overlap(collect_set(IF(__ups__, __key__, NULL)),"
+        " collect_set(IF(__ups__, NULL, __key__))) AS clash",
+        "count_if(__ups__ AND __nul__) AS nul_u",
+        "count_if(NOT __ups__ AND __nul__) AS nul_d",
+    ]
+    if spec.n_buckets:
+        per_id.append(
+            f"collect_set(CAST(pmod(xxhash64(__key__), {spec.n_buckets}) AS INT))"
+            " AS buckets"
+        )
+    per = rows.groupBy("__side__", *[f"__id_{s}__" for s in sides]).agg(
+        *[F.expr(e) for e in per_id]
+    )
+    total = []
+    for s in sides:
+        on = f"__side__ = '{s}'"
+        total += [
+            f"sum(IF({on}, n_u, 0)) AS {s}_upserts",
+            f"sum(IF({on}, n_d, 0)) AS {s}_deletes",
+            f"sum(IF({on}, n_d_rows - n_d, 0)) AS {s}_d_repeats",
+            f"sum(IF({on}, nul_u, 0)) AS {s}_nul_u",
+            f"sum(IF({on}, nul_d, 0)) AS {s}_nul_d",
+            f"count_if({on} AND n_u > 1) AS {s}_dups",
+            f"max(IF({on} AND n_u > 1, __id_{s}__, NULL)) AS {s}_dup",
+            f"count_if({on} AND n_d > n_d_keys) AS {s}_pair_dups",
+            f"count_if({on} AND clash) AS {s}_clash",
+        ]
+    if spec.n_buckets:
+        total.append("flatten(collect_list(buckets)) AS buckets")
+    got = per.selectExpr(*total).collect()[0].asDict()
+
+    def n(name: str) -> int:
+        return int(got.get(name) or 0)
+
+    counts = {}
+    for side in sides:
+        id_col = _id_col(spec, side)
+        req = [spec.key, id_col, *seq_req]
+        if (side, "upserts") in feeds:
+            if n(f"{side}_nul_u"):
+                raise ValueError(_NULL_MSG.format(f"{side} upserts", req))
+            if n(f"{side}_dups"):
+                raise ValueError(
+                    f"{side} delta repeats {id_col}={got[f'{side}_dup']!r} "
+                    "within the batch; per-side ids must be unique for the "
+                    "view store to stay compaction-safe (see "
+                    "incremental/joinview.py)"
+                )
+            counts[f"{side}_upserts"] = n(f"{side}_upserts")
+        if (side, "deletes") in feeds:
+            if n(f"{side}_nul_d"):
+                raise ValueError(_NULL_MSG.format(f"{side} deletes", req))
+            # the same version deleted twice under different seqs is an
+            # ordering ambiguity, not a no-op (without seq a repeated pair
+            # is a plain repeat, dropped below)
+            if seq_col is not None and n(f"{side}_pair_dups"):
+                raise ValueError(
                     f"{side} batch deletes the same ({spec.key}, "
                     f"{id_col}) version under two different "
                     f"{seq_col} values — ambiguous feed"
                 )
-                if seq_col is not None
-                else None,
+            if n(f"{side}_d_repeats"):
+                # rows repeated verbatim: commit each tombstone once
+                feeds[(side, "deletes")] = feeds[(side, "deletes")].distinct()
+            counts[f"{side}_deletes"] = n(f"{side}_deletes")
+        if n(f"{side}_clash"):
+            raise ValueError(
+                f"{side} batch upserts AND deletes the same "
+                f"({spec.key}, {id_col}) version — ambiguous: without"
+                " an order this is either a same-key UPDATE (the"
+                " Debezium delete(old image)+insert(new image)"
+                " encoding — map those to bare upserts, or feed"
+                " through start_cdc_join_view_stream(seq_col=...)"
+                " which resolves ordered pairs) or an"
+                " insert-then-delete whose net is ABSENT. A"
+                " key-moving update is delete(old key) + upsert(new"
+                " key), which IS allowed in one batch"
             )
-        else:
-            side_counts[f"{side}_deletes"] = 0
-        if ups is not None and dels is not None:
-            clash = ups.join(
-                dels, on=_pair_cols(spec.key, id_col), how="left_semi"
-            )
-            if clash.limit(1).collect():
-                raise ValueError(
-                    f"{side} batch upserts AND deletes the same "
-                    f"({spec.key}, {id_col}) version — ambiguous: without"
-                    " an order this is either a same-key UPDATE (the"
-                    " Debezium delete(old image)+insert(new image)"
-                    " encoding — map those to bare upserts, or feed"
-                    " through start_cdc_join_view_stream(seq_col=...)"
-                    " which resolves ordered pairs) or an"
-                    " insert-then-delete whose net is ABSENT. A"
-                    " key-moving update is delete(old key) + upsert(new"
-                    " key), which IS allowed in one batch"
-                )
-        return ups, dels, side_counts
+    buckets = sorted(set(got["buckets"] or ())) if spec.n_buckets else None
+    return feeds, counts, buckets, key_type
 
-    # the two sides' guard jobs are independent — overlap them (guide
-    # §2.6); results land in `checked`/`counts` in a fixed order so
-    # error precedence (left first) matches the former sequential loop
-    from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for side, res in zip(
-            ("left", "right"),
-            pool.map(_check_side, ("left", "right")),
-        ):
-            ups, dels, side_counts = res
-            checked[side] = (ups, dels)
-            counts.update(side_counts)
-    left_upserts, left_deletes = checked["left"]
-    right_upserts, right_deletes = checked["right"]
+def _read_sides(
+    spark: SparkSession, root: str, batch_id: str
+) -> dict[str, list[DataFrame] | None]:
+    """:func:`_stored_ops` of both sides."""
+    return {
+        side: _stored_ops(spark, side_path(root, side), batch_id)
+        for side in _SIDES
+    }
 
-    shared_ok = {spec.key} | set(seq_req)
-    if left_upserts is not None and right_upserts is not None:
-        overlap = (
-            set(left_upserts.columns) & set(right_upserts.columns)
-        ) - shared_ok
+
+def _resolve_sides(
+    spark: SparkSession,
+    spec: JoinViewSpec,
+    feeds: dict[tuple[str, str], DataFrame],
+    stored: Future,
+    seq_col: str | None,
+    buckets: list[int] | None,
+    key_type: DataType | None,
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """Both sides' current rows as of before this batch, pruned to the
+    probe's buckets, and the checks that need the stored sides: column
+    clashes across the sides, and with ``seq_col`` the all-or-nothing
+    rule and the per-version seq watermark. ``stored`` is the pending
+    :func:`_read_sides`. Returns (A_cur, B_cur)."""
+    shared_ok = {spec.key} | ({seq_col} if seq_col is not None else set())
+    ups = {side: feeds.get((side, "upserts")) for side in _SIDES}
+    if ups["left"] is not None and ups["right"] is not None:
+        overlap = (set(ups["left"].columns) & set(ups["right"].columns)) - shared_ok
         if overlap:
             raise ValueError(
                 f"non-key columns {sorted(overlap)} exist on both sides; "
                 "rename before maintaining the view"
             )
-
-    left_store = side_path(root, "left")
-    right_store = side_path(root, "right")
-    view_store = side_path(root, "view")
-
-    # one probe set per opposite store: every key this batch touches —
-    # the union bounds every pruned read below (module delta rule)
-    def _keys(*dfs: DataFrame | None) -> DataFrame | None:
-        parts = [d.select(spec.key) for d in dfs if d is not None]
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.distinct()
-
-    probe = _keys(left_upserts, left_deletes, right_upserts, right_deletes)
-
-    # one bucket-set computation for the shared probe (both _ops_current
-    # calls previously re-ran the hash-distinct collect)
-    probe_buckets = None
-    if spec.n_buckets and probe is not None:
-        probe_buckets = [
-            r[0]
-            for r in probe.select(
-                F.pmod(
-                    F.xxhash64(F.col(spec.key)), F.lit(spec.n_buckets)
-                ).cast("int")
-            )
-            .distinct()
-            .collect()
-        ]
-
+    stored = stored.result()
     # with seq tracking the same pruned read serves both the watermark
     # validation (latest op of ANY kind, tombstones included) and the
     # current side (its op=='u' restriction) — one store scan, not two
-    a_latest = _ops_current(
-        spark, left_store, batch_id, spec, spec.left_id, probe,
-        any_op=seq_col is not None, buckets=probe_buckets,
-    )
-    b_latest = _ops_current(
-        spark, right_store, batch_id, spec, spec.right_id, probe,
-        any_op=seq_col is not None, buckets=probe_buckets,
-    )
-    # lazy checkpoints: the first consuming job materializes them once;
-    # an eager checkpoint here was a dedicated extra job per side
-    if a_latest is not None:
-        a_latest = a_latest.localCheckpoint(eager=False)
-    if b_latest is not None:
-        b_latest = b_latest.localCheckpoint(eager=False)
-    if seq_col is None:
-        a_cur, b_cur = a_latest, b_latest
-    else:
-        for which, latest in (("left", a_latest), ("right", b_latest)):
-            if latest is not None and seq_col not in latest.columns:
+    latest = {
+        side: _resolve_ops(
+            stored[side],
+            spec,
+            _id_col(spec, side),
+            any_op=seq_col is not None,
+            buckets=buckets,
+            key_type=key_type,
+        )
+        for side in _SIDES
+    }
+    if seq_col is not None:
+        for side in _SIDES:
+            if latest[side] is not None and seq_col not in latest[side].columns:
                 raise ValueError(
-                    f"the {which} op log was written WITHOUT {seq_col!r}"
+                    f"the {side} op log was written WITHOUT {seq_col!r}"
                     " — seq tracking is all-or-nothing per store (the"
                     " partition schemas must union); rebuild or compact-"
                     "migrate the store to adopt it"
                 )
-        a_cur = (
-            a_latest.filter(F.col(OP_COL) == "u").drop(OP_COL)
-            if a_latest is not None
+    # every delta term reads a side, and the copies differ in the filters
+    # the optimizer pushes into them, so without a checkpoint each term
+    # would run the side's resolution window again
+    latest = dict(zip(_SIDES, _checkpointed(spark, [latest[s] for s in _SIDES])))
+    if seq_col is None:
+        cur = latest
+    else:
+        cur = {
+            side: df.filter(F.col(OP_COL) == "u").drop(OP_COL)
+            if df is not None
             else None
-        )
-        b_cur = (
-            b_latest.filter(F.col(OP_COL) == "u").drop(OP_COL)
-            if b_latest is not None
-            else None
-        )
-        # the watermark: every incoming op must advance its version's
-        # seq past the stored latest op — tombstones included, or a
-        # stale re-insert arriving after its delete would resurrect
-        for side, latest, ups, dels, id_col in (
-            ("left", a_latest, left_upserts, left_deletes, spec.left_id),
-            ("right", b_latest, right_upserts, right_deletes, spec.right_id),
-        ):
-            if latest is None:
-                continue
-            pcols = _pair_cols(spec.key, id_col)
-            parts = [
-                d.select(*pcols, seq_col)
-                for d in (ups, dels)
-                if d is not None
-            ]
-            if not parts:
-                continue
-            incoming = parts[0]
-            for p in parts[1:]:
-                incoming = incoming.unionByName(p)
-            stored = latest.filter(F.col(seq_col).isNotNull()).select(
-                *pcols, F.col(seq_col).alias("__stored_seq__")
-            )
-            bad = (
-                incoming.join(stored, on=pcols, how="inner")
-                .filter(F.col(seq_col) <= F.col("__stored_seq__"))
-                .limit(1)
-                .collect()
-            )
-            if bad:
-                r = bad[0]
-                raise ValueError(
-                    f"{side} op arrives OUT OF ORDER: ({spec.key}="
-                    f"{r[spec.key]!r}, {id_col}={r[id_col]!r}) carries "
-                    f"{seq_col}={r[seq_col]!r} but the op log already "
-                    f"holds {seq_col}={r['__stored_seq__']!r} for that "
-                    "version — the feed reordered across batches; CDC "
-                    "ops must arrive in per-entity commit order"
-                )
-
+            for side, df in latest.items()
+        }
+        for side in _SIDES:
+            _check_seq_order(spec, feeds, side, latest[side], seq_col)
     # the batch-local overlap check above cannot see columns committed
     # in EARLIER batches of the opposite side (the insert-only view's
     # lesson): a one-sided 'val' batch against a stored opposite 'val'
     # would otherwise die deep in the parquet write with an
     # unactionable duplicate-column error
-    for ups, opp, which in (
-        (left_upserts, b_cur, "left"),
-        (right_upserts, a_cur, "right"),
-    ):
-        if ups is None or opp is None:
+    for which, opp in (("left", cur["right"]), ("right", cur["left"])):
+        if ups[which] is None or opp is None:
             continue
-        overlap = (set(ups.columns) & set(opp.columns)) - shared_ok
+        overlap = (set(ups[which].columns) & set(opp.columns)) - shared_ok
         if overlap:
             raise ValueError(
                 f"non-key columns {sorted(overlap)} exist on both the "
                 f"incoming {which} upserts and the STORED opposite side; "
                 "rename before maintaining the view"
             )
+    return cur["left"], cur["right"]
 
-    # the seq watermark is op-log metadata: it must not reach the view
-    # rows (both sides carry it under ONE name — a joined row would
-    # collide), so every delta-math input sheds it here; the COMMIT
-    # section below uses the *_store variants that keep it
-    left_ups_store, right_ups_store = left_upserts, right_upserts
-    left_dels_store, right_dels_store = left_deletes, right_deletes
-    if seq_col is not None:
 
-        def _shed(df: DataFrame | None) -> DataFrame | None:
-            return df.drop(seq_col) if df is not None else None
+def _checkpointed(
+    spark: SparkSession, dfs: list[DataFrame | None]
+) -> list[DataFrame | None]:
+    """``localCheckpoint(eager=False)`` of each frame (``None`` passes
+    through), each on its own thread: under AQE the call itself runs the
+    plan's shuffle stages, so the frames' stages overlap; only the final
+    stage waits for the first consumer."""
+    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
+        futs = [
+            None
+            if df is None
+            else pool.submit(
+                inheritable_thread_target(spark)(df.localCheckpoint), False
+            )
+            for df in dfs
+        ]
+        return [None if f is None else f.result() for f in futs]
 
-        left_upserts = _shed(left_upserts)
-        right_upserts = _shed(right_upserts)
-        left_deletes = _shed(left_deletes)
-        right_deletes = _shed(right_deletes)
-        a_cur = _shed(a_cur)
-        b_cur = _shed(b_cur)
 
-    r_a = _as_pairs([left_upserts, left_deletes], spec.key, spec.left_id)
-    r_b = _as_pairs([right_upserts, right_deletes], spec.key, spec.right_id)
-
-    def _minus(cur: DataFrame | None, pairs, key, id_col):
-        if cur is None:
-            return None
-        if pairs is None:
-            return cur
-        return cur.join(
-            F.broadcast(pairs), on=_pair_cols(key, id_col), how="left_anti"
+def _check_seq_order(
+    spec: JoinViewSpec,
+    feeds: dict[tuple[str, str], DataFrame],
+    side: str,
+    latest: DataFrame | None,
+    seq_col: str,
+) -> None:
+    """The watermark: every incoming op must advance its version's seq
+    past the stored latest op — tombstones included, or a stale
+    re-insert arriving after its delete would resurrect."""
+    if latest is None:
+        return
+    id_col = _id_col(spec, side)
+    pcols = _pair_cols(spec.key, id_col)
+    parts = [
+        feeds[(side, kind)].select(*pcols, seq_col)
+        for kind in ("upserts", "deletes")
+        if (side, kind) in feeds
+    ]
+    if not parts:
+        return
+    incoming = parts[0]
+    for p in parts[1:]:
+        incoming = incoming.unionByName(p)
+    stored = latest.filter(F.col(seq_col).isNotNull()).select(
+        *pcols, F.col(seq_col).alias("__stored_seq__")
+    )
+    bad = (
+        incoming.join(stored, on=pcols, how="inner")
+        .filter(F.col(seq_col) <= F.col("__stored_seq__"))
+        .limit(1)
+        .collect()
+    )
+    if bad:
+        r = bad[0]
+        raise ValueError(
+            f"{side} op arrives OUT OF ORDER: ({spec.key}="
+            f"{r[spec.key]!r}, {id_col}={r[id_col]!r}) carries "
+            f"{seq_col}={r[seq_col]!r} but the op log already "
+            f"holds {seq_col}={r['__stored_seq__']!r} for that "
+            "version — the feed reordered across batches; CDC "
+            "ops must arrive in per-entity commit order"
         )
 
-    def _hit(cur: DataFrame | None, pairs, key, id_col):
-        if cur is None or pairs is None:
-            return None
-        return cur.join(
-            F.broadcast(pairs), on=_pair_cols(key, id_col), how="left_semi"
-        )
 
+def _view_delta(
+    spec: JoinViewSpec,
+    feeds: dict[tuple[str, str], DataFrame],
+    a_cur: DataFrame | None,
+    b_cur: DataFrame | None,
+    seq_col: str | None,
+) -> DataFrame | None:
+    """The batch's signed view rows by the module's delta rule, or
+    ``None`` when no term has both inputs. The seq watermark is op-log
+    metadata and must not reach the view rows (both sides carry it under
+    ONE name — a joined row would collide), so every input sheds it."""
+
+    def _shed(df: DataFrame | None) -> DataFrame | None:
+        if df is None or seq_col is None:
+            return df
+        return df.drop(seq_col)
+
+    lu, ld, ru, rd = (_shed(feeds.get(f)) for f in _FEEDS)
+    a_cur, b_cur = _shed(a_cur), _shed(b_cur)
+    r_a = _as_pairs([lu, ld], spec.key, spec.left_id)
+    r_b = _as_pairs([ru, rd], spec.key, spec.right_id)
     a_live = _minus(a_cur, r_a, spec.key, spec.left_id)   # A_cur ∖ R_A
     a_gone = _hit(a_cur, r_a, spec.key, spec.left_id)     # A_cur ⋉ R_A
     b_live = _minus(b_cur, r_b, spec.key, spec.right_id)  # B_cur ∖ R_B
     b_gone = _hit(b_cur, r_b, spec.key, spec.right_id)    # B_cur ⋉ R_B
-
-    deltas: list[DataFrame] = []
-
-    def _join(l, r, diff: int):  # noqa: E741
-        if l is None or r is None:
-            return
-        deltas.append(
-            l.join(r, on=spec.key, how="inner").withColumn(
-                DIFF_COL, F.lit(diff)
-            )
+    b_new = b_live                                        # (B_cur ∖ R_B) ∪ U_B
+    if ru is not None:
+        b_new = ru if b_new is None else b_new.unionByName(ru)
+    deltas = [
+        l.join(r, on=spec.key, how="inner").withColumn(DIFF_COL, F.lit(diff))
+        for l, r, diff in (  # noqa: E741
+            # ΔV⁺: U_A ⋈ ((B_cur ∖ R_B) ∪ U_B)  ∪  (A_cur ∖ R_A) ⋈ U_B
+            (lu, b_new, +1),
+            (a_live, ru, +1),
+            # ΔV⁻: (A_cur ⋉ R_A) ⋈ B_cur  ∪  (A_cur ∖ R_A) ⋈ (B_cur ⋉ R_B)
+            (a_gone, b_cur, -1),
+            (a_live, b_gone, -1),
         )
+        if l is not None and r is not None
+    ]
+    if not deltas:
+        return None
+    view_delta = deltas[0]
+    for d in deltas[1:]:
+        view_delta = view_delta.unionByName(d)
+    return view_delta
 
-    # ΔV⁺: U_A ⋈ ((B_cur ∖ R_B) ∪ U_B)  ∪  (A_cur ∖ R_A) ⋈ U_B
-    b_new = b_live
-    if right_upserts is not None:
-        b_new = (
-            right_upserts
-            if b_new is None
-            else b_new.unionByName(right_upserts)
-        )
-    _join(left_upserts, b_new, +1)
-    _join(a_live, right_upserts, +1)
-    # ΔV⁻: (A_cur ⋉ R_A) ⋈ B_cur  ∪  (A_cur ∖ R_A) ⋈ (B_cur ⋉ R_B)
-    _join(a_gone, b_cur, -1)
-    _join(a_live, b_gone, -1)
 
-    counts["view_inserts"] = 0
-    counts["view_retractions"] = 0
-    if deltas:
-        view_delta = deltas[0]
-        for d in deltas[1:]:
-            view_delta = view_delta.unionByName(d)
-        view_delta = view_delta.localCheckpoint(eager=False)
-        # both signed counts in one job (was checkpoint + two counts)
-        stats = view_delta.agg(
-            F.coalesce(
-                F.sum(F.when(F.col(DIFF_COL) > 0, 1).otherwise(0)), F.lit(0)
-            ).alias("ins"),
-            F.coalesce(
-                F.sum(F.when(F.col(DIFF_COL) < 0, 1).otherwise(0)), F.lit(0)
-            ).alias("ret"),
-        ).collect()[0]
-        counts["view_inserts"] = int(stats["ins"])
-        counts["view_retractions"] = int(stats["ret"])
+def _counted(view_delta: DataFrame) -> tuple[DataFrame, int, int]:
+    """Checkpoint the view delta eagerly and count its inserts and
+    retractions in that same job (``observe``): the commit writes the
+    checkpoint, sized by the count, without recomputing the joins."""
+    obs = Observation()
+    view_delta = view_delta.observe(
+        obs,
+        F.count(F.when(F.col(DIFF_COL) > 0, 1)).alias("ins"),
+        F.count(F.when(F.col(DIFF_COL) < 0, 1)).alias("ret"),
+    ).localCheckpoint(eager=True)
+    stats = obs.get
+    return view_delta, int(stats["ins"]), int(stats["ret"])
+
+
+def _commit(
+    spark: SparkSession,
+    root: str,
+    batch_id: str,
+    spec: JoinViewSpec,
+    feeds: dict[tuple[str, str], DataFrame],
+    counts: dict[str, int],
+    view_delta: DataFrame | None,
+    seq_col: str | None,
+) -> None:
+    """The view delta, then both side op logs. The sides commit LAST
+    (the insert-only store's crash argument: a replay recomputes the
+    identical delta against identical old sides whichever subset of
+    commits survived); they write disjoint directories and any surviving
+    subset of the two replays identically, so they overlap on two
+    threads, which carry this thread's job group and description."""
+    if view_delta is not None:
         commit_batch_partition(
             view_delta,
-            view_store,
+            side_path(root, "view"),
             batch_id,
             counts["view_inserts"] + counts["view_retractions"],
         )
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [
+            pool.submit(
+                inheritable_thread_target(spark)(_commit_side_ops),
+                spark,
+                root,
+                batch_id,
+                spec,
+                side,
+                feeds,
+                counts[f"{side}_upserts"] + counts[f"{side}_deletes"],
+                seq_col,
+            )
+            for side in _SIDES
+        ]
+        for f in futs:
+            f.result()
 
-    # side op-log commits LAST (the insert-only store's crash argument:
-    # a replay recomputes the identical delta against identical old
-    # sides whichever subset of commits survived); the *_store variants
-    # keep the seq watermark the delta math shed. The two sides write to
-    # disjoint directories — overlap them (guide §2.6); the crash
-    # argument is order-free across the two commits (any surviving
-    # subset replays identically), only view-before-sides matters.
-    def _commit_one_side(args) -> None:
-        side, store, ups, dels, id_col = args
-        ops = None
-        if ups is not None:
-            ops = ups.withColumn(OP_COL, F.lit("u"))
-        if dels is not None:
-            template = ups
-            if template is None:
-                listed = _list_partitions(spark, store)
-                if listed is not None and listed[2]:
-                    _, _, dirs = listed
-                    any_dir = sorted(dirs.values())[0]
-                    template = spark.read.parquet(f"{store}/{any_dir}")
-                    drop = [
+
+def _commit_side_ops(
+    spark: SparkSession,
+    root: str,
+    batch_id: str,
+    spec: JoinViewSpec,
+    side: str,
+    feeds: dict[tuple[str, str], DataFrame],
+    rows: int,
+    seq_col: str | None,
+) -> None:
+    """One side's batch ops, seq watermark kept: the upserts tagged "u"
+    and the deletes as "d" tombstones in the op log's schema."""
+    store = side_path(root, side)
+    ups, dels = feeds.get((side, "upserts")), feeds.get((side, "deletes"))
+    ops = None
+    if ups is not None:
+        ops = ups.withColumn(OP_COL, F.lit("u"))
+    if dels is not None:
+        template = ups
+        if template is None:
+            listed = _list_partitions(spark, store)
+            if listed is not None and listed[2]:
+                any_dir = sorted(listed[2].values())[0]
+                template = read_batch_dirs(spark, f"{store}/{any_dir}")
+                template = template.drop(
+                    *[
                         c
                         for c in (BATCH_COL, BUCKET_COL, OP_COL)
                         if c in template.columns
                     ]
-                    template = template.drop(*drop)
-            if template is None:
-                # no store and no upserts: these ids were never inserted,
-                # so the tombstones can never apply — recording nothing
-                # is replay-identical and keeps the op schema anchored to
-                # real data
-                pass
-            else:
-                tomb = _null_fill_deletes(
-                    dels, template, spec, id_col, keep=tuple(seq_req)
                 )
-                tomb = tomb.withColumn(OP_COL, F.lit("d"))
-                ops = tomb if ops is None else ops.unionByName(tomb)
-        if ops is not None:
-            commit_side(
-                ops,
-                store,
-                batch_id,
-                spec,
-                counts[f"{side}_upserts"] + counts[f"{side}_deletes"],
-            )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(
-            pool.map(
-                _commit_one_side,
-                (
-                    (
-                        "left",
-                        left_store,
-                        left_ups_store,
-                        left_dels_store,
-                        spec.left_id,
-                    ),
-                    (
-                        "right",
-                        right_store,
-                        right_ups_store,
-                        right_dels_store,
-                        spec.right_id,
-                    ),
-                ),
-            )
-        )
-    return counts
+        # no store and no upserts: these ids were never inserted, so the
+        # tombstones can never apply — recording nothing is replay-
+        # identical and keeps the op schema anchored to real data
+        if template is not None:
+            keep = (seq_col,) if seq_col is not None else ()
+            tomb = _null_fill_deletes(
+                dels, template, spec, _id_col(spec, side), keep=keep
+            ).withColumn(OP_COL, F.lit("d"))
+            ops = tomb if ops is None else ops.unionByName(tomb)
+    if ops is not None:
+        commit_side(ops, store, batch_id, spec, rows)
 
 
 def read_join_view_cdc(spark: SparkSession, root: str) -> DataFrame | None:
@@ -791,7 +894,7 @@ def read_join_view_cdc(spark: SparkSession, root: str) -> DataFrame | None:
     _, _, dirs = listed
     if not dirs:
         return None
-    df = spark.read.parquet(*[f"{store}/{n}" for n in sorted(dirs.values())])
+    df = read_batch_dirs(spark, *[f"{store}/{n}" for n in sorted(dirs.values())])
     if BATCH_COL in df.columns:
         df = df.drop(BATCH_COL)
     content = [c for c in df.columns if c != DIFF_COL]
@@ -824,7 +927,7 @@ def read_join_view_cdc_delta(
     batch_id = _valid_id(batch_id)
     if batch_id not in dirs:
         return None
-    df = spark.read.parquet(f"{store}/{dirs[batch_id]}")
+    df = read_batch_dirs(spark, f"{store}/{dirs[batch_id]}")
     return df.drop(*[c for c in (BATCH_COL,) if c in df.columns])
 
 
@@ -836,16 +939,10 @@ def read_current_side(
     if side not in ("left", "right"):
         raise ValueError(f"side must be 'left' or 'right', got {side!r}")
     id_col = spec.left_id if side == "left" else spec.right_id
-    return _ops_current(
-        spark,
-        side_path(root, side),
-        # a "/" can never appear in a partition directory name, so no
-        # batch is excluded: this reads the WHOLE resolved side
-        "never/a/batch",
-        spec,
-        id_col,
-        None,
-    )
+    # a "/" can never appear in a partition directory name, so no batch
+    # is excluded: this reads the WHOLE resolved side
+    parts = _stored_ops(spark, side_path(root, side), "never/a/batch")
+    return _resolve_ops(parts, spec, id_col)
 
 
 def verify_cdc_side(
@@ -890,10 +987,6 @@ def compact_join_view_cdc(
     record and a stale re-insert arriving after the fold is still
     rejected. (The price: deleted versions' tombstones persist through
     compaction; GDPR forget still removes them physically.)"""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql.window import Window
-
     recover_pending_forgets(spark, root)
 
     def _fold_side(side: str) -> int:

@@ -89,17 +89,18 @@ def update_cdc_rollup(
     if feed is None:
         return {"add_rows": 0, "snap_rows": 0}
     cols = list(group_cols)
-    # Round 13 job collapse (guide §5 — the driver should do almost no
-    # work; this fold previously ran SEVEN driver actions per batch):
-    # the feed is one already-committed parquet partition, so a lazy
-    # checkpoint materializes it inside the first consuming job instead
-    # of a dedicated eager job; the touched groups are COLLECTED (they
-    # were already broadcast below, so they are driver-sized by the same
-    # bound — the batch's retraction groups, never history) which merges
-    # the old eager-checkpoint + count() pair into one job and gives the
-    # recompute a LITERAL pushable predicate; the add/snap counts fold
-    # into one aggregate that doubles as the output's materialization.
-    # 7 jobs -> 3 (touched collect, counts agg, commit write).
+    # Three driver actions per batch: the touched-group collect, the
+    # counts aggregate and the commit write. The feed is one
+    # committed parquet partition, so its checkpoint call starts no job:
+    # under AQE `localCheckpoint(eager=False)` runs a plan's shuffle
+    # stages at the call, a scan has none, and the first consumer
+    # materializes it. The touched groups are COLLECTED (driver-sized by
+    # the same bound as the broadcast below — the batch's retraction
+    # groups, never history), which gives the recompute a LITERAL
+    # pushable predicate; the add/snap counts fold into one aggregate
+    # over `out`'s checkpoint, whose call runs `out`'s shuffle stages (the
+    # partials and the recompute) as jobs of their own. perfbench's
+    # `query_cdc --trace 1` counts 10 Spark jobs per batch in all.
     feed = feed.localCheckpoint(eager=False)
     touched_rows = (
         feed.filter(F.col(DIFF_COL) < 0).select(*cols).distinct().collect()

@@ -180,6 +180,68 @@ def read_store_excluding_batch(
     )
 
 
+# the key under which Spark's parquet writer stores the row schema as JSON
+# in every file footer; Spark's own schema inference reads it back
+_SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(fs, path):
+    """The first file under ``path`` that a parquet read would include:
+    names starting with "." and "_" are hidden, except "_"-prefixed
+    ``k=v`` partition directories. ``None`` for a directory without one."""
+    for status in fs.listStatus(path):
+        name = status.getPath().getName()
+        if name.startswith(".") or (name.startswith("_") and "=" not in name):
+            continue
+        if not status.isDirectory():
+            return status.getPath()
+        found = _first_data_file(fs, status.getPath())
+        if found is not None:
+            return found
+    return None
+
+
+def _dir_schema(spark: SparkSession, path: str):
+    """The data schema ``spark.read.parquet(path)`` infers for one store
+    directory, read from a data file's footer on the driver: Spark's own
+    inference reads the same footer, but from a one-task Spark job per
+    directory. ``None`` when the directory holds no data file or the file
+    was not written by Spark; the caller then lets Spark infer."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    fs, jvm = _hadoop_fs(spark, path)
+    data = _first_data_file(fs, jvm.org.apache.hadoop.fs.Path(path))
+    if data is None:
+        return None
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            data, spark._jsc.hadoopConfiguration()
+        )
+    )
+    try:
+        meta = reader.getFooter().getFileMetaData().getKeyValueMetaData()
+        found = meta.get(_SPARK_SCHEMA_KEY)
+    finally:
+        reader.close()
+    return None if found is None else StructType.fromJson(json.loads(found))
+
+
+def read_batch_dirs(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` over batch directories without the
+    schema-inference job: the schema is the first directory's
+    (:func:`_dir_schema`), as Spark's inference, which reads one footer,
+    would take it. Partition directories below (a join-view side's
+    bucket level) are still discovered. A caller that must notice a
+    directory whose columns differ reads each directory on its own and
+    unions them: the union fails, where one read under a shared schema
+    would fill the missing columns with NULLs."""
+    schema = _dir_schema(spark, paths[0])
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
 _PAD = 12
 
 
