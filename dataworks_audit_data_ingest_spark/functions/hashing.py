@@ -58,8 +58,8 @@ def universal_hash(base_expr: str, i: int) -> str:
 # FLOOR(v * h * SRP_SCALE) summed as BIGINT — exact, order-independent,
 # identical across engines (FLOOR, not CAST: DuckDB's double→bigint cast
 # rounds, Spark's truncates). A power of two, so the scaling itself is
-# exact in binary floating point. Shared by q89, knn_join(method="srp"),
-# drop_semantic_duplicates, and tools/srp_study.py — every SRP signature
+# exact in binary floating point. Shared by q89, knn_join(method="srp")
+# and drop_semantic_duplicates — every SRP signature
 # in the repo must use the same scale or bucket joins stop matching.
 SRP_SCALE = 1 << 20
 

@@ -44,11 +44,7 @@ from pyspark.sql import functions as F
 from ..functions.localrel import local_rows_df
 
 from ..functions.graph import connected_components
-from .store import commit_batch_partition, read_store_excluding_batch
-
-# an id no caller batch may use; read_cc_labels(exclude_batch=None)
-# excludes this nonexistent partition, i.e. reads everything
-_NO_BATCH = "__cc_read_all__"
+from .store import commit_batch_partition, read_store
 
 
 def read_cc_labels(
@@ -58,8 +54,8 @@ def read_cc_labels(
     delta row — or ``None`` when the store does not exist yet. With
     ``exclude_batch`` the named partition is left out (the update's
     replay discipline)."""
-    prev = read_store_excluding_batch(
-        spark, store_path, exclude_batch if exclude_batch is not None else _NO_BATCH
+    prev = read_store(
+        spark, store_path, exclude=() if exclude_batch is None else (exclude_batch,)
     )
     if prev is None:
         return None

@@ -44,6 +44,7 @@ from .store import (
     _list_for_rewrite,
     _list_status,
     commit_batch_partition,
+    read_batch,
 )
 
 
@@ -70,7 +71,7 @@ def forget_ids_from_store(
     id_list = list(ids)
     removed: dict[str, int] = {}
     for bid in sorted(dirs):
-        part = spark.read.parquet(f"{store_path}/{dirs[bid]}")
+        part = read_batch(spark, store_path, bid)
         if id_col not in part.columns:
             raise ValueError(
                 f"store partition {bid!r} has no column {id_col!r}"
@@ -158,7 +159,7 @@ def forget_matching_from_store(
     for bid in sorted(dirs):
         if exclude_batch is not None and bid == exclude_batch:
             continue
-        part = spark.read.parquet(f"{store_path}/{dirs[bid]}")
+        part = read_batch(spark, store_path, bid)
         if id_col not in part.columns:
             raise ValueError(
                 f"store partition {bid!r} has no column {id_col!r}"

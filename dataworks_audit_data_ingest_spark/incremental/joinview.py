@@ -77,11 +77,11 @@ from .store import (
     BATCH_COL,
     BUCKET_COL,
     _list_for_rewrite,
-    _list_partitions,
     _valid_id,
     commit_batch_partition,
     compact_store,
-    read_store_excluding_batch,
+    read_batch,
+    read_store,
 )
 
 
@@ -194,26 +194,9 @@ def _old_side(
 
     The bucket set comes off a distinct over the (small) delta —
     at most ``n_buckets`` ints ever reach the driver."""
-    if not spec.n_buckets:
-        return read_store_excluding_batch(spark, store, batch_id)
-    # bucketed layout: the surviving batch directories each contain
-    # bucket=N subdirs, so they cannot be read as independent roots
-    # (partition discovery flags conflicting structures); read them
-    # under an explicit basePath instead. Batch exclusion STAYS
-    # path-addressed — the discovered batch_id column is type-inferred
-    # and untrustworthy for identity (store.py's lesson), so it is
-    # dropped unread; only the bucket filter uses discovery, where the
-    # VALUE never matters, just the directory-level pruning.
-    listed = _list_partitions(spark, store)
-    if listed is None:
-        return None
-    _, _, dirs = listed
-    keep = [name for bid, name in dirs.items() if bid != batch_id]
-    if not keep:
-        return None
-    old = spark.read.option("basePath", store).parquet(
-        *[f"{store}/{name}" for name in sorted(keep)]
-    )
+    old = read_store(spark, store, exclude=(batch_id,))
+    if old is None or not spec.n_buckets:
+        return old
     if probe is not None:
         # bucket pruning hashes the PROBE's key type; a delta whose key
         # arrives widened (int store, bigint delta) would probe
@@ -240,8 +223,7 @@ def _old_side(
         ]
         # filter on the DISCOVERED partition column -> directory pruning
         old = old.filter(F.col(BUCKET_COL).isin(buckets))
-    drop = [c for c in (BATCH_COL, BUCKET_COL) if c in old.columns]
-    return old.drop(*drop)
+    return old.drop(BUCKET_COL)
 
 
 def update_join_view(
@@ -367,34 +349,12 @@ def update_join_view(
     return counts
 
 
-def _read_all(spark: SparkSession, store: str) -> DataFrame | None:
-    """Every batch partition of a store (directory-addressed, like all
-    store reads), or ``None`` when the store has no partitions yet."""
-    listed = _list_partitions(spark, store)
-    if listed is None:
-        return None
-    _, _, dirs = listed
-    if not dirs:
-        return None
-    # basePath so a bucketed side store's two-level directories parse;
-    # the discovered (type-inferred) batch_id column is dropped — batch
-    # identity is only ever taken from directory names (store.py)
-    df = spark.read.option("basePath", store).parquet(
-        *[f"{store}/{name}" for name in sorted(dirs.values())]
-    )
-    if BATCH_COL in df.columns:
-        df = df.drop(BATCH_COL)
-    return df
-
-
 def read_join_view(spark: SparkSession, root: str) -> DataFrame | None:
     """The materialized view: union of every committed batch delta.
     Equals ``A_all ⋈ B_all`` after any prefix of updates (drill-pinned
     in `tests/test_join_view.py`). ``None`` -> no matches yet."""
-    view = _read_all(spark, side_path(root, "view"))
-    if view is not None and BUCKET_COL in view.columns:
-        view = view.drop(BUCKET_COL)
-    return view
+    view = read_store(spark, side_path(root, "view"))
+    return None if view is None else view.drop(BUCKET_COL)
 
 
 def read_join_view_delta(
@@ -408,16 +368,8 @@ def read_join_view_delta(
     maintains a continuous aggregate OVER the maintained join).
     ``None`` when the batch produced no matches. Unavailable for batches
     already folded by compaction — consume deltas before folding them."""
-    store = side_path(root, "view")
-    listed = _list_partitions(spark, store)
-    if listed is None:
-        return None
-    _, _, dirs = listed
-    batch_id = _valid_id(batch_id)
-    if batch_id not in dirs:
-        return None
-    df = spark.read.parquet(f"{store}/{dirs[batch_id]}")
-    return df.drop(*[c for c in (BATCH_COL, BUCKET_COL) if c in df.columns])
+    df = read_batch(spark, side_path(root, "view"), batch_id)
+    return None if df is None else df.drop(BUCKET_COL)
 
 
 def read_join_side(
@@ -428,10 +380,8 @@ def read_join_side(
     detail."""
     if side not in ("left", "right"):
         raise ValueError(f"side must be 'left' or 'right', got {side!r}")
-    df = _read_all(spark, side_path(root, side))
-    if df is not None and BUCKET_COL in df.columns:
-        df = df.drop(BUCKET_COL)
-    return df
+    df = read_store(spark, side_path(root, side))
+    return None if df is None else df.drop(BUCKET_COL)
 
 
 def compact_join_view(
@@ -636,9 +586,7 @@ def _forget_bucketed(
     ).distinct().localCheckpoint()
     removed: dict[str, int] = {}
     for bid in sorted(dirs):
-        part = spark.read.option("basePath", store).parquet(
-            f"{store}/{dirs[bid]}"
-        )
+        part = read_batch(spark, store, bid)
         matched = part.join(ids, id_col, "left_semi").localCheckpoint()
         hits = matched.count()
         if hits == 0:
@@ -661,8 +609,7 @@ def _forget_bucketed(
             )
             if affected & surviving:
                 (
-                    rewrite.drop(BATCH_COL)
-                    .withColumn(BATCH_COL, F.lit(_valid_id(bid)))
+                    rewrite.withColumn(BATCH_COL, F.lit(_valid_id(bid)))
                     .write.mode("overwrite")
                     .partitionBy(BATCH_COL, BUCKET_COL)
                     .option("partitionOverwriteMode", "dynamic")

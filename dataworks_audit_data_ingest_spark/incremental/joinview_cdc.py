@@ -55,9 +55,7 @@ tombstone alone never does.
 from __future__ import annotations
 
 import contextlib
-import functools
 import logging
-import operator
 from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -81,7 +79,8 @@ from .store import (
     _valid_id,
     commit_batch_partition,
     compact_store,
-    read_batch_dirs,
+    read_batch,
+    read_store,
 )
 
 OP_COL = "__cdc_op__"
@@ -90,13 +89,13 @@ _RANK_COL = "__cdc_rank__"
 
 logger = logging.getLogger(__name__)
 
-# `_stored_ops` reads every surviving batch directory as its own scan
+# An update reads every surviving side batch directory as its own scan
 # and resolves across all of them, so per-batch maintenance cost (file
 # listings, plan size, window input) grows LINEARLY in un-compacted
 # history — regular `compact_join_view_cdc` calls are an operational
 # requirement for long-running streams (the streaming rung's
 # `compact_every` automates it). Past this many live partitions the
-# module warns once per update rather than degrading silently.
+# module warns on every update, per store, rather than degrading silently.
 _COMPACTION_NAG_PARTITIONS = 64
 
 
@@ -120,23 +119,26 @@ _NULL_MSG = (
 )
 
 
-def _rank_of(bid: str) -> str:
-    # the compacted partition is the FOLDED PREFIX of the batch history,
-    # so it must sort before every live batch id; "" does, for any
-    # non-empty id (_valid_id rejects empty)
-    return "" if bid == COMPACTED_ID else bid
-
-
 def _validate_monotone(
     spark: SparkSession, root: str, batch_id: str
 ) -> None:
     """CDC resolution orders ops by batch id, so ids must arrive in
     lexicographic order; only the newest batch may repeat (replay)."""
     for side in ("left", "right", "view"):
-        listed = _list_partitions(spark, side_path(root, side))
+        store = side_path(root, side)
+        listed = _list_partitions(spark, store)
         if listed is None:
             continue
         _, _, dirs = listed
+        if len(dirs) > _COMPACTION_NAG_PARTITIONS:
+            logger.warning(
+                "CDC store %s holds %d live batch partitions — per-batch "
+                "maintenance cost grows linearly in un-compacted history; "
+                "run compact_join_view_cdc (or set the streaming rung's "
+                "compact_every)",
+                store,
+                len(dirs),
+            )
         newer = [b for b in dirs if b != COMPACTED_ID and b > batch_id]
         if newer:
             raise ValueError(
@@ -146,41 +148,8 @@ def _validate_monotone(
             )
 
 
-def _stored_ops(
-    spark: SparkSession, store: str, batch_id: str
-) -> list[DataFrame] | None:
-    """One side's op log before ``batch_id``: each surviving batch
-    directory read on its own, tagged with its resolution rank — the
-    TRUSTED directory name (the type-inferred partition column misorders
-    "10" vs 9 — store.py's identity lesson). Directories are read under
-    their footer schemas (`store.read_batch_dirs`), so this starts no
-    Spark job."""
-    listed = _list_partitions(spark, store)
-    if listed is None:
-        return None
-    _, _, dirs = listed
-    keep = {bid: name for bid, name in dirs.items() if bid != batch_id}
-    if not keep:
-        return None
-    if len(keep) > _COMPACTION_NAG_PARTITIONS:
-        logger.warning(
-            "CDC store %s holds %d live batch partitions — per-batch "
-            "maintenance cost grows linearly in un-compacted history; "
-            "run compact_join_view_cdc (or set the streaming rung's "
-            "compact_every)",
-            store,
-            len(keep),
-        )
-    return [
-        read_batch_dirs(spark, f"{store}/{keep[bid]}").withColumn(
-            _RANK_COL, F.lit(_rank_of(bid))
-        )
-        for bid in sorted(keep)
-    ]
-
-
 def _resolve_ops(
-    parts: list[DataFrame] | None,
+    ops: DataFrame | None,
     spec: JoinViewSpec,
     id_col: str,
     *,
@@ -188,40 +157,35 @@ def _resolve_ops(
     buckets: list[int] | None = None,
     key_type: DataType | None = None,
 ) -> DataFrame | None:
-    """Resolved CURRENT rows of one side from its :func:`_stored_ops`:
-    per ``(key, id)``, the latest op wins and a tombstone means absent.
+    """Resolved CURRENT rows of one side from its op log read with
+    ``rank_col=_RANK_COL`` (the batch id, ``""`` for the compacted
+    prefix): per ``(key, id)``, the latest op wins and a tombstone means
+    absent.
 
     With ``buckets`` (the batch's probe buckets, hashed from
-    ``key_type``) each directory of a bucketed store is pruned to them
-    at the file level. Directories whose columns differ fail at the
-    union, where a read under one shared schema would fill NULLs."""
-    if not parts:
+    ``key_type``) a bucketed store is pruned to them at the file
+    level."""
+    if ops is None:
         return None
-    pruned = []
-    for df in parts:
-        if buckets is not None and BUCKET_COL in df.columns:
-            # bucket pruning hashes the PROBE's key type; a feed whose
-            # key arrives widened (int store, bigint batch) would probe
-            # DIFFERENT buckets than the rows were committed under —
-            # unionByName widens silently, so the miss would be silent
-            # z-set corruption (stale versions surviving retraction)
-            stored_t = df.schema[spec.key].dataType
-            if key_type is not None and stored_t != key_type:
-                raise ValueError(
-                    f"key column {spec.key!r} arrives as "
-                    f"{key_type.simpleString()} but the store holds "
-                    f"{stored_t.simpleString()}; bucket hashes would "
-                    "diverge — cast the feed to the stored type"
-                )
-            df = df.filter(
-                f"{BUCKET_COL} IN ({', '.join(map(str, buckets))})"
-                if buckets
-                else "false"
+    if buckets is not None and BUCKET_COL in ops.columns:
+        # bucket pruning hashes the PROBE's key type; a feed whose key
+        # arrives widened (int store, bigint batch) would probe
+        # DIFFERENT buckets than the rows were committed under —
+        # unionByName widens silently, so the miss would be silent
+        # z-set corruption (stale versions surviving retraction)
+        stored_t = ops.schema[spec.key].dataType
+        if key_type is not None and stored_t != key_type:
+            raise ValueError(
+                f"key column {spec.key!r} arrives as "
+                f"{key_type.simpleString()} but the store holds "
+                f"{stored_t.simpleString()}; bucket hashes would "
+                "diverge — cast the feed to the stored type"
             )
-        pruned.append(df)
-    ops = pruned[0]
-    for p in pruned[1:]:
-        ops = ops.unionByName(p)
+        ops = ops.filter(
+            f"{BUCKET_COL} IN ({', '.join(map(str, buckets))})"
+            if buckets
+            else "false"
+        )
     cur = ops.selectExpr(
         "*",
         f"row_number() OVER (PARTITION BY {_q(spec.key)}, {_q(id_col)}"
@@ -583,10 +547,12 @@ def _guard_feeds(
 
 def _read_sides(
     spark: SparkSession, root: str, batch_id: str
-) -> dict[str, list[DataFrame] | None]:
-    """:func:`_stored_ops` of both sides."""
+) -> dict[str, DataFrame | None]:
+    """Both sides' op logs without this batch, ranked for resolution."""
     return {
-        side: _stored_ops(spark, side_path(root, side), batch_id)
+        side: read_store(
+            spark, side_path(root, side), exclude=(batch_id,), rank_col=_RANK_COL
+        )
         for side in _SIDES
     }
 
@@ -859,17 +825,9 @@ def _commit_side_ops(
     if dels is not None:
         template = ups
         if template is None:
-            listed = _list_partitions(spark, store)
-            if listed is not None and listed[2]:
-                any_dir = sorted(listed[2].values())[0]
-                template = read_batch_dirs(spark, f"{store}/{any_dir}")
-                template = template.drop(
-                    *[
-                        c
-                        for c in (BATCH_COL, BUCKET_COL, OP_COL)
-                        if c in template.columns
-                    ]
-                )
+            template = read_store(spark, store)
+            if template is not None:
+                template = template.drop(BUCKET_COL, OP_COL)
         # no store and no upserts: these ids were never inserted, so the
         # tombstones can never apply — recording nothing is replay-
         # identical and keeps the op schema anchored to real data
@@ -883,20 +841,10 @@ def _commit_side_ops(
         commit_side(ops, store, batch_id, spec, rows)
 
 
-def read_join_view_cdc(spark: SparkSession, root: str) -> DataFrame | None:
-    """The live view: net-positive z-set rows (merge-on-read). Equals
-    ``current_A ⋈ current_B`` after any prefix of CDC batches
-    (invariant-drilled). ``None`` -> nothing committed yet."""
-    store = side_path(root, "view")
-    listed = _list_partitions(spark, store)
-    if listed is None:
-        return None
-    _, _, dirs = listed
-    if not dirs:
-        return None
-    df = read_batch_dirs(spark, *[f"{store}/{n}" for n in sorted(dirs.values())])
-    if BATCH_COL in df.columns:
-        df = df.drop(BATCH_COL)
+def net_positive(df: DataFrame) -> DataFrame:
+    """The z-set rule written once: a row is live when its signed
+    ``__diff__`` copies sum above zero. Rows come back without the sign
+    column, once each."""
     content = [c for c in df.columns if c != DIFF_COL]
     return (
         df.groupBy(*content)
@@ -904,6 +852,14 @@ def read_join_view_cdc(spark: SparkSession, root: str) -> DataFrame | None:
         .filter(F.col("__net__") > 0)
         .drop("__net__")
     )
+
+
+def read_join_view_cdc(spark: SparkSession, root: str) -> DataFrame | None:
+    """The live view: net-positive z-set rows (merge-on-read). Equals
+    ``current_A ⋈ current_B`` after any prefix of CDC batches
+    (invariant-drilled). ``None`` -> nothing committed yet."""
+    view = read_store(spark, side_path(root, "view"))
+    return None if view is None else net_positive(view)
 
 
 def read_join_view_cdc_delta(
@@ -919,16 +875,7 @@ def read_join_view_cdc_delta(
     read instead. ``None`` when the batch produced no view change.
     Unavailable once folded by compaction — consume deltas before
     folding them."""
-    store = side_path(root, "view")
-    listed = _list_partitions(spark, store)
-    if listed is None:
-        return None
-    _, _, dirs = listed
-    batch_id = _valid_id(batch_id)
-    if batch_id not in dirs:
-        return None
-    df = read_batch_dirs(spark, f"{store}/{dirs[batch_id]}")
-    return df.drop(*[c for c in (BATCH_COL,) if c in df.columns])
+    return read_batch(spark, side_path(root, "view"), batch_id)
 
 
 def read_current_side(
@@ -939,10 +886,8 @@ def read_current_side(
     if side not in ("left", "right"):
         raise ValueError(f"side must be 'left' or 'right', got {side!r}")
     id_col = spec.left_id if side == "left" else spec.right_id
-    # a "/" can never appear in a partition directory name, so no batch
-    # is excluded: this reads the WHOLE resolved side
-    parts = _stored_ops(spark, side_path(root, side), "never/a/batch")
-    return _resolve_ops(parts, spec, id_col)
+    ops = read_store(spark, side_path(root, side), rank_col=_RANK_COL)
+    return _resolve_ops(ops, spec, id_col)
 
 
 def verify_cdc_side(
@@ -1013,16 +958,7 @@ def compact_join_view_cdc(
         )
 
     def _fold_view(df: DataFrame) -> DataFrame:
-        content = [
-            c for c in df.columns if c not in (DIFF_COL, _RANK_COL)
-        ]
-        return (
-            df.groupBy(*content)
-            .agg(F.sum(DIFF_COL).alias("__net__"))
-            .filter(F.col("__net__") > 0)
-            .drop("__net__")
-            .withColumn(DIFF_COL, F.lit(1))
-        )
+        return net_positive(df.drop(_RANK_COL)).withColumn(DIFF_COL, F.lit(1))
 
     def _fold_view_store() -> int:
         return compact_store(

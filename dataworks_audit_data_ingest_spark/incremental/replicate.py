@@ -37,12 +37,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .joinview import side_path
-from .joinview_cdc import DIFF_COL, read_join_view_cdc
+from .joinview_cdc import (
+    DIFF_COL,
+    net_positive,
+    read_join_view_cdc,
+    read_join_view_cdc_delta,
+)
 from .store import (
-    BATCH_COL,
     COMPACTED_ID,
     _list_partitions,
     commit_batch_partition,
+    read_store,
 )
 
 
@@ -59,20 +64,17 @@ def ship_view_deltas(
     :func:`repair_replica` (a replica that kept up is unaffected: its
     already-shipped partitions net to the same prefix the fold
     collapsed)."""
-    store = side_path(root, "view")
-    listed = _list_partitions(spark, store)
+    listed = _list_partitions(spark, side_path(root, "view"))
     if listed is None:
         return {"shipped": [], "audit_recommended": False}
     _, _, src_dirs = listed
     r_listed = _list_partitions(spark, replica)
     have = set(r_listed[2]) if r_listed is not None else set()
-    live = {b: d for b, d in src_dirs.items() if b != COMPACTED_ID}
-    missing = sorted(set(live) - have)
+    missing = sorted(set(src_dirs) - {COMPACTED_ID} - have)
     for bid in missing:
-        df = spark.read.parquet(f"{store}/{live[bid]}")
-        if BATCH_COL in df.columns:
-            df = df.drop(BATCH_COL)
-        commit_batch_partition(df, replica, bid)
+        commit_batch_partition(
+            read_join_view_cdc_delta(spark, root, bid), replica, bid
+        )
     return {
         "shipped": missing,
         "audit_recommended": COMPACTED_ID in src_dirs,
@@ -81,17 +83,8 @@ def ship_view_deltas(
 
 def read_replica(spark: SparkSession, replica: str) -> DataFrame | None:
     """The replica's net-positive rows — the view, as replicated."""
-    listed = _list_partitions(spark, replica)
-    if listed is None or not listed[2]:
-        return None
-    df = spark.read.parquet(replica)
-    content = [c for c in df.columns if c not in (DIFF_COL, BATCH_COL)]
-    return (
-        df.groupBy(*content)
-        .agg(F.sum(DIFF_COL).alias("__net__"))
-        .filter(F.col("__net__") > 0)
-        .drop("__net__")
-    )
+    df = read_store(spark, replica)
+    return None if df is None else net_positive(df)
 
 
 def repair_replica(

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .store import _list_partitions, commit_batch_partition, compact_store
+from .store import commit_batch_partition, compact_store, read_store
 
 # exact integer cents — the portable money idiom (queries/base.py): FLOOR
 # half-up at two decimals, summed as BIGINT, associative under any merge
@@ -99,8 +99,8 @@ def update_rollup_store(
     """Commit one batch's grain partials under ``batch_id=<id>``.
 
     Write-only: the store is not read (no growing input on the hot
-    path — the property `tools/cc_study.py` measures for the CC store
-    holds here by construction). Replay of the same batch_id rewrites
+    path — the property PERF.md measures for the CC store holds here by
+    construction). Replay of the same batch_id rewrites
     exactly its own partition with identical rows."""
     partials = rollup_partials(
         batch_df,
@@ -130,16 +130,10 @@ def read_rollup_grain(
     there is no maintained state: the store was never created, OR it was
     legitimately emptied (a GDPR forget that erased every row deletes the
     fully-erased partitions outright, leaving only the root _SUCCESS).
-    Callers treat ``None`` as an empty report. Partitions are read by
-    explicit directory path (the store-family device: no
-    inferred-partition-value coercion); a store holding FOREIGN content
-    still raises, from ``_list_partitions``."""
-    listed = _list_partitions(spark, store_path)
-    if listed is None or not listed[2]:
-        return None
-    return _merge_partials(
-        spark.read.parquet(*[f"{store_path}/{d}" for d in listed[2].values()])
-    )
+    Callers treat ``None`` as an empty report. A store holding FOREIGN
+    content still raises (`store.read_store`)."""
+    rows = read_store(spark, store_path)
+    return None if rows is None else _merge_partials(rows)
 
 
 def read_rollup(

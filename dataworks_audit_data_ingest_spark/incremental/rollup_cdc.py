@@ -43,18 +43,13 @@ extends the engine's IVM family beyond the reference.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.localrel import local_rows_df
 
-from .joinview_cdc import DIFF_COL, _rank_of
-from .store import (
-    BATCH_COL,
-    _list_partitions,
-    commit_batch_partition,
-    compact_store,
-)
+from .joinview_cdc import DIFF_COL
+from .store import commit_batch_partition, compact_store, read_store
 
 _KIND = "__kind__"
 _RANK = "__rcr_rank__"
@@ -90,17 +85,17 @@ def update_cdc_rollup(
         return {"add_rows": 0, "snap_rows": 0}
     cols = list(group_cols)
     # Three driver actions per batch: the touched-group collect, the
-    # counts aggregate and the commit write. The feed is one
+    # eager checkpoint of `out` and the commit write. The feed is one
     # committed parquet partition, so its checkpoint call starts no job:
     # under AQE `localCheckpoint(eager=False)` runs a plan's shuffle
     # stages at the call, a scan has none, and the first consumer
     # materializes it. The touched groups are COLLECTED (driver-sized by
     # the same bound as the broadcast below — the batch's retraction
     # groups, never history), which gives the recompute a LITERAL
-    # pushable predicate; the add/snap counts fold into one aggregate
-    # over `out`'s checkpoint, whose call runs `out`'s shuffle stages (the
-    # partials and the recompute) as jobs of their own. perfbench's
-    # `query_cdc --trace 1` counts 10 Spark jobs per batch in all.
+    # pushable predicate. `out`'s checkpoint runs its shuffle stages (the
+    # partials and the recompute) as jobs of their own and observes the
+    # add/snap counts in its final job, so the commit writes the
+    # checkpoint, sized by them, without a separate counts aggregate.
     feed = feed.localCheckpoint(eager=False)
     touched_rows = (
         feed.filter(F.col(DIFF_COL) < 0).select(*cols).distinct().collect()
@@ -158,39 +153,17 @@ def update_cdc_rollup(
         )
         out = out.unionByName(snaps)
 
-    out = out.localCheckpoint(eager=False)
-    row = out.agg(
-        F.coalesce(
-            F.sum((F.col(_KIND) == "add").cast("int")), F.lit(0)
-        ).alias("a"),
-        F.coalesce(
-            F.sum((F.col(_KIND) == "snap").cast("int")), F.lit(0)
-        ).alias("s"),
-    ).collect()[0]
-    counts = {"add_rows": int(row["a"]), "snap_rows": int(row["s"])}
+    obs = Observation()
+    out = out.observe(
+        obs,
+        F.count(F.when(F.col(_KIND) == "add", 1)).alias("a"),
+        F.count(F.when(F.col(_KIND) == "snap", 1)).alias("s"),
+    ).localCheckpoint(eager=True)
+    counts = {"add_rows": int(obs.get["a"]), "snap_rows": int(obs.get["s"])}
     commit_batch_partition(
         out, store, batch_id, counts["add_rows"] + counts["snap_rows"]
     )
     return counts
-
-
-def _ranked_rows(spark: SparkSession, store: str) -> DataFrame | None:
-    listed = _list_partitions(spark, store)
-    if listed is None:
-        return None
-    _, _, dirs = listed
-    if not dirs:
-        return None
-    parts = []
-    for bid in sorted(dirs):
-        df = spark.read.parquet(f"{store}/{dirs[bid]}")
-        if BATCH_COL in df.columns:
-            df = df.drop(BATCH_COL)
-        parts.append(df.withColumn(_RANK, F.lit(_rank_of(bid))))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def _resolve(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -227,7 +200,7 @@ def read_cdc_rollup(
     """The maintained report: one row per surviving group with exact
     count, sum, MIN and MAX — retractions included. ``None`` when
     nothing was ever committed."""
-    df = _ranked_rows(spark, store)
+    df = read_store(spark, store, rank_col=_RANK)
     if df is None:
         return None
     return _resolve(df, list(group_cols)).filter(F.col("n") > 0)

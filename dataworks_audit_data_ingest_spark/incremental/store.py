@@ -6,15 +6,21 @@ family — lexical bands (`text/incremental_dedup.py`), semantic signatures
 store partitioned by ``batch_id`` and share one replay discipline; this
 module is that discipline written once:
 
-- **Read** (:func:`read_store_excluding_batch`): ``None`` means first
-  batch (only PATH_NOT_FOUND — corrupt/permission/IO errors PROPAGATE; a
-  swallowed read error would silently skip cross-batch dedup and admit
-  duplicates). The current batch's own partition is EXCLUDED: on a
+- **Read** (:func:`read_store`, one batch :func:`read_batch`): the one
+  reader every store goes through. ``None`` means first batch (only
+  PATH_NOT_FOUND — corrupt/permission/IO errors PROPAGATE; a swallowed
+  read error would silently skip cross-batch dedup and admit
+  duplicates). It lists the store once, and batch identity is the
+  DIRECTORY name, never the type-inferred ``batch_id`` column (a "007"
+  directory reads back as the integer 7; mixed styles widen
+  unpredictably), so the ``exclude`` batches are pruned by path before
+  any reader state is built. An update excludes its own batch: on a
   replay (failure after the store write but before the downstream sink
   write) the store already holds this batch's rows, and reading them
   back would make every item self-match and silently drop the whole
-  batch. Reads select the surviving partition directories by path, so
-  the excluded partition is pruned before any reader state is built.
+  batch. Directories are read under their parquet footer schema, so a
+  read starts no Spark job; with ``rank_col`` each directory is tagged
+  with its batch id, the op stores' resolution order.
 - **Commit** (:func:`commit_batch_partition`): rows land under
   ``batch_id=<id>`` via dynamic partition overwrite, so a replayed batch
   rewrites exactly its own partition — idempotent, the same
@@ -43,6 +49,7 @@ the restart point first.
 
 from __future__ import annotations
 
+import functools
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,6 +58,7 @@ from pyspark.sql import functions as F
 from ..functions.localrel import local_rows_df
 
 BATCH_COL = "batch_id"
+COMPACTED_ID = "__compacted__"
 # the key-hash directory level under each batch of a bucketed join-view
 # side store (`incremental/joinview.py`); a bucketed fold keeps it
 BUCKET_COL = "__jv_bucket__"
@@ -147,39 +155,6 @@ def _list_for_rewrite(spark: SparkSession, store_path: str):
     return listed
 
 
-def read_store_excluding_batch(
-    spark: SparkSession, store_path: str, batch_id: str
-) -> DataFrame | None:
-    """The store minus the current batch's partition, or ``None`` on the
-    first batch — see the module docstring for why both halves of that
-    contract are load-bearing.
-
-    The read selects the surviving partition DIRECTORIES by path instead
-    of filtering an inferred ``batch_id`` column: partition-value
-    inference coerces per style (a "007" directory reads back as the
-    integer 7, which never compares equal to the string id "007"; mixed
-    styles widen unpredictably), so the directory name — unescaped — is
-    the only reliable identity for caller-chosen batch ids. Listing also
-    prunes the excluded partition before any reader state is built.
-
-    ``batch_id`` is coerced to ``str`` (directory names are strings, so
-    an int 7 passed by a caller must exclude the "7" partition, exactly
-    as the old column-comparison coercion did); empty ids are rejected —
-    Spark writes them as ``__HIVE_DEFAULT_PARTITION__``, which could
-    never match its directory-derived key on replay."""
-    batch_id = _valid_id(batch_id)
-    listed = _list_partitions(spark, store_path)
-    if listed is None:
-        return None
-    _, _, dirs = listed
-    keep = [name for bid, name in dirs.items() if bid != batch_id]
-    if not keep:
-        return None  # store holds only the current batch's own partition
-    return spark.read.parquet(
-        *[f"{store_path}/{name}" for name in sorted(keep)]
-    )
-
-
 # the key under which Spark's parquet writer stores the row schema as JSON
 # in every file footer; Spark's own schema inference reads it back
 _SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
@@ -228,18 +203,106 @@ def _dir_schema(spark: SparkSession, path: str):
     return None if found is None else StructType.fromJson(json.loads(found))
 
 
-def read_batch_dirs(spark: SparkSession, *paths: str) -> DataFrame:
-    """``spark.read.parquet(*paths)`` over batch directories without the
+def read_batch_dirs(
+    spark: SparkSession, store_path: str, *names: str
+) -> DataFrame:
+    """The store's batch directories ``names`` without the
     schema-inference job: the schema is the first directory's
     (:func:`_dir_schema`), as Spark's inference, which reads one footer,
-    would take it. Partition directories below (a join-view side's
-    bucket level) are still discovered. A caller that must notice a
-    directory whose columns differ reads each directory on its own and
-    unions them: the union fails, where one read under a shared schema
-    would fill the missing columns with NULLs."""
+    would take it. Read from the store's ``basePath``, so partition
+    directories below (a join-view side's bucket level) are discovered;
+    so is ``batch_id``, type-inferred and therefore dropped unread. A
+    caller that must notice a directory whose columns differ reads each
+    directory on its own and unions them: the union fails, where one
+    read under a shared schema would fill the missing columns with
+    NULLs."""
+    paths = [f"{store_path}/{name}" for name in names]
     schema = _dir_schema(spark, paths[0])
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(*paths)
+    return reader.option("basePath", store_path).parquet(*paths).drop(BATCH_COL)
+
+
+def _rank_of(bid: str) -> str:
+    # the compacted partition is the FOLDED PREFIX of the batch history,
+    # so it must sort before every live batch id; "" does, for any
+    # non-empty id (_valid_id rejects empty)
+    return "" if bid == COMPACTED_ID else bid
+
+
+def _excluded(exclude) -> set[str]:
+    if isinstance(exclude, str):
+        # a bare string would iterate character-by-character, silently
+        # NOT excluding the replayable batch — the hard-precondition
+        # violation this parameter exists to prevent
+        raise TypeError(
+            "exclude must be a sequence of batch ids, not a bare string; "
+            f"pass exclude=({exclude!r},)"
+        )
+    return {_valid_id(x) for x in exclude}
+
+
+def _read_dirs(
+    spark: SparkSession,
+    store_path: str,
+    dirs: dict[str, str],
+    rank_col: str | None = None,
+) -> DataFrame | None:
+    """The ``{batch id: directory name}`` directories of the store, read
+    as :func:`read_store` describes; ``None`` when ``dirs`` is empty."""
+    if not dirs:
+        return None
+    ids = sorted(dirs)
+    if rank_col is None:
+        return read_batch_dirs(spark, store_path, *[dirs[b] for b in ids])
+    return functools.reduce(
+        DataFrame.unionByName,
+        [
+            read_batch_dirs(spark, store_path, dirs[b]).withColumn(
+                rank_col, F.lit(_rank_of(b))
+            )
+            for b in ids
+        ],
+    )
+
+
+def read_store(
+    spark: SparkSession,
+    store_path: str,
+    *,
+    exclude=(),
+    rank_col: str | None = None,
+) -> DataFrame | None:
+    """The store's committed rows without the ``batch_id`` column, minus
+    the ``exclude`` batches; ``None`` when the store does not exist or no
+    batch directory is left (module docstring). The surviving
+    directories come from one :func:`_list_partitions` and are read by
+    :func:`read_batch_dirs`. With ``rank_col`` each directory is read on
+    its own and tagged with its batch id under that name (``""`` for
+    ``__compacted__``, the folded prefix of history), and the parts are
+    unioned by name, so directories whose columns differ fail here
+    instead of reading back NULLs."""
+    excluded = _excluded(exclude)
+    listed = _list_partitions(spark, store_path)
+    if listed is None:
+        return None
+    keep = {bid: name for bid, name in listed[2].items() if bid not in excluded}
+    return _read_dirs(spark, store_path, keep, rank_col)
+
+
+def read_batch(
+    spark: SparkSession, store_path: str, batch_id: str
+) -> DataFrame | None:
+    """One batch's committed rows (a change feed), read as
+    :func:`read_store` reads; ``None`` when the store or the batch is
+    absent — a batch already folded by compaction included."""
+    listed = _list_partitions(spark, store_path)
+    if listed is None:
+        return None
+    batch_id = _valid_id(batch_id)
+    dirs = listed[2]
+    if batch_id not in dirs:
+        return None
+    return _read_dirs(spark, store_path, {batch_id: dirs[batch_id]})
 
 
 _PAD = 12
@@ -334,11 +397,6 @@ def commit_batch_partition(
     )
 
 
-COMPACTED_ID = "__compacted__"
-
-# A batch id no foreachBatch invocation can produce (Spark batch ids are
-# integers): reading "excluding" it reads the WHOLE store.
-_READ_ALL_ID = "__reader__"
 
 
 def checkpoint_replayable_ids(
@@ -445,29 +503,15 @@ def compact_store(
     directories by path, so there is no value-vs-directory mismatch
     anywhere.
     """
-    if isinstance(exclude, str):
-        # a bare string would iterate character-by-character, silently
-        # NOT excluding the replayable batch — the hard-precondition
-        # violation this parameter exists to prevent
-        raise TypeError(
-            "exclude must be a sequence of batch ids, not a bare string; "
-            f"pass exclude=({exclude!r},)"
-        )
+    excluded = _excluded(exclude)
     listed = _list_for_rewrite(spark, store_path)
     if listed is None:
         return 0  # not-yet-created store == legitimate empty state
     fs, jvm, dirs = listed
-    excluded = {_valid_id(x) for x in exclude}
     foldable = sorted(set(dirs) - (excluded - {COMPACTED_ID}))
     if foldable in ([], [COMPACTED_ID]):
         return 0
-    if rank_col is None:
-        rows = (
-            spark.read.option("basePath", store_path)
-            .parquet(*[f"{store_path}/{dirs[bid]}" for bid in foldable])
-            .drop(BATCH_COL)
-        )
-    else:
+    if rank_col is not None:
         live_folds = [b for b in foldable if b != COMPACTED_ID]
         misordered = [
             x
@@ -481,15 +525,9 @@ def compact_store(
                 "op history (compacted ranks first) — exclude only the "
                 "newest batches"
             )
-        parts = [
-            spark.read.parquet(f"{store_path}/{dirs[bid]}").withColumn(
-                rank_col, F.lit("" if bid == COMPACTED_ID else bid)
-            )
-            for bid in foldable
-        ]
-        rows = parts[0]
-        for p in parts[1:]:
-            rows = rows.unionByName(p)
+    rows = _read_dirs(
+        spark, store_path, {bid: dirs[bid] for bid in foldable}, rank_col
+    )
     folded = rows.distinct() if fold is None else fold(rows)
     tok = uuid.uuid4().hex[:12]
     staged = f"{store_path}/{_FOLD_TMP}{tok}"

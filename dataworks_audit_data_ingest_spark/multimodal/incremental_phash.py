@@ -82,9 +82,9 @@ def incremental_phash_batch(
     ``{store_path}/batch_id={batch_id}``."""
     new_bands = band_media(batch, text_col=text_col).localCheckpoint()
 
-    from ..incremental.store import read_store_excluding_batch
+    from ..incremental.store import read_store
 
-    store = read_store_excluding_batch(spark, store_path, batch_id)
+    store = read_store(spark, store_path, exclude=(batch_id,))
     have_store = store is not None
 
     a = new_bands.select(

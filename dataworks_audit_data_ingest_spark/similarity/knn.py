@@ -14,7 +14,7 @@ query vector. Methods:
   (no shuffle to index; new corpus vectors index on write), so the only
   shuffle is the (band, bval) candidate join. Use when no centroid training
   pass is possible; recall/candidate trade-off per banding is measured in
-  PERF.md (`tools/srp_study.py`).
+  PERF.md ("SRP-LSH ANN parameters").
 
 Cosines run as JVM ZIP_WITH/AGGREGATE expressions with decimal-exact sums
 (deterministic under any partitioning); no Python in the scoring path.

@@ -53,7 +53,7 @@ def zorder_write(
     the pruning lever for point lookups on HIGH-CARDINALITY ids that the
     Z-order does NOT cluster (an event_id or content hash stays scattered
     across every file, so min/max and page indexes cannot skip anything;
-    `tools/bloom_study.py` measures 1.4×/1.9× present/absent probe wins
+    PERF.md records 1.4×/1.9× present/absent probe wins
     at production row-group sizes for +1.8 % disk). ``bloom_ndv`` sizes
     the filters (expected distinct values PER FILE); when omitted it is
     estimated as ``count/n_files`` from the SAME single aggregation

@@ -47,10 +47,10 @@ from ..incremental.joinview_cdc import (
     update_join_view_cdc,
 )
 from ..incremental.store import (
-    _list_partitions,
     commit_batch_partition,
     compact_store,
     pad_batch_id,
+    read_store,
 )
 from .jobs import run_foreach_batch
 from .joinview_cdc_job import _resolve_by_seq, split_cdc_ops
@@ -89,13 +89,12 @@ def read_additive_rollup(
     signs, drop groups whose every pair was retracted (net zero rows in
     the final state must not appear). Columns: ``group_cols + (n,
     total)``; ``None`` when no partial is committed (nothing yet, or a
-    fold of a fully retracted store). Reads the batch directories the
-    store listing returns, never the store root, so a fold a crash left
-    beside its originals is finished first instead of counted twice."""
-    listed = _list_partitions(spark, store)
-    if listed is None or not listed[2]:
+    fold of a fully retracted store). Reads through `store.read_store`,
+    never the store root, so a fold a crash left beside its originals is
+    finished first instead of counted twice."""
+    df = read_store(spark, store)
+    if df is None:
         return None
-    df = spark.read.parquet(*[f"{store}/{d}" for d in listed[2].values()])
     return (
         df.groupBy(*group_cols)
         .agg(

@@ -42,9 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..incremental.store import (
-    _READ_ALL_ID,
     commit_batch_partition,
-    read_store_excluding_batch,
+    read_store,
 )
 from ..similarity.kmeans import assign_cells
 from ..similarity.quantize import quantize_int8
@@ -159,7 +158,7 @@ def should_retrain(
     False (not enough evidence to trigger a retrain).  Rows are
     dedup'd on (src_batch, ...) identity first, so the compaction crash
     window cannot double-weight a batch (module docstring)."""
-    rows = read_store_excluding_batch(spark, quality_dir, _READ_ALL_ID)
+    rows = read_store(spark, quality_dir)
     if rows is None:
         raise ValueError(
             f"{quality_dir}: no quality records — the index stream was "

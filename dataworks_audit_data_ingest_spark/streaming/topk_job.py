@@ -42,9 +42,8 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import spark_hash32, universal_hash
 from ..incremental.store import (
-    _READ_ALL_ID,
     commit_batch_partition,
-    read_store_excluding_batch,
+    read_store,
 )
 from .jobs import run_foreach_batch
 
@@ -130,7 +129,7 @@ def merged_sketch(spark: SparkSession, out_dir: str) -> DataFrame | None:
     batch.  ``distinct()`` first: compaction-crash duplicates collapse
     on (src_batch, cell) row identity before the additive sum (module
     docstring)."""
-    rows = read_store_excluding_batch(spark, f"{out_dir}/sketch", _READ_ALL_ID)
+    rows = read_store(spark, f"{out_dir}/sketch")
     if rows is None:
         return None
     return (
@@ -148,9 +147,7 @@ def read_topk(spark: SparkSession, out_dir: str, k: int) -> DataFrame | None:
     ``seen_count`` — the sum of the key's own stored batch counts — is an
     exact lower bound: est_count >= true >= seen_count.  ``None`` before
     any batch."""
-    cand_rows = read_store_excluding_batch(
-        spark, f"{out_dir}/candidates", _READ_ALL_ID
-    )
+    cand_rows = read_store(spark, f"{out_dir}/candidates")
     sketch = merged_sketch(spark, out_dir)
     if cand_rows is None or sketch is None:
         return None

@@ -177,7 +177,7 @@ def incremental_cdc_batch(
     """
     from ..incremental.store import (
         commit_batch_partition,
-        read_store_excluding_batch,
+        read_store,
     )
 
     chunks = chunk_documents_cdc(batch, id_col, text_col, win, div)
@@ -191,7 +191,7 @@ def incremental_cdc_batch(
         .drop("_rk")
     )
 
-    store = read_store_excluding_batch(spark, store_path, batch_id)
+    store = read_store(spark, store_path, exclude=(batch_id,))
     if store is not None:
         novel = firsts.join(
             store.select("chunk_hash"), "chunk_hash", "left_anti"

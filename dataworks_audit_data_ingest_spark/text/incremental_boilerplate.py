@@ -38,10 +38,9 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import spark_hash32
 from ..incremental.store import (
-    _READ_ALL_ID,
     BATCH_COL,
     commit_batch_partition,
-    read_store_excluding_batch,
+    read_store,
 )
 
 _LINE_SEED = "bpline"
@@ -73,13 +72,15 @@ def line_df_batch(
 
 
 def read_line_df(
-    spark: SparkSession, store_path: str, exclude_batch: str = _READ_ALL_ID
+    spark: SparkSession, store_path: str, exclude_batch: str | None = None
 ) -> DataFrame | None:
     """Merged (line_hash, df) over every committed batch except
     ``exclude_batch``; ``None`` if nothing is committed yet. The
     ``distinct()`` on (src_batch, line_hash, df) row identity makes the
     read exact across the compaction crash window."""
-    store = read_store_excluding_batch(spark, store_path, exclude_batch)
+    store = read_store(
+        spark, store_path, exclude=() if exclude_batch is None else (exclude_batch,)
+    )
     if store is None:
         return None
     return (

@@ -55,9 +55,9 @@ def incremental_dedup_batch(
     """
     new_bands = band_documents(batch).localCheckpoint()
 
-    from ..incremental.store import read_store_excluding_batch
+    from ..incremental.store import read_store
 
-    store = read_store_excluding_batch(spark, store_path, batch_id)
+    store = read_store(spark, store_path, exclude=(batch_id,))
     have_store = store is not None
 
     # within-batch pairs (doc_a < doc_b: keep the earlier, drop the later)

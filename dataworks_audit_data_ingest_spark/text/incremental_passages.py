@@ -67,7 +67,7 @@ def incremental_passage_batch(
     """
     from ..incremental.store import (
         commit_batch_partition,
-        read_store_excluding_batch,
+        read_store,
     )
 
     passages = hash_passages(
@@ -86,7 +86,7 @@ def incremental_passage_batch(
         .filter(F.col("_rk") == 1)
         .drop("_rk")
     )
-    store = read_store_excluding_batch(spark, store_path, batch_id)
+    store = read_store(spark, store_path, exclude=(batch_id,))
     if store is not None:
         novel = firsts.join(
             store.select("passage_hash").distinct(), "passage_hash", "left_anti"

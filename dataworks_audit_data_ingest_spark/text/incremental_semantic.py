@@ -125,9 +125,9 @@ def incremental_semantic_batch(
         "_v",
     ).select("doc_id", "_v", F.col("_nrm").alias("_n"))
 
-    from ..incremental.store import read_store_excluding_batch
+    from ..incremental.store import read_store
 
-    store = read_store_excluding_batch(spark, store_path, batch_id)
+    store = read_store(spark, store_path, exclude=(batch_id,))
     have_store = store is not None
 
     # -- candidates, level 1: exact full-signature agreement --

@@ -6,7 +6,8 @@ end-to-end pass — update (one guard job, side reads beside it, commits
 on two threads) → signed-feed rollup fold (collapsed driver actions) →
 3-store compaction (thread-pooled folds) → read-back — in the DEFAULT
 pytest gate, plus the feed guards' messages and their order, the
-side-store schema check and the Spark job count of one batch.
+side-store schema check, the Spark job count of one batch, and the job
+counts of a compaction and of a rollup read's plan.
 """
 
 from __future__ import annotations
@@ -26,6 +27,9 @@ from dataworks_audit_data_ingest_spark.incremental.joinview_cdc import (
 from dataworks_audit_data_ingest_spark.incremental.rollup_cdc import (
     read_cdc_rollup,
     update_cdc_rollup,
+)
+from dataworks_audit_data_ingest_spark.incremental.store import (
+    commit_batch_partition,
 )
 
 SPEC = JoinViewSpec(key="k", left_id="lid", right_id="k", n_buckets=4)
@@ -284,3 +288,54 @@ def test_side_directories_with_different_columns_fail_loudly(spark, tmp_path):
         update_join_view_cdc(
             spark, root, "b2", SPEC, left_upserts=_left(spark, [3])
         )
+
+
+def test_compaction_jobs_do_not_grow_with_folded_batches(spark, tmp_path):
+    """The rank folds read every directory under its footer schema: a
+    3-store compaction over 4 batches runs at most 9 Spark jobs, and no
+    more over ``__compacted__`` plus 8 batches."""
+    root = str(tmp_path / "view")
+    update_join_view_cdc(
+        spark, root, "b00", SPEC,
+        left_upserts=_left(spark, [0]), right_upserts=_right(spark, [0, 1, 2]),
+    )
+
+    def add_batches(first, n):
+        for i in range(first, first + n):
+            update_join_view_cdc(
+                spark, root, f"b{i:02d}", SPEC, left_upserts=_left(spark, [i])
+            )
+
+    add_batches(1, 3)
+    folded, _, four = _jobs_run_by(
+        spark, lambda: compact_join_view_cdc(spark, root, SPEC)
+    )
+    assert folded == {"left": 4, "right": 1, "view": 4}
+    assert len(four) <= 9, len(four)
+
+    add_batches(4, 8)
+    folded, _, eight = _jobs_run_by(
+        spark, lambda: compact_join_view_cdc(spark, root, SPEC)
+    )
+    assert folded == {"left": 8, "right": 0, "view": 8}
+    assert len(eight) <= len(four), (len(eight), len(four))
+    assert read_join_view_cdc(spark, root).count() == 12
+
+
+def test_building_a_rollup_read_plan_runs_no_spark_job(spark, tmp_path):
+    store = str(tmp_path / "rollup")
+    for i in range(4):
+        commit_batch_partition(
+            spark.createDataFrame(
+                [(f"seg{i}", 1, i, i, i, "add")],
+                "seg string, n bigint, total bigint, vmin bigint, vmax bigint,"
+                " __kind__ string",
+            ),
+            store,
+            f"b{i}",
+        )
+    plan, _, jobs = _jobs_run_by(
+        spark, lambda: read_cdc_rollup(spark, store, ("seg",))
+    )
+    assert jobs == []
+    assert sorted(r["seg"] for r in plan.collect()) == [f"seg{i}" for i in range(4)]

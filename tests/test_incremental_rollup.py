@@ -234,8 +234,6 @@ def test_forget_composes_with_compaction(spark, tmp_path):
 def test_update_path_is_write_only(spark, tmp_path, monkeypatch):
     """The hot path must not read the store: poison the store listing
     (and with it the fold recovery that rides on it) and update anyway."""
-    import dataworks_audit_data_ingest_spark.incremental.rollup as R
-
     store = str(tmp_path / "rollup")
 
     def boom(*a, **k):  # pragma: no cover - called == failure
@@ -243,7 +241,6 @@ def test_update_path_is_write_only(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(S, "_list_status", boom)
     monkeypatch.setattr(S, "_list_partitions", boom)
-    monkeypatch.setattr(R, "_list_partitions", boom)
     b = _batches(spark, n=2)[0]
     update_rollup_store(spark, store, b, "0")
     monkeypatch.undo()
